@@ -10,6 +10,12 @@ remainder. Replaying a partition is therefore idempotent — its urls are
 already present and anti-joined away. With an Iceberg catalog the appends are
 ACID; on plain parquet (this sandbox) the same layout applies with
 last-writer-wins semantics per run_id.
+
+Layout: url_bucket is a sorted column, not a directory. Each run appends one
+parquet file per map task, rows sorted by (url_bucket, url), so a run writes
+as many files as it has tasks whatever the bucket fan-out. Replaying or
+compacting one bucket is a ``url_bucket = k`` filter the parquet reader
+pushes down to row-group statistics.
 """
 
 from __future__ import annotations
@@ -23,11 +29,13 @@ from tesseract_wasm_spark.pipeline import extract_any, metrics_df, ocr_pages
 
 
 #: url-hash bucket fan-out for the results table layout. Every result row
-#: carries url_bucket = pmod(xxhash64(url), URL_BUCKETS) and plain-parquet
-#: writes partition by it, so at 10^12 rows (a) the resume anti-join keys on
-#: (url_bucket, url) — with an Iceberg bucket-partitioned table the join
-#: becomes a storage-partitioned join and the completed side is never
-#: shuffled; (b) any single bucket is independently replayable/compactable.
+#: carries url_bucket = pmod(xxhash64(url), URL_BUCKETS) as a column that
+#: plain-parquet writes sort each file by, so at 10^12 rows (a) the resume
+#: anti-join keys on (url_bucket, url) — with an Iceberg bucket-partitioned
+#: table the join becomes a storage-partitioned join and the completed side is
+#: never shuffled; (b) any single bucket is independently replayable/
+#: compactable through a pushed-down ``url_bucket = k`` filter that row-group
+#: min/max statistics prune.
 URL_BUCKETS = 256
 
 
@@ -39,13 +47,14 @@ def iceberg_results_ddl(table: str, df: DataFrame, *,
                         bucket_on: str = "url") -> str:
     """The CREATE TABLE statement an Iceberg deployment runs ONCE before the
     first append — the partition-spec twin of the parquet layout: parquet
-    partitions by the materialized ``url_bucket`` column (pmod(xxhash64)),
-    Iceberg declares ``bucket(URL_BUCKETS, url)`` natively so the catalog
-    owns the transform (Iceberg buckets with murmur3 rather than xxhash64 —
-    the VALUES differ but the contract is the same: a fixed URL_BUCKETS-way
-    url-hash fan-out, storage-partitioned resume joins, per-bucket replay/
-    compaction). The ``url_bucket`` column itself is parquet-layout-only and
-    excluded from the Iceberg schema."""
+    sorts each file by the materialized ``url_bucket`` column
+    (pmod(xxhash64)) and replays a bucket through a ``url_bucket = k``
+    filter, Iceberg declares ``bucket(URL_BUCKETS, url)`` natively so the
+    catalog owns the transform (Iceberg buckets with murmur3 rather than
+    xxhash64 — the VALUES differ but the contract is the same: a fixed
+    URL_BUCKETS-way url-hash fan-out, storage-partitioned resume joins,
+    per-bucket replay/compaction). The ``url_bucket`` column itself is
+    parquet-layout-only and excluded from the Iceberg schema."""
     cols = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in df.schema.fields if f.name != "url_bucket"
@@ -67,14 +76,15 @@ def ensure_iceberg_table(spark: SparkSession, table: str, df: DataFrame, *,
 
 
 def write_table(df: DataFrame, path: str, *, fmt: str | None = None,
-                partition_by: tuple[str, ...] = ()) -> None:
+                cluster_by: tuple[str, ...] = ()) -> None:
     """Iceberg-compatible writer abstraction (SURVEY.md §7): appends go to an
     Iceberg table when a catalog is configured (ACID appends — the real
     100 TB deployment), else to plain parquet with the same layout. ``fmt``
-    overrides autodetection ("iceberg" | "parquet"). ``partition_by`` maps to
-    hive-style directory partitioning on parquet; an Iceberg deployment
-    declares the same columns in its partition spec at table creation, so
-    the append itself needs no per-write clause."""
+    overrides autodetection ("iceberg" | "parquet"). ``cluster_by`` sorts
+    the rows within each parquet file by those columns (one file per task,
+    no directories); an Iceberg deployment declares the bucket in its
+    partition spec at table creation, so the append drops the materialized
+    ``url_bucket`` column and needs no per-write clause."""
     spark = df.sparkSession
     if fmt is None:
         has_iceberg = any(
@@ -83,17 +93,16 @@ def write_table(df: DataFrame, path: str, *, fmt: str | None = None,
         )
         fmt = "iceberg" if has_iceberg else "parquet"
     if fmt == "iceberg":
-        if "url_bucket" in partition_by and "url_bucket" in df.columns:
+        if "url_bucket" in cluster_by and "url_bucket" in df.columns:
             # the Iceberg spec (bucket(URL_BUCKETS, url), see
             # iceberg_results_ddl) owns the fan-out; the materialized column
-            # exists only for the parquet directory layout
+            # exists only for the parquet layout
             df = df.drop("url_bucket")
         df.writeTo(path).append()
     else:
-        w = df.write.mode("append")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(path)
+        if cluster_by:
+            df = df.sortWithinPartitions(*cluster_by)
+        df.write.mode("append").parquet(path)
 
 
 def completed_urls(spark: SparkSession, results_path: str, mode: str = "full") -> DataFrame | None:
@@ -104,7 +113,12 @@ def completed_urls(spark: SparkSession, results_path: str, mode: str = "full") -
     failure (permissions blip, corrupt footer, eventual consistency) is
     re-raised — silently treating it as first-run would disable resume and
     re-append duplicates for the whole input, which at 10^12 rows is a very
-    expensive way to learn the directory was briefly unlistable."""
+    expensive way to learn the directory was briefly unlistable.
+
+    A table in the old hive layout (``url_bucket=K/`` directories) is
+    refused with ValueError before the run writes anything: flat files
+    appended beside those directories would make every later read fail with
+    Spark's "conflicting directory structures"."""
     try:
         df = spark.read.parquet(results_path)
     except AnalysisException as exc:
@@ -112,6 +126,12 @@ def completed_urls(spark: SparkSession, results_path: str, mode: str = "full") -
         if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
             return None  # first run: nothing written yet
         raise
+    if any(f.rsplit("/", 2)[-2].startswith("url_bucket=") for f in df.inputFiles()):
+        raise ValueError(
+            f"{results_path} uses the old url_bucket=K/ directory layout; "
+            "rewrite it once into the flat layout with "
+            "spark.read.parquet(old).write.parquet(new) and resume into new"
+        )
     if "mode" in df.columns:
         df = df.filter(F.col("mode") == mode)
     cols = ["url_bucket", "url"] if "url_bucket" in df.columns else ["url"]
@@ -138,15 +158,15 @@ def run_with_resume(
     mode = "full" if with_text else "layout"
 
     done = completed_urls(spark, results_path, mode)
-    # a pre-bucketing results table keeps its legacy flat layout: appending
-    # partitioned files into an unpartitioned directory corrupts the table
+    # a pre-bucketing results table keeps its legacy layout without the
+    # url_bucket column: files with and without it in one directory would
+    # give the table two schemas
     legacy = done is not None and "url_bucket" not in done.columns
     if done is None:
         todo = pages
     elif not legacy:
-        # anti-join on (url_bucket, url): with a bucket-partitioned results
-        # table both sides arrive bucket-aligned (storage-partitioned join on
-        # Iceberg; partition-pruned scan on parquet)
+        # anti-join on (url_bucket, url): with a bucket-partitioned Iceberg
+        # table both sides arrive bucket-aligned (storage-partitioned join)
         todo = (
             pages.withColumn("url_bucket", url_bucket_col())
             .join(done, ["url_bucket", "url"], "left_anti")
@@ -158,7 +178,7 @@ def run_with_resume(
     res = ocr_pages(todo, with_text=with_text, recognizer=recognizer,
                     model_blob=model_blob,
                     num_partitions=num_partitions).persist()
-    n = res.count()
+    n, errors = res.agg(F.count("*"), F.count("error")).first()
     if n == 0:
         res.unpersist()
         return {"run_id": run_id, "pages": 0, "resumed": done is not None}
@@ -168,9 +188,8 @@ def run_with_resume(
         write_table(out, results_path)
     else:
         write_table(out.withColumn("url_bucket", url_bucket_col()),
-                    results_path, partition_by=("url_bucket",))
+                    results_path, cluster_by=("url_bucket", "url"))
     write_table(metrics_df(res).withColumn("run_id", F.lit(run_id)), metrics_path)
-    errors = res.filter(F.col("error").isNotNull()).count()
     res.unpersist()
     return {"run_id": run_id, "pages": n, "errors": errors, "resumed": done is not None}
 
@@ -209,18 +228,19 @@ def run_extract_with_resume(
     res = extract_any(todo, recognizer=recognizer,
                       num_partitions=num_partitions,
                       model_blob=model_blob).persist()
-    n = res.count()
+    per_kind = res.groupBy("kind").agg(F.count("*"), F.count("error")).collect()
+    kinds = {kind: rows for kind, rows, _ in per_kind}
+    n = sum(kinds.values())
     if n == 0:
         res.unpersist()
         return {"run_id": run_id, "pages": 0, "resumed": done is not None}
+    errors = sum(errs for _, _, errs in per_kind)
     out = res.withColumn("run_id", F.lit(run_id)).withColumn("mode", F.lit("extract"))
     if legacy:
         write_table(out, path)
     else:
         write_table(out.withColumn("url_bucket", url_bucket_col()),
-                    path, partition_by=("url_bucket",))
-    kinds = {r["kind"]: r["n"] for r in res.groupBy("kind").agg(F.count("*").alias("n")).collect()}
-    errors = res.filter(F.col("error").isNotNull()).count()
+                    path, cluster_by=("url_bucket", "url"))
     res.unpersist()
     return {"run_id": run_id, "pages": n, "errors": errors, "kinds": kinds,
             "resumed": done is not None}

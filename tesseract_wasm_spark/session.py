@@ -75,31 +75,34 @@ def ship_package(spark: SparkSession) -> None:
     regardless of the driver's cwd: zip the package and addPyFile it (the
     programmatic form of ``spark-submit --py-files``). The zip name is
     content-addressed (sha256 of the sources) so a stale cached zip can
-    never shadow newer code on reused workers. Idempotent; on a real
-    cluster where --py-files already shipped the package this is a no-op
+    never shadow newer code on reused workers. Idempotent: a zip of that
+    name already added to this context is not added again (Spark refuses a
+    second same-named file with other bytes). Any other failure raises
+    here, not later inside tasks as ``ModuleNotFoundError``. On a real
+    cluster where --py-files already shipped the package this is a
     duplicate upload of a few hundred KB."""
-    try:
-        import hashlib  # noqa: PLC0415
-        import zipfile  # noqa: PLC0415
+    import hashlib  # noqa: PLC0415
+    import zipfile  # noqa: PLC0415
 
-        pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        pkg = os.path.join(pkg_root, "tesseract_wasm_spark")
-        sources = []
-        for root, _dirs, files in os.walk(pkg):
-            for name in sorted(files):
-                if name.endswith(".py"):
-                    sources.append(os.path.join(root, name))
-        digest = hashlib.sha256()
-        for full in sorted(sources):
-            digest.update(full.encode())
-            with open(full, "rb") as fh:
-                digest.update(fh.read())
-        zip_path = f"/tmp/twspark_pyfiles_{digest.hexdigest()[:16]}.zip"
-        if not os.path.exists(zip_path):
-            with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-                for full in sorted(sources):
-                    zf.write(full, os.path.relpath(full, pkg_root))
-        spark.sparkContext.addPyFile(zip_path)
-    except Exception:
-        pass  # already added, or a restricted context — imports may still
-        # resolve via PYTHONPATH/cwd
+    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(pkg_root, "tesseract_wasm_spark")
+    sources = []
+    for root, _dirs, files in os.walk(pkg):
+        for name in sorted(files):
+            if name.endswith(".py"):
+                sources.append(os.path.join(root, name))
+    digest = hashlib.sha256()
+    for full in sorted(sources):
+        digest.update(full.encode())
+        with open(full, "rb") as fh:
+            digest.update(fh.read())
+    zip_name = f"twspark_pyfiles_{digest.hexdigest()[:16]}.zip"
+    sc = spark.sparkContext
+    if any(f.rsplit("/", 1)[-1] == zip_name for f in sc.listFiles):
+        return  # already shipped to this context
+    zip_path = f"/tmp/{zip_name}"
+    if not os.path.exists(zip_path):
+        with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
+            for full in sorted(sources):
+                zf.write(full, os.path.relpath(full, pkg_root))
+    sc.addPyFile(zip_path)

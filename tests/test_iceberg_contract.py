@@ -115,12 +115,12 @@ def test_write_table_iceberg_drops_layout_bucket_column(spark):
     calls: list = []
     df = _FakePartitionedDF(spark, calls, ["url", "text_out", "url_bucket"])
     scale.write_table(df, "crawl.db.results", fmt="iceberg",
-                      partition_by=("url_bucket",))
+                      cluster_by=("url_bucket",))
     assert calls == [("drop", ("url_bucket",)),
                      ("writeTo", "crawl.db.results"), "append"]
     # a frame without the layout column appends untouched
     calls2: list = []
     df2 = _FakePartitionedDF(spark, calls2, ["url", "text_out"])
     scale.write_table(df2, "crawl.db.results", fmt="iceberg",
-                      partition_by=("url_bucket",))
+                      cluster_by=("url_bucket",))
     assert calls2 == [("writeTo", "crawl.db.results"), "append"]

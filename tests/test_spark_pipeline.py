@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from tesseract_wasm_spark import outputs as O
 from tesseract_wasm_spark.fixtures import fixtures_df
 from tesseract_wasm_spark.pipeline import metrics_df, ocr_pages
-from tesseract_wasm_spark.scale import run_with_resume
+from tesseract_wasm_spark.scale import run_extract_with_resume, run_with_resume
 from tesseract_wasm_spark.font import export_model
 
 
@@ -237,18 +237,76 @@ def test_resume_is_mode_scoped(spark, pages, tmp_path):
     assert set(r["mode"] for r in res.select("mode").distinct().collect()) == {"layout", "full"}
 
 
-def test_results_bucket_layout(spark, pages, tmp_path):
-    """Results land hive-partitioned by url_bucket = pmod(xxhash64(url), 256)
-    so the 10^12-row resume anti-join keys on (url_bucket, url) — the layout
-    an Iceberg bucket partition spec turns into a storage-partitioned join."""
+def _assert_flat_bucket_layout(spark, table: str, n_tasks: int) -> None:
+    """The results layout contract: no url_bucket=K/ directories, every row
+    carries url_bucket = pmod(xxhash64(url), 256), rows sorted by
+    (url_bucket, url) within each parquet file, one file per map task."""
     import os
 
+    import pyarrow.parquet as pq
+
+    from tesseract_wasm_spark.scale import url_bucket_col
+
+    files = []
+    for root, dirs, names in os.walk(table):
+        assert not [d for d in dirs if d.startswith("url_bucket=")]
+        files += [os.path.join(root, n) for n in names if n.endswith(".parquet")]
+    assert 1 <= len(files) <= n_tasks
+    res = spark.read.parquet(table)
+    assert res.filter(~F.col("url_bucket").eqNullSafe(url_bucket_col())).count() == 0
+    buckets = set()
+    for f in files:
+        t = pq.read_table(f, columns=["url_bucket", "url"]).to_pydict()
+        keys = list(zip(t["url_bucket"], t["url"]))
+        assert keys == sorted(keys), f
+        buckets |= set(t["url_bucket"])
+    assert len(buckets) >= 2  # the urls spread over >= 2 of 256 buckets
+
+
+def test_results_bucket_layout(spark, pages, tmp_path):
+    """Results carry url_bucket = pmod(xxhash64(url), 256) as a column sorted
+    within each file, so the 10^12-row resume anti-join keys on
+    (url_bucket, url) — the layout an Iceberg bucket partition spec turns
+    into a storage-partitioned join — and a run writes one file per task."""
     out = str(tmp_path / "bl")
-    run_with_resume(spark, pages.limit(6), out)
-    subdirs = [d for d in os.listdir(f"{out}/results") if d.startswith("url_bucket=")]
-    assert len(subdirs) >= 2  # 6 urls spread over >= 2 of 256 buckets
-    s2 = run_with_resume(spark, pages.limit(6), out)
+    s1 = run_with_resume(spark, pages, out, num_partitions=2)
+    assert s1["pages"] == pages.count()
+    _assert_flat_bucket_layout(spark, f"{out}/results", 2)
+    s2 = run_with_resume(spark, pages, out, num_partitions=2)
     assert s2["pages"] == 0 and s2["resumed"] is True
+
+
+def test_extract_results_bucket_layout(spark, pages, tmp_path):
+    """The mixed-payload job writes the same flat, bucket-sorted layout."""
+    out = str(tmp_path / "ebl")
+    s1 = run_extract_with_resume(spark, pages, out, num_partitions=2)
+    assert s1["pages"] == pages.count()
+    _assert_flat_bucket_layout(spark, f"{out}/extracted", 2)
+    s2 = run_extract_with_resume(spark, pages, out, num_partitions=2)
+    assert s2["pages"] == 0 and s2["resumed"] is True
+
+
+@pytest.mark.parametrize("run,table", [(run_with_resume, "results"),
+                                       (run_extract_with_resume, "extracted")],
+                         ids=["ocr", "extract"])
+def test_resume_refuses_hive_layout(spark, pages, tmp_path, run, table):
+    """A results table in the old url_bucket=K/ directory layout stops the
+    run before anything is written: flat files appended beside those
+    directories would break every later read of the table."""
+    import os
+    import re
+
+    out = str(tmp_path / "hive")
+    (spark.createDataFrame([("u", "full", 7)], "url string, mode string, url_bucket int")
+        .write.partitionBy("url_bucket").parquet(f"{out}/{table}"))
+
+    def listing():
+        return sorted(os.path.join(r, n) for r, _d, names in os.walk(out) for n in names)
+
+    before = listing()
+    with pytest.raises(ValueError, match=re.escape("spark.read.parquet(old).write.parquet(new)")):
+        run(spark, pages, out)
+    assert listing() == before
 
 
 def test_resume_pre_bucketing_fallback(spark, pages, tmp_path):
