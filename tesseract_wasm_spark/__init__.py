@@ -24,4 +24,6 @@ Design notes:
 
 __version__ = "0.1.0"
 
-from tesseract_wasm_spark.session import get_spark  # noqa: F401
+from tesseract_wasm_spark.session import get_spark, install_zip_cache_check  # noqa: F401
+
+install_zip_cache_check()

@@ -113,7 +113,10 @@ def brute_force_topk(embeddings: DataFrame, query_ids: list[int], k: int = 5) ->
             cids = pdf["vec_id"].to_numpy()
             # dot(q, c) with q as the zip_with LEFT side: products q[k]*c[k]
             # (float multiply is commutative bitwise, so c[k]*q[k] is equal)
-            cos = _seq_dots(mat, qmat) / (qnorm[None, :] * _seq_norms(mat)[:, None])
+            # a zero vector's cosine is 0/0 = NaN, which leaves the UDF as
+            # NULL and ranks last; silence the warning, not the value
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = _seq_dots(mat, qmat) / (qnorm[None, :] * _seq_norms(mat)[:, None])
             ci, qi = np.nonzero(cids[:, None] != qids[None, :])
             yield pd.DataFrame(
                 {"query_id": qids[qi], "neighbor_id": cids[ci], "cosine": cos[ci, qi]}
@@ -337,10 +340,12 @@ def srp_blocked_near_pairs(embeddings: DataFrame, *, threshold: float = 0.25,
         chunk = max(1, (4 << 20) // nrows)
         for i0 in range(0, nrows - 1, chunk):
             i1 = min(i0 + chunk, nrows)
-            cos = _seq_dots(mat[i0:i1], mat) / (
-                norms[i0:i1, None] * norms[None, :]
-            )
-            with np.errstate(invalid="ignore"):
+            # a zero vector's cosine is NaN and fails the >= test, so no
+            # pair with it is ever emitted
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = _seq_dots(mat[i0:i1], mat) / (
+                    norms[i0:i1, None] * norms[None, :]
+                )
                 ii, jj = np.nonzero(cos >= pre)
             keep = (ii + i0) < jj
             ii, jj = ii[keep], jj[keep]

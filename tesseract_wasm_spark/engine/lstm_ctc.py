@@ -182,19 +182,6 @@ def ctc_beam_search(log_probs: np.ndarray, blank: int, beam_width: int = 8) -> l
     return list(best[0])
 
 
-def recognize_line_lstm(
-    mask: np.ndarray, line: Line, *, decoder: str = "best_path", beam_width: int = 8,
-    whitelist: str | None = None, lang: str = "eng"
-) -> list[str]:
-    """Recognize every word of a segmented line via the LSTM+CTC path.
-
-    Returns one string per word (same order as line.words).
-    """
-    return [t for t, _ in recognize_line_lstm_scored(mask, line, decoder=decoder,
-                                                     beam_width=beam_width,
-                                                     whitelist=whitelist, lang=lang)]
-
-
 def recognize_line_lstm_scored(
     mask: np.ndarray, line: Line, *, decoder: str = "best_path", beam_width: int = 8,
     whitelist: str | None = None, lang: str = "eng"

@@ -120,10 +120,3 @@ def decide_orientation(up_conf: float, left_conf: float,
     if abs(up_conf) - abs(left_conf) > margin:
         return (0 if up_conf > 0 else 180), 1.0
     return (90 if left_conf > 0 else 270), 1.0
-
-
-def detect_orientation(mask: np.ndarray, lines: list[Line] | None = None,
-                       *, margin: float = DECISION_MARGIN) -> tuple[int, float]:
-    """-> (rotation in {0, 90, 180, 270}, confidence in {0.0, 1.0})."""
-    up_conf, left_conf = orientation_scores(mask, lines)
-    return decide_orientation(up_conf, left_conf, margin)

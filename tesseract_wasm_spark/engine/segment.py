@@ -83,38 +83,6 @@ def estimate_baseline(bottoms: np.ndarray) -> int:
     return int(vals[np.argmax(counts)])
 
 
-def estimate_skew_degrees(comps: Components, lines: list[Line]) -> float:
-    """P3 — page skew estimate (reference: GetDeskewVectors inside layout
-    analysis, patches/tesseract.diff:118-119). Least-squares slope of
-    baseline-row component bottoms against x, averaged over lines weighted by
-    component count; synthetic fixtures are skew-free so tests pin ~0, and the
-    estimate is emitted per page for observability at scale."""
-    num = 0.0
-    den = 0.0
-    for line in lines:
-        xs: list[float] = []
-        ys: list[float] = []
-        for word in line.words:
-            # use word bboxes (bottom at the line baseline for non-descender
-            # words); descender-bottomed words are excluded by the filter
-            if word.bottom == line.baseline:
-                xs.append((word.left + word.right) / 2.0)
-                ys.append(float(word.bottom))
-        if len(xs) < 2:
-            continue
-        x = np.asarray(xs)
-        y = np.asarray(ys)
-        vx = ((x - x.mean()) ** 2).sum()
-        if vx <= 0:
-            continue
-        slope = (((x - x.mean()) * (y - y.mean())).sum()) / vx
-        num += slope * len(xs)
-        den += len(xs)
-    if den == 0:
-        return 0.0
-    return float(np.degrees(np.arctan(num / den)))
-
-
 #: minimum blank-column run that counts as a column gutter: wider than any
 #: intra-line word gap the renderer can produce with <=2 consecutive spaces
 #: (max ~17px), so single-column text never splits spuriously

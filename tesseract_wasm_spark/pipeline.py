@@ -351,7 +351,7 @@ def extract_any(
             ):
                 if k == "ocr":
                     res = process_page(
-                        bytes(raw), with_text=True, with_orientation=True,
+                        bytes(raw), with_text=True, with_orientation=False,
                         recognizer=recognizer, variables=variables, lang=lg,
                         lstm_model=lstm_model,
                     )

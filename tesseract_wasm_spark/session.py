@@ -6,11 +6,27 @@ to SparkSession construction. Arrow settings mirror the reference's
 peak-memory discipline (bounded WASM heap, staging buffers freed eagerly —
 reference: Makefile:161-173, src/ocr-engine.ts:186-203): page payloads are
 megabytes each, so Arrow batches are kept small to bound executor memory.
+
+The reference creates its engine worker once and reuses it; Spark reuses
+Python workers too (``spark.python.worker.reuse=true``, the default), but
+on CPython < 3.13 a reused worker still pays a start-up cost on EVERY task:
+PySpark's ``setup_spark_files`` calls ``importlib.invalidate_caches()``
+per task, and there ``zipimporter.invalidate_caches`` re-parses the whole
+central directory of its archive — about fifteen importers over
+``pyspark.zip`` and the spark-core jar that the JVM puts on every worker's
+``sys.path``, ~0.1-0.35 s per task. ``install_zip_cache_check`` (run by the
+package import, so inside every worker that unpickles a package UDF) makes
+that re-read conditional on the archive's stat stamp, the same mtime check
+``FileFinder`` already applies to directories. Without worker reuse every
+task is a fresh process and the install buys nothing. CPython 3.13 made
+the method a cheap cache drop, so there it is a no-op, and the function
+can go once 3.13 is the floor.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -106,3 +122,35 @@ def ship_package(spark: SparkSession) -> None:
             for full in sorted(sources):
                 zf.write(full, os.path.relpath(full, pkg_root))
     sc.addPyFile(zip_path)
+
+
+def install_zip_cache_check() -> None:
+    """Inside a Spark Python worker on CPython < 3.13, make
+    ``zipimporter.invalidate_caches`` re-read its archive only when the
+    archive's ``(st_mtime_ns, st_size, st_ino)`` stamp changed since this
+    importer last read it. A zip rewritten between tasks changes the stamp
+    and a newly added one gets a fresh importer, so per-task invalidation
+    keeps its meaning. Elsewhere
+    (the driver, CPython >= 3.13) and on a second call it does nothing."""
+    if sys.version_info >= (3, 13):
+        return
+    import zipimport  # noqa: PLC0415
+
+    from pyspark import TaskContext  # noqa: PLC0415
+
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "stat_checked", False) or TaskContext.get() is None:
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            stamp = None  # gone or unreadable: let the original decide
+        if stamp is None or stamp != self.__dict__.get("_stat_stamp"):
+            reread(self)
+            self._stat_stamp = stamp
+
+    invalidate_caches.stat_checked = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches

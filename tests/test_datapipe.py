@@ -236,6 +236,43 @@ def test_srp_blocked_pairs_equal_exact_kernel(spark, embeddings):
         assert bucketed == exact
 
 
+def test_zero_vector_cosine_contract(spark, embeddings):
+    """A zero-norm vector has no cosine (0/0). Pinned contract: the SRP
+    verify kernel emits no pair with it, brute-force top-k gives it a NULL
+    cosine that ranks last (and a zero query ranks its neighbors by id),
+    and every other pair and top-k row is what it is without it."""
+    zero_id = 1000
+    with_zero = embeddings.unionByName(spark.createDataFrame(
+        [(zero_id, [0.0] * 16, 0)], "vec_id long, embedding array<float>, label int"
+    ))
+    sigs = similarity.srp_multi_signatures(with_zero, carry_cols=("label",)).select(
+        "vec_id", "label", F.posexplode("buckets").alias("table_id", "bucket")
+    )
+    zero_keys = sigs.filter(F.col("vec_id") == zero_id).drop("vec_id")
+    shared = sigs.filter(F.col("vec_id") != zero_id).join(
+        zero_keys, ["label", "table_id", "bucket"]
+    )
+    assert shared.count() > 0  # the zero vector really sits inside a bucket
+
+    for thr in (0.25, 0.5):
+        got = sorted(tuple(r) for r in similarity.srp_blocked_near_pairs(
+            with_zero, threshold=thr).collect())
+        base = sorted(tuple(r) for r in similarity.srp_blocked_near_pairs(
+            embeddings, threshold=thr).collect())
+        assert got == base and base
+        assert all(zero_id not in (a, b) for a, b, _ in got)
+
+    n = embeddings.count()
+    top = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
+           for r in similarity.brute_force_topk(with_zero, [0, 1, zero_id], k=n).collect()}
+    base = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
+            for r in similarity.brute_force_topk(embeddings, [0, 1], k=n).collect()}
+    for q in (0, 1):
+        assert [top[(q, k)] for k in range(1, n)] == [base[(q, k)] for k in range(1, n)]
+        assert top[(q, n)] == (zero_id, None)
+    assert [top[(zero_id, k)] for k in range(1, n + 1)] == [(i, None) for i in range(n)]
+
+
 def test_srp_blocked_pairs_on_corpus_embeddings(spark):
     """Driver-gate parity on the real testdata table: the bucketed path and
     the exact kernel agree at the driver's threshold (recall 1.0)."""

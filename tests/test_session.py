@@ -1,11 +1,25 @@
 """session.ship_package: ships the package zip once per context and lets
-every failure other than "already shipped" raise."""
+every failure other than "already shipped" raise.
+session.install_zip_cache_check: inside a Spark Python worker, zip importers
+re-read their archive on invalidate_caches only when its stat stamp moved."""
 
 from __future__ import annotations
 
-import pytest
+import importlib
+import os
+import sys
+import zipfile
+import zipimport
 
-from tesseract_wasm_spark.session import ship_package
+import pytest
+from pyspark import TaskContext
+
+from tesseract_wasm_spark.session import install_zip_cache_check, ship_package
+
+needs_eager_reread = pytest.mark.skipif(
+    sys.version_info >= (3, 13),
+    reason="CPython >= 3.13 no longer re-reads the archive on invalidate_caches",
+)
 
 
 class _FakeContext:
@@ -48,3 +62,112 @@ def test_ship_package_raises_other_failures():
     sc = _FakeContext(error=RuntimeError("cannot reach the cluster"))
     with pytest.raises(RuntimeError, match="cannot reach the cluster"):
         ship_package(_FakeSession(sc))
+
+
+def _write_zip(path, modules):
+    tmp = f"{path}.tmp"
+    with zipfile.ZipFile(tmp, "w") as zf:
+        for name in modules:
+            zf.writestr(f"{name}.py", f"NAME = {name!r}\n")
+    os.replace(tmp, path)
+
+
+@pytest.fixture
+def zip_reads(monkeypatch):
+    """Counts zipimport._read_directory calls; puts the class attribute
+    back after the test whatever the install did to it."""
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
+                        zipimport.zipimporter.invalidate_caches)
+    reads = []
+    real = zipimport._read_directory
+
+    def counting(archive):
+        reads.append(archive)
+        return real(archive)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    return reads
+
+
+@pytest.fixture
+def in_task(monkeypatch):
+    monkeypatch.setattr(TaskContext, "get", classmethod(lambda cls: object()))
+
+
+@needs_eager_reread
+def test_zip_cache_check_rereads_only_a_changed_archive(tmp_path, zip_reads, in_task):
+    archive = str(tmp_path / "mods.zip")
+    _write_zip(archive, ["twzc_first"])
+    importer = zipimport.zipimporter(archive)
+    install_zip_cache_check()
+    importer.invalidate_caches()  # first call: no stamp yet, reads once
+    zip_reads.clear()
+    for _ in range(3):
+        importer.invalidate_caches()
+    assert zip_reads == []
+
+    _write_zip(archive, ["twzc_first", "twzc_added"])
+    importer.invalidate_caches()
+    assert zip_reads == [archive]
+    assert importer.find_spec("twzc_added") is not None
+    zip_reads.clear()
+    importer.invalidate_caches()
+    assert zip_reads == []
+
+
+@needs_eager_reread
+def test_zip_cache_check_installs_once(zip_reads, in_task):
+    install_zip_cache_check()
+    installed = zipimport.zipimporter.invalidate_caches
+    install_zip_cache_check()
+    assert zipimport.zipimporter.invalidate_caches is installed
+    assert installed.stat_checked
+
+
+def test_zip_cache_check_leaves_the_driver_alone(tmp_path, zip_reads, monkeypatch):
+    monkeypatch.setattr(TaskContext, "get", classmethod(lambda cls: None))
+    original = zipimport.zipimporter.invalidate_caches
+    install_zip_cache_check()
+    assert zipimport.zipimporter.invalidate_caches is original
+    archive = str(tmp_path / "mods.zip")
+    _write_zip(archive, ["twzc_driver"])
+    importer = zipimport.zipimporter(archive)
+    zip_reads.clear()
+    importer.invalidate_caches()
+    importer.invalidate_caches()
+    assert len(zip_reads) == (2 if sys.version_info < (3, 13) else 0)
+
+
+@needs_eager_reread
+def test_workers_stat_check_and_still_see_a_new_py_file(spark, tmp_path):
+    """A package UDF installs the check in every worker it runs on; a zip
+    added with addPyFile after those workers are warm imports in the next
+    task — the property PySpark's per-task invalidation exists for."""
+    from tesseract_wasm_spark import session  # noqa: PLC0415
+
+    sc = spark.sparkContext
+    n = sc.defaultParallelism
+    installer = session.install_zip_cache_check
+
+    def report(_):
+        # referencing a package function makes unpickling import the package
+        yield (installer.__name__, os.getpid(),
+               getattr(zipimport.zipimporter.invalidate_caches, "stat_checked", False))
+
+    # idle workers are handed out first-in first-out, so 4n tasks cycle
+    # through every worker the earlier tests left in the pool
+    warm = sc.parallelize(range(4 * n), 4 * n).mapPartitions(report).collect()
+    assert warm and all(checked for _name, _pid, checked in warm)
+
+    name = f"twzc_late_{os.getpid()}"
+    archive = str(tmp_path / f"{name}.zip")
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr(f"{name}.py", "VALUE = 42\n")
+    sc.addPyFile(archive)
+
+    def late(_):
+        checked = getattr(zipimport.zipimporter.invalidate_caches, "stat_checked", False)
+        yield os.getpid(), checked, importlib.import_module(name).VALUE
+
+    rows = sc.parallelize(range(n), n).mapPartitions(late).collect()
+    assert rows and all(checked and value == 42 for _pid, checked, value in rows)

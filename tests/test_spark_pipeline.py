@@ -325,3 +325,23 @@ def test_resume_pre_bucketing_fallback(spark, pages, tmp_path):
     assert s["pages"] == pages.count() - 5
     got = spark.read.parquet(f"{out}/results")
     assert got.select("url").distinct().count() == pages.count()
+
+
+def test_extract_any_text_matches_oriented_engine(spark):
+    """extract_any runs the OCR branch without orientation (it keeps only the
+    text and the error); its rows equal the orientation-on engine's."""
+    from tesseract_wasm_spark.engine.page import process_page  # noqa: PLC0415
+    from tesseract_wasm_spark.fixtures import mixed_corpus_df  # noqa: PLC0415
+    from tesseract_wasm_spark.pipeline import extract_any  # noqa: PLC0415
+
+    pages = mixed_corpus_df(spark, 24).persist()
+    got = {r["url"]: tuple(r) for r in
+           extract_any(pages).select("url", "kind", "text_out", "error").collect()}
+    payloads = {r["url"]: bytes(r["html"]) for r in pages.collect()}
+    pages.unpersist()
+    assert set(got) == set(payloads)
+    ocr = [u for u, row in got.items() if row[1] == "ocr"]
+    assert ocr and len(ocr) < len(got)
+    for url in ocr:
+        res = process_page(payloads[url], with_text=True, with_orientation=True)
+        assert got[url] == (url, "ocr", res.page_text, res.error)
