@@ -77,8 +77,15 @@ def pack_sequences(docs: DataFrame, *, target_tokens: int = TARGET_TOKENS,
     pre1 = sub1.withColumn("_before1", F.sum("_t1").over(w1) - F.col("_t1"))
     w0 = Window.partitionBy(shard_col, "_b1").orderBy(id_col)
     cum_before = F.col("_before1") + F.sum("n_tokens").over(w0) - F.col("n_tokens")
+    # null-safe keys: a NULL id gets a NULL bucket (a NULL shard a NULL
+    # key), which a plain equi-join drops; the single-window form keeps
+    # such rows (NULL ids sort first), and so does this join
+    pre1 = pre1.select(
+        F.col(shard_col).alias("_s1"), F.col("_b1").alias("_k1"), "_before1"
+    )
+    on = F.col(shard_col).eqNullSafe(F.col("_s1")) & F.col("_b1").eqNullSafe(F.col("_k1"))
     return (
-        rows.join(pre1.select(shard_col, "_b1", "_before1"), [shard_col, "_b1"])
+        rows.join(pre1, on)
         .select(
             shard_col, id_col, "n_tokens",
             F.floor(cum_before / target_tokens).alias("seq_id"),

@@ -214,53 +214,113 @@ def test_srp_lsh_pairs(spark, embeddings):
 
 
 def test_srp_blocked_pairs_equal_exact_kernel(spark, embeddings):
-    """The SRP-bucketed scale path must return EXACTLY the pairs of the
-    quadratic-within-label verification kernel (precision exact by
-    construction; recall 1.0 at these parameters on clustered data)."""
+    """Both plans of srp_blocked_near_pairs against the quadratic-within-
+    label kernel. Where SRP cannot prune (n_bits=3, n_tables=64) the exact
+    tiled plan returns EXACTLY its pairs; the SRP plan (n_bits=8,
+    n_tables=16) returns a subset of them with the same cosines (precision
+    exact by construction, recall set by the tables)."""
     from tesseract_wasm_spark.datapipe.similarity import (
         cosine_pairs_blocked,
         srp_blocked_near_pairs,
     )
 
-    for thr in (0.25, 0.5):
-        bucketed = {
+    assert not similarity._srp_prunes(3, 64) and similarity._srp_prunes(8, 16)
+    for thr, n_bits, n_tables in ((0.25, 3, 64), (0.5, 3, 64), (0.5, 8, 16)):
+        got = {
             (r["vec_a"], r["vec_b"]): r["cosine"]
             for r in srp_blocked_near_pairs(
-                embeddings, threshold=thr, n_bits=3, n_tables=64
+                embeddings, threshold=thr, n_bits=n_bits, n_tables=n_tables
             ).collect()
         }
         exact = {
             (r["vec_a"], r["vec_b"]): r["cosine"]
             for r in cosine_pairs_blocked(embeddings, threshold=thr).collect()
         }
-        assert bucketed == exact
+        if similarity._srp_prunes(n_bits, n_tables):
+            assert got and got.items() <= exact.items()
+        else:
+            assert got == exact
+
+
+def test_exact_tiles_bound_groups(spark, monkeypatch):
+    """One label of more than 2T vectors: with the tile constant lowered
+    (tile ids are JVM expressions built on the driver), the tiled plan
+    still returns exactly cosine_pairs_blocked's pairs and cosines, and no
+    (block, tile_a, tile_b) group of the replicated frame holds more than
+    2T rows."""
+    tile = 7
+    monkeypatch.setattr(similarity, "EXACT_TILE", tile)
+    rng = np.random.default_rng(11)
+    base = rng.normal(size=16)
+    rows = [(int(v), [float(x) for x in base + rng.normal(scale=0.8, size=16)],
+             0 if v < 40 else 1)
+            for v in rng.permutation(46)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
+
+    groups = similarity._tile_pairs(emb).groupBy("label", "_ta", "_tb").count()
+    sizes = {(r["label"], r["_ta"], r["_tb"]): r["count"] for r in groups.collect()}
+    n_tiles = -(-40 // tile)
+    assert len([k for k in sizes if k[0] == 0]) == n_tiles * (n_tiles + 1) // 2
+    assert max(sizes.values()) <= 2 * tile
+
+    for thr in (0.25, 0.5):
+        got = sorted(tuple(r) for r in similarity.srp_blocked_near_pairs(
+            emb, threshold=thr).collect())
+        want = sorted(tuple(r) for r in similarity.cosine_pairs_blocked(
+            emb, threshold=thr).collect())
+        assert got == want and want
+
+
+def test_srp_capped_bucket_observed(spark, embeddings):
+    """A bucket past ``max_bucket`` on the SRP plan contributes no pairs
+    and shows in the ``dropped`` Observation; the exact plan has nothing
+    to cap and reports zero."""
+    from pyspark.sql import Observation
+
+    full = {tuple(r) for r in similarity.srp_blocked_near_pairs(
+        embeddings, threshold=0.5, n_bits=4, n_tables=8).collect()}
+    obs = Observation()
+    capped = {tuple(r) for r in similarity.srp_blocked_near_pairs(
+        embeddings, threshold=0.5, n_bits=4, n_tables=8, max_bucket=3,
+        dropped=obs).collect()}
+    assert capped < full
+    assert obs.get["dropped_buckets"] >= 1
+    assert obs.get["max_bucket_size"] > 3
+
+    obs_exact = Observation()
+    similarity.srp_blocked_near_pairs(
+        embeddings, threshold=0.5, max_bucket=3, dropped=obs_exact).collect()
+    assert obs_exact.get["dropped_buckets"] == 0
 
 
 def test_zero_vector_cosine_contract(spark, embeddings):
-    """A zero-norm vector has no cosine (0/0). Pinned contract: the SRP
-    verify kernel emits no pair with it, brute-force top-k gives it a NULL
-    cosine that ranks last (and a zero query ranks its neighbors by id),
-    and every other pair and top-k row is what it is without it."""
+    """A zero-norm vector has no cosine (0/0). Pinned contract: neither
+    plan of srp_blocked_near_pairs (exact tiles at n_bits=3, n_tables=64;
+    SRP buckets at n_bits=5, n_tables=16) emits a pair with it, brute-force
+    top-k gives it a NULL cosine that ranks last (and a zero query ranks
+    its neighbors by id), and every other pair and top-k row is what it
+    is without it."""
     zero_id = 1000
     with_zero = embeddings.unionByName(spark.createDataFrame(
         [(zero_id, [0.0] * 16, 0)], "vec_id long, embedding array<float>, label int"
     ))
-    sigs = similarity.srp_multi_signatures(with_zero, carry_cols=("label",)).select(
-        "vec_id", "label", F.posexplode("buckets").alias("table_id", "bucket")
-    )
-    zero_keys = sigs.filter(F.col("vec_id") == zero_id).drop("vec_id")
-    shared = sigs.filter(F.col("vec_id") != zero_id).join(
-        zero_keys, ["label", "table_id", "bucket"]
-    )
-    assert shared.count() > 0  # the zero vector really sits inside a bucket
+    for n_bits, n_tables in ((3, 64), (5, 16)):
+        sigs = similarity.srp_multi_signatures(
+            with_zero, n_bits=n_bits, n_tables=n_tables, carry_cols=("label",)
+        ).select("vec_id", "label", F.posexplode("buckets").alias("table_id", "bucket"))
+        zero_keys = sigs.filter(F.col("vec_id") == zero_id).drop("vec_id")
+        shared = sigs.filter(F.col("vec_id") != zero_id).join(
+            zero_keys, ["label", "table_id", "bucket"]
+        )
+        assert shared.count() > 0  # the zero vector really sits inside a bucket
 
-    for thr in (0.25, 0.5):
-        got = sorted(tuple(r) for r in similarity.srp_blocked_near_pairs(
-            with_zero, threshold=thr).collect())
-        base = sorted(tuple(r) for r in similarity.srp_blocked_near_pairs(
-            embeddings, threshold=thr).collect())
-        assert got == base and base
-        assert all(zero_id not in (a, b) for a, b, _ in got)
+        for thr in (0.25, 0.5):
+            got = sorted(tuple(r) for r in similarity.srp_blocked_near_pairs(
+                with_zero, threshold=thr, n_bits=n_bits, n_tables=n_tables).collect())
+            base = sorted(tuple(r) for r in similarity.srp_blocked_near_pairs(
+                embeddings, threshold=thr, n_bits=n_bits, n_tables=n_tables).collect())
+            assert got == base and base
+            assert all(zero_id not in (a, b) for a, b, _ in got)
 
     n = embeddings.count()
     top = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
@@ -775,29 +835,51 @@ def test_pack_sequences_manifest(spark):
     assert (got[4]["seq_id"], got[4]["offset_in_seq"]) == (0, 0)  # new shard
 
 
+def _single_window_pack(docs, target_tokens=2048):
+    """The reference formulation of pack_sequences: one window per shard."""
+    from pyspark.sql import Window
+
+    from tesseract_wasm_spark.datapipe.textstats import WS_RE
+
+    toks = F.size(F.split(F.trim(F.col("text")), WS_RE))
+    w = Window.partitionBy("source").orderBy("doc_id")
+    cum = F.sum(toks).over(w) - toks
+    return sorted((tuple(r) for r in docs.select(
+        "source", "doc_id", toks.alias("n_tokens"),
+        F.floor(cum / target_tokens).alias("seq_id"),
+        (cum % target_tokens).alias("offset_in_seq"),
+    ).collect()), key=repr)
+
+
 def test_pack_sequences_bucketed_prefix_matches_window(spark):
     """r06: the distributed prefix sum must assign identically to the
     single-window form even when ids span MANY 2^20-wide buckets (the
     multi-bucket path a bench-sized corpus never exercises)."""
-    from pyspark.sql import Window
-
     from tesseract_wasm_spark.datapipe import packing
-    from tesseract_wasm_spark.datapipe.textstats import WS_RE
 
     rows = [(i * (1 << 19) + 7, "s" + str(i % 3), "w " * (37 + i * 13))
             for i in range(24)]
     docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    toks = F.size(F.split(F.trim(F.col("text")), WS_RE))
-    w = Window.partitionBy("source").orderBy("doc_id")
-    cum = F.sum(toks).over(w) - toks
-    want = sorted(tuple(r) for r in docs.select(
-        "source", "doc_id", toks.alias("n_tokens"),
-        F.floor(cum / 2048).alias("seq_id"),
-        (cum % 2048).alias("offset_in_seq"),
-    ).collect())
-    got = sorted(tuple(r) for r in
-                 packing.pack_sequences(docs, target_tokens=2048).collect())
-    assert got == want
+    got = sorted((tuple(r) for r in
+                  packing.pack_sequences(docs, target_tokens=2048).collect()), key=repr)
+    assert got == _single_window_pack(docs)
+
+
+def test_pack_sequences_keeps_null_ids(spark):
+    """A NULL doc_id on the numeric-id path keeps its row (its id bucket is
+    NULL too, so the bucket join is null-safe) with the seq_id and offset
+    of the single-window form, where NULL ids sort first."""
+    from tesseract_wasm_spark.datapipe import packing
+
+    rows = [(i * (1 << 19) + 7, "s" + str(i % 2), "w " * (900 + i * 13))
+            for i in range(8)]
+    rows += [(None, "s0", "w " * 1500), (None, "s1", "w " * 30)]
+    docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
+    got = sorted((tuple(r) for r in
+                  packing.pack_sequences(docs, target_tokens=2048).collect()), key=repr)
+    assert len(got) == len(rows)
+    assert got == _single_window_pack(docs)
+    assert {r[1:] for r in got if r[1] is None} == {(None, 1500, 0, 0), (None, 30, 0, 0)}
 
 
 def test_punct_count_matches_regex(spark):

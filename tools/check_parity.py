@@ -10,6 +10,8 @@ from __future__ import annotations
 import hashlib
 import sys
 
+from pathlib import Path
+
 import duckdb
 
 TABLES = [
@@ -47,7 +49,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
     import __spark_entry__ as entrymod
     from tesseract_wasm_spark.session import get_spark
 
