@@ -83,7 +83,7 @@ def stages() -> None:
         out[f"emb_{tag}_cands"] = time.monotonic() - t0
         out[f"emb_{tag}_n_cands"] = n_c
         sc.setJobDescription(f"emb {tag}: full")
-        full = sim.srp_blocked_near_pairs(emb, threshold=0.25, n_bits=3, n_tables=64)
+        full = sim.cosine_pairs_tiled(emb, threshold=0.25)
         t0 = time.monotonic()
         n_p = full.count()
         out[f"emb_{tag}_full"] = time.monotonic() - t0

@@ -9,12 +9,10 @@
   - ivf_topk: two-stage IVF — assign every vector to its nearest centroid
     (vectorized pandas UDF, one matmul per batch), then search only the
     query's nprobe nearest cells.
-  - srp_blocked_near_pairs: the same pairs as cosine_pairs_blocked from a
-    vectorized verify kernel. When signed-random-projection tables cannot
-    prune (an orthogonal pair would collide in some table with p >= 1/2)
-    it verifies every in-block pair once, in tiles of at most EXACT_TILE
-    vectors, so one pandas group never exceeds 2 * EXACT_TILE vectors;
-    otherwise only pairs that share an SRP bucket in some table.
+  - cosine_pairs_tiled: the same pairs as cosine_pairs_blocked from a
+    vectorized verify kernel: every in-block pair verified once, in tiles
+    of at most EXACT_TILE vectors, so one pandas group never exceeds
+    2 * EXACT_TILE vectors and no task sorts a whole block.
 At 100 TB the centroid table stays broadcast-sized (k <= 2^16) and the probe
 join is a bucket join on cell_id — no all-pairs shuffle anywhere.
 """
@@ -286,21 +284,13 @@ def srp_multi_signatures(embeddings: DataFrame, *, n_bits: int = 3, n_tables: in
     )
 
 
-#: vectors per tile of the exact verify path (by ``vec_id`` rank inside the
+#: vectors per tile of cosine_pairs_tiled (by ``vec_id`` rank inside the
 #: block): one pandas group holds one tile or a pair of tiles, so at most
 #: 2 * EXACT_TILE vectors (~1 MB of 64-d float64, an 8 MB cosine tile)
-#: however large the block is
+#: however large the block is. It is also the width of the ``vec_id``
+#: ranges the rank is computed in, so no rank window holds more than
+#: EXACT_TILE rows of a block either (ids unique within the block).
 EXACT_TILE = 1024
-
-
-def _srp_prunes(n_bits: int, n_tables: int) -> bool:
-    """Whether ``n_tables`` SRP tables of ``n_bits`` can prune in-block
-    candidates: an orthogonal pair (theta = pi/2) collides in at least one
-    table with p = 1 - (1 - 2^-n_bits)^n_tables (the srp_multi_signatures
-    formula). From p = 1/2 on, most unrelated pairs are candidates anyway
-    (p = 0.998 at n_bits=3, n_tables=64), so the banding only multiplies
-    the shuffle and the verify groups without saving any cosine."""
-    return 1.0 - (1.0 - 2.0 ** -n_bits) ** n_tables < 0.5
 
 
 def _near_pairs(ids_a: np.ndarray, mat_a: np.ndarray, ids_b: np.ndarray,
@@ -338,21 +328,45 @@ def _tile_pairs(embeddings: DataFrame, block_col: str = "label") -> DataFrame:
     by the tile pair ``(_ta <= _tb)`` it belongs to: tiles hold at most
     EXACT_TILE vectors by ``vec_id`` rank inside the block (``_tile``), so
     every in-block pair meets in exactly one ``(block, _ta, _tb)`` group of
-    at most 2 * EXACT_TILE rows. Rows whose id or block is NULL are left
-    out, as the ``a.block = b.block AND a.vec_id < b.vec_id`` join drops
-    them; so are NULL embeddings, whose cosine is NULL."""
-    w = Window.partitionBy(block_col).orderBy("vec_id")
-    rank = F.row_number().over(w) - 1
-    size = F.count(F.lit(1)).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    tiled = embeddings.filter(
+    at most 2 * EXACT_TILE rows.
+
+    The rank is a two-level prefix count (as packing.pack_sequences), so no
+    task sorts or buffers a whole block: ids are cut into ranges of
+    EXACT_TILE ids (``_r``), the rows are hash-partitioned by
+    (block, range) and ranked by one window per (block, range), and the
+    only per-block window runs over the per-range counts, one narrow row
+    per non-empty range. Rows whose id or block is NULL are left out, as
+    the ``a.block = b.block AND a.vec_id < b.vec_id`` join drops them; so
+    are NULL embeddings, whose cosine is NULL."""
+    rows = embeddings.filter(
         F.col("vec_id").isNotNull() & F.col(block_col).isNotNull()
         & F.col("embedding").isNotNull()
     ).select(
         "vec_id", "embedding", block_col,
+        F.floor(F.col("vec_id") / EXACT_TILE).alias("_r"),
+    )
+    wb = Window.partitionBy(block_col).orderBy("_r")
+    counts = rows.groupBy(block_col, "_r").agg(F.count(F.lit(1)).alias("_n"))
+    ranges = counts.select(
+        block_col, "_r",
+        (F.sum("_n").over(wb) - F.col("_n")).alias("_before"),
+        F.sum("_n").over(
+            wb.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        ).alias("_size"),
+    )
+    rank = F.col("_before") + F.row_number().over(
+        Window.partitionBy(block_col, "_r").orderBy("vec_id")
+    ) - 1
+    # every (block, range) of rows is in ranges, so a left join is the inner
+    # join; unlike it, it can never broadcast the rows and stream ranges,
+    # whose by-block partitioning would satisfy the rank window and put a
+    # whole block back in one task
+    tiled = rows.repartition(block_col, "_r").join(
+        ranges, [block_col, "_r"], "left"
+    ).select(
+        "vec_id", "embedding", block_col,
         F.floor(rank / EXACT_TILE).alias("_tile"),
-        F.floor((size - 1) / EXACT_TILE).alias("_last"),
+        F.floor((F.col("_size") - 1) / EXACT_TILE).alias("_last"),
     )
     other = F.explode(F.sequence(F.lit(0).cast("long"), F.col("_last")))
     return tiled.select("vec_id", "embedding", block_col, "_tile", other.alias("_u")).select(
@@ -361,127 +375,45 @@ def _tile_pairs(embeddings: DataFrame, block_col: str = "label") -> DataFrame:
     )
 
 
-def srp_blocked_near_pairs(embeddings: DataFrame, *, threshold: float = 0.25,
-                           n_bits: int = 3, n_tables: int = 64, seed: int = 9,
-                           block_col: str = "label",
-                           max_bucket: int | None = None,
-                           dropped=None) -> DataFrame:
+def cosine_pairs_tiled(embeddings: DataFrame, *, threshold: float = 0.25,
+                       block_col: str = "label") -> DataFrame:
     """All in-block pairs (``vec_a < vec_b``, same ``block_col``) with
-    ``round(cosine, 4) >= threshold``, the cosines bit-identical to the JVM
-    ``cosine_expr``. Two plans, chosen from (n_bits, n_tables) alone:
+    ``round(cosine, 4) >= threshold``: the pairs of cosine_pairs_blocked,
+    with cosines bit-identical to the JVM ``cosine_expr``, from the
+    vectorized verify kernel.
 
-    - **Exact tiles**, when SRP cannot prune (_srp_prunes: an orthogonal
-      pair collides in some table with p >= 1/2, e.g. p = 0.998 at the
-      default n_bits=3, n_tables=64). Banding would keep nearly every
-      in-block pair as a candidate while shuffling each vector n_tables
-      times and paying one pandas call per (table, bucket, block) group.
-      Instead each block is cut into tiles of at most EXACT_TILE vectors by
-      ``vec_id`` rank (_tile_pairs), every row is replicated once per tile
-      of its block, and each ``(block, tile_a <= tile_b)`` group verifies
-      its cross-tile pairs (all pairs on the diagonal) exactly once: no
-      ``dropDuplicates``, and one pandas group holds at most
-      2 * EXACT_TILE vectors however large or few the blocks are. The
-      result is every in-block pair at or above the threshold, i.e. exactly
-      cosine_pairs_blocked.
-    - **SRP buckets**, when it can (e.g. n_bits=8 for near-dup thresholds):
-      candidates come from an equi-join on (table_id, bucket, block), each
-      bucket verifies its pairs, and the pairs found in several tables are
-      deduplicated. Precision is exact by construction; recall is set by
-      (n_bits, n_tables) (srp_multi_signatures).
+    Each block is cut into tiles of at most EXACT_TILE vectors by
+    ``vec_id`` rank (_tile_pairs), every row is replicated once per tile of
+    its block, and each ``(block, tile_a <= tile_b)`` group verifies its
+    cross-tile pairs (all pairs on the diagonal) exactly once with
+    _seq_norms/_seq_dots: no ``dropDuplicates``, and one pandas group holds
+    at most 2 * EXACT_TILE vectors however large or few the blocks are.
+    Raw cosines >= threshold - 1e-4 leave the kernel and the authoritative
+    ``round(..., 4) >= threshold`` runs in the JVM.
 
-    Both verify with _seq_norms/_seq_dots, keep raw cosines >= threshold -
-    1e-4 and leave the authoritative ``round(..., 4) >= threshold`` to the
-    JVM. A zero vector has no cosine (0/0 = NaN) and is in no pair (the
-    JVM kernel, where NaN compares above every double, would keep it).
+    This replaced a multi-table SRP banding of the same pairs: at the
+    settings its query used (3 bits, 64 tables) an orthogonal pair still
+    collides in some table with p = 1 - (7/8)^64 = 0.998, so the buckets
+    pruned nothing while shuffling every vector 64 times and paying one
+    pandas call per (table, bucket, block) group.
 
-    ``max_bucket`` (default None) caps SRP buckets only: a bucket of more
-    vectors contributes no pairs. Bucket size is ~n/(2^n_bits * blocks) by
-    construction, so the scale lever for SRP is raising n_bits, not
-    dropping full buckets; the cap is for adversarial inputs (a corpus of
-    near-identical vectors). When set, the capped-bucket count is always
-    emitted as the named observation ``lsh_capped_buckets_N`` (as
-    dedup.bucket_pairs does), and a ``pyspark.sql.Observation`` passed as
-    ``dropped`` reads ``dropped_buckets``/``max_bucket_size`` after the
-    action. The exact path has nothing to cap, since its groups are already
-    bounded by 2 * EXACT_TILE; there ``dropped`` reads 0 dropped buckets
-    and a NULL size."""
+    A zero vector has no cosine (0/0 = NaN) and is in no pair (the JVM
+    kernel, where NaN compares above every double, would keep it)."""
     pre = threshold - 1e-4  # round(x,4) can raise x by at most 5e-5 + ulps
-    schema = "vec_a long, vec_b long, cosine double"
-    if not _srp_prunes(n_bits, n_tables):
-        def verify_tiles(key, pdf):
-            _, ta, tb = key
-            tile = pdf["_tile"].to_numpy()
-            ids_a, mat_a = _stack(pdf[tile == ta])
-            ids_b, mat_b = (ids_a, mat_a) if ta == tb else _stack(pdf[tile == tb])
-            return _near_pairs(ids_a, mat_a, ids_b, mat_b, pre)
 
-        # the rank window leaves rows hash-partitioned by block alone, which
-        # satisfies this grouping too and would run all of a block's tile
-        # groups in one task; the full-key repartition spreads them
-        tiled = _tile_pairs(embeddings, block_col)
-        verified = tiled.repartition(block_col, "_ta", "_tb").groupBy(
-            block_col, "_ta", "_tb"
-        ).applyInPandas(verify_tiles, schema=schema)
-        if dropped is not None:
-            verified = verified.observe(
-                dropped,
-                F.lit(0).alias("dropped_buckets"),
-                F.lit(None).cast("long").alias("max_bucket_size"),
-            )
-        return verified.select(
-            "vec_a", "vec_b", F.round("cosine", 4).alias("cosine")
-        ).filter(F.col("cosine") >= threshold)
+    def verify(key, pdf):
+        _, ta, tb = key
+        tile = pdf["_tile"].to_numpy()
+        ids_a, mat_a = _stack(pdf[tile == ta])
+        ids_b, mat_b = (ids_a, mat_a) if ta == tb else _stack(pdf[tile == tb])
+        return _near_pairs(ids_a, mat_a, ids_b, mat_b, pre)
 
-    sigs = srp_multi_signatures(
-        embeddings, n_bits=n_bits, n_tables=n_tables, seed=seed,
-        carry_cols=(block_col, "embedding"),
-    )
-    banded = sigs.select(
-        "vec_id", block_col, "embedding",
-        F.posexplode("buckets").alias("table_id", "bucket"),
-    )
-    # r06 optimization (guide §2.3/§4.2, measured in OPTIMIZATION_r06.md):
-    # verify INSIDE each bucket group with the vectorized kernel —
-    # embeddings ride the banding shuffle once per table (n_tables * corpus
-    # bytes, independent of pair count) and only pairs that can pass the
-    # threshold cross back into the JVM, where the round(...,4) filter and
-    # the (output-sized) distinct run. With a cap set, every group also
-    # returns one marker row (vec_a NULL, vec_b = its size) that the cap
-    # observations count before it is filtered out, so the counts ride the
-    # same action.
-    def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        nrows = len(pdf)
-        capped = max_bucket is not None and nrows > max_bucket
-        ids, mat = _stack(pdf.iloc[:0] if capped else pdf)
-        pairs = _near_pairs(ids, mat, ids, mat, pre)
-        if max_bucket is None:
-            return pairs
-        marker = pd.DataFrame({"vec_a": pd.array([None], "Int64"),
-                               "vec_b": pd.array([nrows], "Int64"), "cosine": [np.nan]})
-        return pd.concat([pairs.astype({"vec_a": "Int64", "vec_b": "Int64"}), marker])
-
-    verified = banded.groupBy("table_id", "bucket", block_col).applyInPandas(
-        verify, schema=schema
-    )
-    if max_bucket is not None:
-        from tesseract_wasm_spark.datapipe.dedup import _OBS_SEQ  # noqa: PLC0415
-
-        is_marker = F.col("vec_a").isNull()
-        capped = F.sum((is_marker & (F.col("vec_b") > max_bucket)).cast("int"))
-        size = F.max(F.when(is_marker, F.col("vec_b")))
-        verified = verified.observe(
-            f"lsh_capped_buckets_{next(_OBS_SEQ)}",
-            capped.alias("capped_buckets"), size.alias("max_bucket_size"),
-        )
-        if dropped is not None:
-            verified = verified.observe(
-                dropped, capped.alias("dropped_buckets"), size.alias("max_bucket_size")
-            )
-        verified = verified.filter(~is_marker)
     return (
-        verified.select("vec_a", "vec_b", F.round("cosine", 4).alias("cosine"))
+        _tile_pairs(embeddings, block_col)
+        .groupBy(block_col, "_ta", "_tb")
+        .applyInPandas(verify, schema="vec_a long, vec_b long, cosine double")
+        .select("vec_a", "vec_b", F.round("cosine", 4).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
-        .dropDuplicates(["vec_a", "vec_b"])
     )
 
 

@@ -775,17 +775,12 @@ def dedup_simhash(spark, sf_dir):
 
 
 def dedup_embedding(spark, sf_dir):
-    # At n_bits=3, n_tables=64 an orthogonal pair still collides in some SRP
-    # table with p = 0.998, so the buckets cannot prune at this 0.25-cosine
-    # threshold and srp_blocked_near_pairs takes its exact plan: every
-    # in-label pair verified once, in bounded vec_id-rank tiles, with the
-    # vectorized kernel. Its output is the SQL twin's by construction; tests
-    # pin it equal to the JVM kernel (cosine_pairs_blocked).
-    from tesseract_wasm_spark.datapipe.similarity import srp_blocked_near_pairs  # noqa: PLC0415
+    # Every in-label pair verified once, in bounded vec_id-rank tiles, with
+    # the vectorized kernel. Its output is the SQL twin's by construction;
+    # tests pin it equal to the JVM kernel (cosine_pairs_blocked).
+    from tesseract_wasm_spark.datapipe.similarity import cosine_pairs_tiled  # noqa: PLC0415
 
-    return srp_blocked_near_pairs(
-        _t(spark, sf_dir, "embeddings"), threshold=0.25, n_bits=3, n_tables=64
-    )
+    return cosine_pairs_tiled(_t(spark, sf_dir, "embeddings"), threshold=0.25)
 
 
 SQL_DEDUP_EMBEDDING = """

@@ -214,113 +214,114 @@ def test_srp_lsh_pairs(spark, embeddings):
 
 
 def test_srp_blocked_pairs_equal_exact_kernel(spark, embeddings):
-    """Both plans of srp_blocked_near_pairs against the quadratic-within-
-    label kernel. Where SRP cannot prune (n_bits=3, n_tables=64) the exact
-    tiled plan returns EXACTLY its pairs; the SRP plan (n_bits=8,
-    n_tables=16) returns a subset of them with the same cosines (precision
-    exact by construction, recall set by the tables)."""
+    """The tiled verify path must return EXACTLY the pairs and cosines of
+    the quadratic-within-label kernel."""
     from tesseract_wasm_spark.datapipe.similarity import (
         cosine_pairs_blocked,
-        srp_blocked_near_pairs,
+        cosine_pairs_tiled,
     )
 
-    assert not similarity._srp_prunes(3, 64) and similarity._srp_prunes(8, 16)
-    for thr, n_bits, n_tables in ((0.25, 3, 64), (0.5, 3, 64), (0.5, 8, 16)):
-        got = {
+    for thr in (0.25, 0.5):
+        tiled = {
             (r["vec_a"], r["vec_b"]): r["cosine"]
-            for r in srp_blocked_near_pairs(
-                embeddings, threshold=thr, n_bits=n_bits, n_tables=n_tables
-            ).collect()
+            for r in cosine_pairs_tiled(embeddings, threshold=thr).collect()
         }
         exact = {
             (r["vec_a"], r["vec_b"]): r["cosine"]
             for r in cosine_pairs_blocked(embeddings, threshold=thr).collect()
         }
-        if similarity._srp_prunes(n_bits, n_tables):
-            assert got and got.items() <= exact.items()
-        else:
-            assert got == exact
+        assert tiled == exact
+
+
+def _seq(jseq):
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _task_keys(df):
+    """For every Window and grouped-map pandas operator of df's executed
+    plan that sees the embeddings: the columns its input rows are
+    hash-partitioned by, i.e. what one task's rows have in common."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.finalPhysicalPlan()
+    out, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() in ("Window", "FlatMapGroupsInPandas") and "embedding" in {
+            a.name() for a in _seq(node.child().output())
+        }:
+            keys = node.child().outputPartitioning().expressions()
+            out.append((node.nodeName(), {e.toString().split("#")[0] for e in _seq(keys)}))
+        if node.nodeName().endswith("QueryStage"):
+            todo.append(node.plan())
+        todo.extend(_seq(node.children()))
+    return out
 
 
 def test_exact_tiles_bound_groups(spark, monkeypatch):
-    """One label of more than 2T vectors: with the tile constant lowered
-    (tile ids are JVM expressions built on the driver), the tiled plan
-    still returns exactly cosine_pairs_blocked's pairs and cosines, and no
-    (block, tile_a, tile_b) group of the replicated frame holds more than
-    2T rows."""
+    """One label of more than 2T vectors, with sparse ids: with the tile
+    constant lowered (tile ids are JVM expressions built on the driver),
+    tile k of a block holds exactly its ids of rank kT..kT+T-1, no
+    (block, tile_a, tile_b) group holds more than 2T rows, the pairs and
+    cosines equal cosine_pairs_blocked's, and no task that ranks or
+    verifies embeddings is handed its rows by the block alone (so no task
+    has to hold a whole block)."""
     tile = 7
     monkeypatch.setattr(similarity, "EXACT_TILE", tile)
     rng = np.random.default_rng(11)
     base = rng.normal(size=16)
-    rows = [(int(v), [float(x) for x in base + rng.normal(scale=0.8, size=16)],
+    rows = [(int(v) * 3 + int(v) % 2,
+             [float(x) for x in base + rng.normal(scale=0.8, size=16)],
              0 if v < 40 else 1)
             for v in rng.permutation(46)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
 
-    groups = similarity._tile_pairs(emb).groupBy("label", "_ta", "_tb").count()
+    tiled = similarity._tile_pairs(emb)
+    tiles = {(r["label"], r["vec_id"]): r["_tile"]
+             for r in tiled.select("label", "vec_id", "_tile").distinct().collect()}
+    for label in (0, 1):
+        ids = sorted(v for lab, v in tiles if lab == label)
+        assert [tiles[(label, v)] for v in ids] == [k // tile for k in range(len(ids))]
+    groups = tiled.groupBy("label", "_ta", "_tb").count()
     sizes = {(r["label"], r["_ta"], r["_tb"]): r["count"] for r in groups.collect()}
     n_tiles = -(-40 // tile)
     assert len([k for k in sizes if k[0] == 0]) == n_tiles * (n_tiles + 1) // 2
     assert max(sizes.values()) <= 2 * tile
 
     for thr in (0.25, 0.5):
-        got = sorted(tuple(r) for r in similarity.srp_blocked_near_pairs(
-            emb, threshold=thr).collect())
+        pairs = similarity.cosine_pairs_tiled(emb, threshold=thr)
+        got = sorted(tuple(r) for r in pairs.collect())
         want = sorted(tuple(r) for r in similarity.cosine_pairs_blocked(
             emb, threshold=thr).collect())
         assert got == want and want
-
-
-def test_srp_capped_bucket_observed(spark, embeddings):
-    """A bucket past ``max_bucket`` on the SRP plan contributes no pairs
-    and shows in the ``dropped`` Observation; the exact plan has nothing
-    to cap and reports zero."""
-    from pyspark.sql import Observation
-
-    full = {tuple(r) for r in similarity.srp_blocked_near_pairs(
-        embeddings, threshold=0.5, n_bits=4, n_tables=8).collect()}
-    obs = Observation()
-    capped = {tuple(r) for r in similarity.srp_blocked_near_pairs(
-        embeddings, threshold=0.5, n_bits=4, n_tables=8, max_bucket=3,
-        dropped=obs).collect()}
-    assert capped < full
-    assert obs.get["dropped_buckets"] >= 1
-    assert obs.get["max_bucket_size"] > 3
-
-    obs_exact = Observation()
-    similarity.srp_blocked_near_pairs(
-        embeddings, threshold=0.5, max_bucket=3, dropped=obs_exact).collect()
-    assert obs_exact.get["dropped_buckets"] == 0
+        keys = _task_keys(pairs)
+        assert {name for name, _ in keys} == {"Window", "FlatMapGroupsInPandas"}
+        assert all(len(k) > 1 and "label" in k for _, k in keys), keys
 
 
 def test_zero_vector_cosine_contract(spark, embeddings):
-    """A zero-norm vector has no cosine (0/0). Pinned contract: neither
-    plan of srp_blocked_near_pairs (exact tiles at n_bits=3, n_tables=64;
-    SRP buckets at n_bits=5, n_tables=16) emits a pair with it, brute-force
-    top-k gives it a NULL cosine that ranks last (and a zero query ranks
-    its neighbors by id), and every other pair and top-k row is what it
-    is without it."""
+    """A zero-norm vector has no cosine (0/0). Pinned contract: the tiled
+    verify kernel emits no pair with it although it shares a tile group
+    with its label, brute-force top-k gives it a NULL cosine that ranks
+    last (and a zero query ranks its neighbors by id), and every other
+    pair and top-k row is what it is without it."""
     zero_id = 1000
     with_zero = embeddings.unionByName(spark.createDataFrame(
         [(zero_id, [0.0] * 16, 0)], "vec_id long, embedding array<float>, label int"
     ))
-    for n_bits, n_tables in ((3, 64), (5, 16)):
-        sigs = similarity.srp_multi_signatures(
-            with_zero, n_bits=n_bits, n_tables=n_tables, carry_cols=("label",)
-        ).select("vec_id", "label", F.posexplode("buckets").alias("table_id", "bucket"))
-        zero_keys = sigs.filter(F.col("vec_id") == zero_id).drop("vec_id")
-        shared = sigs.filter(F.col("vec_id") != zero_id).join(
-            zero_keys, ["label", "table_id", "bucket"]
-        )
-        assert shared.count() > 0  # the zero vector really sits inside a bucket
+    keys = ["label", "_ta", "_tb"]
+    tiled = similarity._tile_pairs(with_zero)
+    zero_groups = tiled.filter(F.col("vec_id") == zero_id).select(*keys)
+    shared = tiled.filter(F.col("vec_id") != zero_id).join(zero_groups, keys)
+    assert shared.count() > 0  # the zero vector really is verified against others
 
-        for thr in (0.25, 0.5):
-            got = sorted(tuple(r) for r in similarity.srp_blocked_near_pairs(
-                with_zero, threshold=thr, n_bits=n_bits, n_tables=n_tables).collect())
-            base = sorted(tuple(r) for r in similarity.srp_blocked_near_pairs(
-                embeddings, threshold=thr, n_bits=n_bits, n_tables=n_tables).collect())
-            assert got == base and base
-            assert all(zero_id not in (a, b) for a, b, _ in got)
+    for thr in (0.25, 0.5):
+        got = sorted(tuple(r) for r in similarity.cosine_pairs_tiled(
+            with_zero, threshold=thr).collect())
+        base = sorted(tuple(r) for r in similarity.cosine_pairs_tiled(
+            embeddings, threshold=thr).collect())
+        assert got == base and base
+        assert all(zero_id not in (a, b) for a, b, _ in got)
 
     n = embeddings.count()
     top = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
@@ -334,24 +335,24 @@ def test_zero_vector_cosine_contract(spark, embeddings):
 
 
 def test_srp_blocked_pairs_on_corpus_embeddings(spark):
-    """Driver-gate parity on the real testdata table: the bucketed path and
-    the exact kernel agree at the driver's threshold (recall 1.0)."""
+    """Driver-gate parity on the real testdata table: the tiled path and
+    the exact kernel agree at the driver's threshold."""
     from tesseract_wasm_spark.datapipe.similarity import (
         cosine_pairs_blocked,
-        srp_blocked_near_pairs,
+        cosine_pairs_tiled,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    bucketed = {
+    tiled = {
         (r["vec_a"], r["vec_b"]): r["cosine"]
-        for r in srp_blocked_near_pairs(emb, threshold=0.25, n_bits=3, n_tables=64).collect()
+        for r in cosine_pairs_tiled(emb, threshold=0.25).collect()
     }
     exact = {
         (r["vec_a"], r["vec_b"]): r["cosine"]
         for r in cosine_pairs_blocked(emb, threshold=0.25).collect()
     }
     assert len(exact) > 100
-    assert bucketed == exact
+    assert tiled == exact
 
 
 def test_bucket_stats_observability(spark, docs):
