@@ -297,30 +297,19 @@ def _near_pairs(ids_a: np.ndarray, mat_a: np.ndarray, ids_b: np.ndarray,
                 mat_b: np.ndarray, pre: float) -> pd.DataFrame:
     """(vec_a, vec_b, cosine) for every row pair with id_a < id_b and a raw
     cosine >= ``pre``, from the bit-identical _seq_norms/_seq_dots kernel.
-    Rows of ``a`` are swept in chunks so the cosine tile stays ~4M cells
-    however large ``b`` is. A zero vector's cosine is NaN and fails the
-    >= test, so no pair with it is ever emitted."""
-    norms_a, norms_b = _seq_norms(mat_a), _seq_norms(mat_b)
-    out = []
-    chunk = max(1, (4 << 20) // max(1, len(ids_b)))
-    for i0 in range(0, max(1, len(ids_a)), chunk):  # one pass even if empty
-        i1 = min(i0 + chunk, len(ids_a))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = _seq_dots(mat_a[i0:i1], mat_b) / (
-                norms_a[i0:i1, None] * norms_b[None, :]
-            )
-            ii, jj = np.nonzero((cos >= pre) & (ids_a[i0:i1, None] < ids_b[None, :]))
-        out.append((ids_a[ii + i0], ids_b[jj], cos[ii, jj]))
-    vec_a, vec_b, cosine = (np.concatenate(col) for col in zip(*out))
-    return pd.DataFrame({"vec_a": vec_a, "vec_b": vec_b, "cosine": cosine})
+    A zero vector's cosine is NaN and fails the >= test, so no pair with it
+    is ever emitted."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = _seq_dots(mat_a, mat_b) / (
+            _seq_norms(mat_a)[:, None] * _seq_norms(mat_b)[None, :]
+        )
+        ii, jj = np.nonzero((cos >= pre) & (ids_a[:, None] < ids_b[None, :]))
+    return pd.DataFrame({"vec_a": ids_a[ii], "vec_b": ids_b[jj], "cosine": cos[ii, jj]})
 
 
 def _stack(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    """(ids, float64 matrix) of a (vec_id, embedding) frame."""
-    ids = pdf["vec_id"].to_numpy()
-    if not len(ids):
-        return ids, np.empty((0, 0), np.float64)
-    return ids, np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+    """(ids, float64 matrix) of a non-empty (vec_id, embedding) frame."""
+    return pdf["vec_id"].to_numpy(), np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
 
 
 def _tile_pairs(embeddings: DataFrame, block_col: str = "label") -> DataFrame:
@@ -391,11 +380,11 @@ def cosine_pairs_tiled(embeddings: DataFrame, *, threshold: float = 0.25,
     Raw cosines >= threshold - 1e-4 leave the kernel and the authoritative
     ``round(..., 4) >= threshold`` runs in the JVM.
 
-    This replaced a multi-table SRP banding of the same pairs: at the
-    settings its query used (3 bits, 64 tables) an orthogonal pair still
-    collides in some table with p = 1 - (7/8)^64 = 0.998, so the buckets
-    pruned nothing while shuffling every vector 64 times and paying one
-    pandas call per (table, bucket, block) group.
+    Multi-table SRP banding (srp_multi_signatures) does not pay here: with
+    the 3 bits x 64 tables that a 0.25 threshold needs for recall, an
+    orthogonal pair still collides in some table with p = 1 - (7/8)^64 =
+    0.998, so the buckets would prune nothing while shuffling every vector
+    64 times and paying one pandas call per (table, bucket, block) group.
 
     A zero vector has no cosine (0/0 = NaN) and is in no pair (the JVM
     kernel, where NaN compares above every double, would keep it)."""
