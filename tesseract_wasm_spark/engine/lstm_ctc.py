@@ -182,17 +182,6 @@ def ctc_beam_search(log_probs: np.ndarray, blank: int, beam_width: int = 8) -> l
     return list(best[0])
 
 
-def recognize_line_lstm_scored(
-    mask: np.ndarray, line: Line, *, decoder: str = "best_path", beam_width: int = 8,
-    whitelist: str | None = None, lang: str = "eng"
-) -> list[tuple[str, float]]:
-    """Single-line form of recognize_page_lstm_scored (same semantics)."""
-    return recognize_page_lstm_scored(
-        mask, [line], decoder=decoder, beam_width=beam_width,
-        whitelist=whitelist, lang=lang,
-    )[0]
-
-
 def recognize_page_lstm_scored(
     mask: np.ndarray, lines: list[Line], *, decoder: str = "best_path",
     beam_width: int = 8, whitelist: str | None = None, lang: str = "eng",
@@ -322,8 +311,9 @@ def recognize_page_lstm(mask: np.ndarray, lines: list[Line], **kw) -> str:
 # blob's weights, not from anything reconstructed in-process (tamper test
 # pins this). Layout: magic | sha256(body) | body, body = meta-length(4BE) |
 # meta json {lang, chars} | npz(w_x, w_h, b, w_out, b_out). At cluster scale
-# the blob is a broadcast variable registered per worker (load_lstm_model in
-# the UDF); per-process cache below.
+# the driver parses the blob once and the task closure carries the weights
+# tuple (pipeline._engine_args); the registry below is the driver-process
+# state behind OCREngine.loadModel, never touched inside Spark tasks.
 
 LSTM_MODEL_MAGIC = b"TWSM2"
 

@@ -97,6 +97,32 @@ def rebalance_pages(
     return df.repartition(num_partitions, F.xxhash64("url"))
 
 
+def _engine_args(variables: dict[str, str] | None,
+                 model_blob: bytes | None) -> tuple[dict[str, str] | None, tuple | None]:
+    """Validate the engine's inputs on the driver, so a bad value fails the
+    CALL rather than 10^4 tasks: ``variables`` through config.VariableStore
+    (raising the reference's message on an unknown name), ``model_blob``
+    parsed once into its EXPLICIT weights tuple. The task closure carries
+    both and every page gets them as arguments — never worker-global state:
+    Spark reuses python worker processes across jobs, so a global
+    registration would leak one job's model into the next (found by the test
+    suite: a tampered-blob test polluted an unrelated lstm job's reused
+    workers)."""
+    if variables is not None:
+        from tesseract_wasm_spark.config import VariableStore  # noqa: PLC0415
+
+        store = VariableStore()
+        for name, value in variables.items():
+            store.set(name, value)
+        variables = store.as_dict()
+    lstm_model = None
+    if model_blob is not None:
+        from tesseract_wasm_spark.engine.lstm_ctc import parse_lstm_model  # noqa: PLC0415
+
+        lstm_model = parse_lstm_model(model_blob)[1]
+    return variables, lstm_model
+
+
 def ocr_pages(
     pages: DataFrame,
     *,
@@ -104,7 +130,6 @@ def ocr_pages(
     with_orientation: bool = True,
     recognizer: str = "template",
     rebalance: bool = True,
-    rebalance_strategy: str = "salt",
     num_partitions: int | None = None,
     variables: dict[str, str] | None = None,
     model_blob: bytes | None = None,
@@ -112,9 +137,9 @@ def ocr_pages(
     """pages(url, warc_ts, html, text?, lang?) -> one result row per url.
 
     ``model_blob``: a TWSM2 trained-weight blob (lstm_ctc.export_lstm_model)
-    shipped to every worker through the task closure (Spark broadcasts
-    closure constants once per executor) and parsed into an EXPLICIT weight
-    tuple per task — the distributed form of OCREngine.loadModel: with
+    parsed on the driver into an EXPLICIT weight tuple that the task closure
+    ships to every worker (Spark broadcasts large closures once per
+    executor) — the distributed form of OCREngine.loadModel: with
     ``recognizer='lstm'`` every page decodes from the BLOB's weights, and
     no worker-global state is touched (reused workers can't leak a model
     between jobs).
@@ -129,42 +154,19 @@ def ocr_pages(
     validated on the driver and captured by the task closure, the distributed
     analog of the reference's per-engine setVariable (src/lib.cpp:150-170).
     """
-    if variables is not None:
-        from tesseract_wasm_spark.config import VariableStore  # noqa: PLC0415
-
-        store = VariableStore()
-        for name, value in variables.items():
-            store.set(name, value)  # raises with reference message on unknown
-        variables = store.as_dict()
+    variables, lstm_model = _engine_args(variables, model_blob)
     cols = ["url", "html"] + (["lang"] if "lang" in pages.columns else [])
     src = pages.select(*cols)  # column pruning before the shuffle: never move text/warc_ts
     if "lang" not in pages.columns:
         src = src.withColumn("lang", F.lit("eng"))
     if rebalance:
-        src = rebalance_pages(src, num_partitions, strategy=rebalance_strategy)
-
-    if model_blob is not None:
-        # validate driver-side so a bad blob fails the CALL, not 10^4 tasks
-        from tesseract_wasm_spark.engine.lstm_ctc import parse_lstm_model  # noqa: PLC0415
-
-        parse_lstm_model(model_blob)
+        src = rebalance_pages(src, num_partitions)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # imports inside the worker: keeps the task closure tiny
         from pyspark import TaskContext  # noqa: PLC0415
 
         from tesseract_wasm_spark.engine.page import process_page  # noqa: PLC0415
-
-        # the blob parses to an EXPLICIT weights tuple passed per page —
-        # never a worker-global registration: Spark reuses python worker
-        # processes across jobs, so global state would leak one job's model
-        # into the next (found by the test suite: a tampered-blob test
-        # polluted an unrelated lstm job's reused workers)
-        lstm_model = None
-        if model_blob is not None:
-            from tesseract_wasm_spark.engine.lstm_ctc import parse_lstm_model  # noqa: PLC0415
-
-            lstm_model = parse_lstm_model(model_blob)[1]
 
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else -1
@@ -251,8 +253,8 @@ def extract_any(
          the payload bytes to NULL for every row that doesn't need Python
          (html/image) — after this projection only OCR/PDF rows still carry
          their bytes;
-      2. an optional salt repartition (the same one-Exchange skew handling as
-         ``ocr_pages``);
+      2. an optional ``rebalance_pages`` salt repartition (the same
+         one-Exchange skew handling as ``ocr_pages``);
       3. one ``mapInPandas`` pass decodes the remaining payloads (DRF -> OCR
          engine, PDF -> zlib-inflating stream parser) and passes the
          already-extracted html/image rows through untouched.
@@ -275,14 +277,7 @@ def extract_any(
     # contract silently (one malformed payload would otherwise throw
     # MALFORMED_CHARACTER_CODING and kill a 10^12-row job)
     ensure_total_decode(pages)
-
-    if variables is not None:
-        from tesseract_wasm_spark.config import VariableStore  # noqa: PLC0415
-
-        store = VariableStore()
-        for name, value in variables.items():
-            store.set(name, value)
-        variables = store.as_dict()
+    variables, lstm_model = _engine_args(variables, model_blob)
 
     payload = F.col("html")
     is_drf = F.substring(payload, 1, len(drf.MAGIC)) == F.lit(drf.MAGIC)
@@ -323,25 +318,11 @@ def extract_any(
         lang.alias("lang"),
     )
     if rebalance:
-        n = num_partitions or pages.sparkSession.sparkContext.defaultParallelism * 2
-        src = src.repartition(n, F.xxhash64("url"))
-
-    if model_blob is not None:
-        # same contract as ocr_pages: validate driver-side, ship through the
-        # task closure, parse per task — never worker-global state
-        from tesseract_wasm_spark.engine.lstm_ctc import parse_lstm_model  # noqa: PLC0415
-
-        parse_lstm_model(model_blob)
+        src = rebalance_pages(src, num_partitions)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from tesseract_wasm_spark.datapipe.pdftext import extract_pdf_bytes  # noqa: PLC0415
         from tesseract_wasm_spark.engine.page import process_page  # noqa: PLC0415
-
-        lstm_model = None
-        if model_blob is not None:
-            from tesseract_wasm_spark.engine.lstm_ctc import parse_lstm_model  # noqa: PLC0415
-
-            lstm_model = parse_lstm_model(model_blob)[1]
 
         for pdf in batches:
             texts: list[str | None] = []

@@ -5,11 +5,15 @@ pipeline.rebalance_pages), per-partition lineage + metrics tables, and
 checkpoint-based resume so any partition can be replayed idempotently.
 
 Resume model (SURVEY.md §4 O11): the results table is keyed by url; a run
-anti-joins the input against already-written urls and processes only the
-remainder. Replaying a partition is therefore idempotent — its urls are
-already present and anti-joined away. With an Iceberg catalog the appends are
-ACID; on plain parquet (this sandbox) the same layout applies with
-last-writer-wins semantics per run_id.
+anti-joins the input against already-written (url_bucket, url) keys and
+processes only the remainder. Replaying a partition is therefore idempotent —
+its urls are already present and anti-joined away. Both jobs (OCR and mixed
+extraction) run through one private ``_resume``; they differ only in their
+transform, their summary aggregate and OCR's metrics table. With an Iceberg
+catalog the appends are ACID; on plain parquet the same layout applies with
+last-writer-wins semantics per run_id. Tables in an older layout (hive
+``url_bucket=K/`` directories, or no url_bucket column) are refused with a
+one-line rewrite.
 
 Layout: url_bucket is a sorted column, not a directory. Each run appends one
 parquet file per map task, rows sorted by (url_bucket, url), so a run writes
@@ -106,8 +110,9 @@ def write_table(df: DataFrame, path: str, *, fmt: str | None = None,
 
 
 def completed_urls(spark: SparkSession, results_path: str, mode: str = "full") -> DataFrame | None:
-    """Urls already extracted *in the same mode* — a layout-only run must not
-    mark urls complete for full extraction (and vice versa).
+    """The (url_bucket, url) keys already extracted *in the same mode* — a
+    layout-only run must not mark urls complete for full extraction (and
+    vice versa).
 
     Only a genuinely-absent results table means "first run": any OTHER read
     failure (permissions blip, corrupt footer, eventual consistency) is
@@ -115,10 +120,12 @@ def completed_urls(spark: SparkSession, results_path: str, mode: str = "full") -
     re-append duplicates for the whole input, which at 10^12 rows is a very
     expensive way to learn the directory was briefly unlistable.
 
-    A table in the old hive layout (``url_bucket=K/`` directories) is
-    refused with ValueError before the run writes anything: flat files
-    appended beside those directories would make every later read fail with
-    Spark's "conflicting directory structures"."""
+    Two older layouts are refused with ValueError before the run writes
+    anything, each naming its one-line rewrite: ``url_bucket=K/`` directories
+    (flat files appended beside them would make every later read fail with
+    Spark's "conflicting directory structures"), and a table written before
+    the url_bucket column existed (files with and without it in one
+    directory would give the table two schemas)."""
     try:
         df = spark.read.parquet(results_path)
     except AnalysisException as exc:
@@ -132,10 +139,53 @@ def completed_urls(spark: SparkSession, results_path: str, mode: str = "full") -
             "rewrite it once into the flat layout with "
             "spark.read.parquet(old).write.parquet(new) and resume into new"
         )
+    if "url_bucket" not in df.columns:
+        raise ValueError(
+            f"{results_path} has no url_bucket column (written before the "
+            "bucketed layout); rewrite it once with "
+            'spark.read.parquet(old).withColumn("url_bucket", '
+            "scale.url_bucket_col()).write.parquet(new) and resume into new"
+        )
     if "mode" in df.columns:
         df = df.filter(F.col("mode") == mode)
-    cols = ["url_bucket", "url"] if "url_bucket" in df.columns else ["url"]
-    return df.select(*cols)
+    return df.select("url_bucket", "url")
+
+
+def _resume(spark: SparkSession, pages: DataFrame, path: str, mode: str,
+            transform, summarize, metrics_path: str | None = None) -> dict:
+    """The checkpoint-resume run both jobs share: anti-join ``pages`` against
+    the urls already in ``path`` for ``mode``, ``transform`` the rest,
+    ``summarize`` the persisted result into the summary's counts (one
+    aggregate job; ``pages`` among them), append it bucket-sorted with
+    ``run_id``/``mode``, and append its per-partition metrics to
+    ``metrics_path`` when given. The result is unpersisted on every exit,
+    a failed write included."""
+    run_id = uuid.uuid4().hex
+    done = completed_urls(spark, path, mode)
+    todo = pages
+    if done is not None:
+        # anti-join on (url_bucket, url): with a bucket-partitioned Iceberg
+        # table both sides arrive bucket-aligned (storage-partitioned join)
+        todo = (
+            pages.withColumn("url_bucket", url_bucket_col())
+            .join(done, ["url_bucket", "url"], "left_anti")
+            .drop("url_bucket")
+        )
+    res = transform(todo).persist()
+    try:
+        counts = summarize(res)
+        if counts["pages"] == 0:
+            return {"run_id": run_id, "pages": 0, "resumed": done is not None}
+        out = (res.withColumn("run_id", F.lit(run_id))
+               .withColumn("mode", F.lit(mode))
+               .withColumn("url_bucket", url_bucket_col()))
+        write_table(out, path, cluster_by=("url_bucket", "url"))
+        if metrics_path is not None:
+            write_table(metrics_df(res).withColumn("run_id", F.lit(run_id)),
+                        metrics_path)
+    finally:
+        res.unpersist()
+    return {"run_id": run_id, **counts, "resumed": done is not None}
 
 
 def run_with_resume(
@@ -152,46 +202,18 @@ def run_with_resume(
     results + per-partition metrics. Returns a small run summary dict.
     ``model_blob``: optional TWSM2 trained-weight blob shipped to workers
     (see pipeline.ocr_pages)."""
-    results_path = f"{out_dir}/results"
-    metrics_path = f"{out_dir}/metrics"
-    run_id = uuid.uuid4().hex
-    mode = "full" if with_text else "layout"
 
-    done = completed_urls(spark, results_path, mode)
-    # a pre-bucketing results table keeps its legacy layout without the
-    # url_bucket column: files with and without it in one directory would
-    # give the table two schemas
-    legacy = done is not None and "url_bucket" not in done.columns
-    if done is None:
-        todo = pages
-    elif not legacy:
-        # anti-join on (url_bucket, url): with a bucket-partitioned Iceberg
-        # table both sides arrive bucket-aligned (storage-partitioned join)
-        todo = (
-            pages.withColumn("url_bucket", url_bucket_col())
-            .join(done, ["url_bucket", "url"], "left_anti")
-            .drop("url_bucket")
-        )
-    else:  # pre-bucketing layout (older results tables)
-        todo = pages.join(done, "url", "left_anti")
+    def summarize(res: DataFrame) -> dict:
+        n, errors = res.agg(F.count("*"), F.count("error")).first()
+        return {"pages": n, "errors": errors}
 
-    res = ocr_pages(todo, with_text=with_text, recognizer=recognizer,
-                    model_blob=model_blob,
-                    num_partitions=num_partitions).persist()
-    n, errors = res.agg(F.count("*"), F.count("error")).first()
-    if n == 0:
-        res.unpersist()
-        return {"run_id": run_id, "pages": 0, "resumed": done is not None}
-
-    out = res.withColumn("run_id", F.lit(run_id)).withColumn("mode", F.lit(mode))
-    if legacy:
-        write_table(out, results_path)
-    else:
-        write_table(out.withColumn("url_bucket", url_bucket_col()),
-                    results_path, cluster_by=("url_bucket", "url"))
-    write_table(metrics_df(res).withColumn("run_id", F.lit(run_id)), metrics_path)
-    res.unpersist()
-    return {"run_id": run_id, "pages": n, "errors": errors, "resumed": done is not None}
+    return _resume(
+        spark, pages, f"{out_dir}/results", "full" if with_text else "layout",
+        lambda todo: ocr_pages(todo, with_text=with_text, recognizer=recognizer,
+                               model_blob=model_blob,
+                               num_partitions=num_partitions),
+        summarize, metrics_path=f"{out_dir}/metrics",
+    )
 
 
 def run_extract_with_resume(
@@ -210,37 +232,17 @@ def run_extract_with_resume(
     summary; per-partition lineage for the heavy OCR branch stays available
     via the run_with_resume path (the HTML/PDF branches are pure expressions
     with no Python stage to instrument)."""
-    path = f"{out_dir}/extracted"
-    run_id = uuid.uuid4().hex
-    done = completed_urls(spark, path, mode="extract")
-    legacy = done is not None and "url_bucket" not in done.columns
-    if done is None:
-        todo = pages
-    elif not legacy:
-        todo = (
-            pages.withColumn("url_bucket", url_bucket_col())
-            .join(done, ["url_bucket", "url"], "left_anti")
-            .drop("url_bucket")
-        )
-    else:
-        todo = pages.join(done, "url", "left_anti")
 
-    res = extract_any(todo, recognizer=recognizer,
-                      num_partitions=num_partitions,
-                      model_blob=model_blob).persist()
-    per_kind = res.groupBy("kind").agg(F.count("*"), F.count("error")).collect()
-    kinds = {kind: rows for kind, rows, _ in per_kind}
-    n = sum(kinds.values())
-    if n == 0:
-        res.unpersist()
-        return {"run_id": run_id, "pages": 0, "resumed": done is not None}
-    errors = sum(errs for _, _, errs in per_kind)
-    out = res.withColumn("run_id", F.lit(run_id)).withColumn("mode", F.lit("extract"))
-    if legacy:
-        write_table(out, path)
-    else:
-        write_table(out.withColumn("url_bucket", url_bucket_col()),
-                    path, cluster_by=("url_bucket", "url"))
-    res.unpersist()
-    return {"run_id": run_id, "pages": n, "errors": errors, "kinds": kinds,
-            "resumed": done is not None}
+    def summarize(res: DataFrame) -> dict:
+        per_kind = res.groupBy("kind").agg(F.count("*"), F.count("error")).collect()
+        kinds = {kind: rows for kind, rows, _ in per_kind}
+        return {"pages": sum(kinds.values()),
+                "errors": sum(errs for _, _, errs in per_kind), "kinds": kinds}
+
+    return _resume(
+        spark, pages, f"{out_dir}/extracted", "extract",
+        lambda todo: extract_any(todo, recognizer=recognizer,
+                                 num_partitions=num_partitions,
+                                 model_blob=model_blob),
+        summarize,
+    )

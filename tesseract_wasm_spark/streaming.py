@@ -4,7 +4,7 @@ The reference's async OCRClient processes pages as they arrive and reports
 progress out-of-band (src/ocr-client.ts:53-263). The Spark-native analog is a
 file/Iceberg stream: ``readStream`` over the pages table -> the same
 ``mapInPandas`` extraction (stateless per page, so it composes with streaming
-with no watermark needed) -> ``writeStream`` with exactly-once checkpointing.
+with no watermark needed) -> a parquet sink with exactly-once checkpointing.
 
 The streaming checkpoint gives the north rule's resume semantics for free in
 the continuous-ingest deployment: a restarted query reprocesses only
@@ -13,11 +13,28 @@ uncommitted source files, and every micro-batch appends per-partition metrics.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from tesseract_wasm_spark.fixtures import PAGES_DDL
-from tesseract_wasm_spark.pipeline import ocr_pages
+from tesseract_wasm_spark.pipeline import extract_any, ocr_pages
+
+
+def _start(df: DataFrame, output_path: str, checkpoint_path: str,
+           available_now: bool) -> StreamingQuery:
+    """Append ``df`` to parquet at ``output_path`` under an exactly-once
+    checkpoint; ``available_now`` drains what is there and stops. Append
+    mode: a watermarked aggregation emits each window once the watermark
+    passes it."""
+    writer = (
+        df.writeStream.format("parquet")
+        .option("path", output_path)
+        .option("checkpointLocation", checkpoint_path)
+        .outputMode("append")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def read_pages_stream(spark: SparkSession, input_path: str,
@@ -35,7 +52,6 @@ def ocr_stream(
     checkpoint_path: str,
     *,
     available_now: bool = True,
-    with_text: bool = True,
 ) -> StreamingQuery:
     """Continuous extraction: new page files -> OCR results parquet.
 
@@ -47,17 +63,8 @@ def ocr_stream(
     sources already split by file, and streaming repartition would force a
     stateful shuffle per micro-batch.
     """
-    pages = read_pages_stream(spark, input_path)
-    results = ocr_pages(pages, with_text=with_text, rebalance=False)
-    writer = (
-        results.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    results = ocr_pages(read_pages_stream(spark, input_path), rebalance=False)
+    return _start(results, output_path, checkpoint_path, available_now)
 
 
 def extract_stream(
@@ -70,21 +77,10 @@ def extract_stream(
 ) -> StreamingQuery:
     """Continuous MIXED-payload extraction: new page files -> (url, kind,
     text_out, error) parquet, dispatching DRF/PDF/HTML exactly like the batch
-    pipeline.extract_any (the union of pruned branches composes with
-    Structured Streaming because every branch is stateless per row)."""
-    from tesseract_wasm_spark.pipeline import extract_any  # noqa: PLC0415
-
-    pages = read_pages_stream(spark, input_path)
-    results = extract_any(pages, rebalance=False)
-    writer = (
-        results.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    pipeline.extract_any (its single-scan plan composes with Structured
+    Streaming because every row is extracted statelessly)."""
+    results = extract_any(read_pages_stream(spark, input_path), rebalance=False)
+    return _start(results, output_path, checkpoint_path, available_now)
 
 
 def dedup_stream(
@@ -105,22 +101,12 @@ def dedup_stream(
     together in event time; cross-horizon dedup belongs to the batch
     pipeline, dedup.exact_duplicates)."""
     pages = read_pages_stream(spark, input_path)
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
     keyed = (
         pages.withColumn("content_md5", F.md5(F.col("html")))
         .withWatermark("warc_ts", watermark)
         .dropDuplicatesWithinWatermark(["content_md5"])
     )
-    writer = (
-        keyed.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(keyed, output_path, checkpoint_path, available_now)
 
 
 def ingest_metrics_stream(
@@ -138,8 +124,6 @@ def ingest_metrics_stream(
     still count and state is bounded — the Structured Streaming shape for the
     north rule's continuous metrics table (watermark + windowed aggregation;
     the reference's progress stream P13 generalized to event time)."""
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
     pages = read_pages_stream(spark, input_path)
     agg = (
         pages.withWatermark("warc_ts", watermark)
@@ -156,12 +140,4 @@ def ingest_metrics_stream(
             "payload_bytes",
         )
     )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")  # append mode: windows emit once the watermark passes
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(agg, output_path, checkpoint_path, available_now)

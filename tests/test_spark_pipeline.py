@@ -309,22 +309,66 @@ def test_resume_refuses_hive_layout(spark, pages, tmp_path, run, table):
     assert listing() == before
 
 
-def test_resume_pre_bucketing_fallback(spark, pages, tmp_path):
-    """A results table written BEFORE the bucketed layout (no url_bucket
-    column) must still resume correctly through the url-only anti-join."""
-    from tesseract_wasm_spark.pipeline import ocr_pages as _ocr
+@pytest.mark.parametrize("run,table,mode", [(run_with_resume, "results", "full"),
+                                            (run_extract_with_resume, "extracted", "extract")],
+                         ids=["ocr", "extract"])
+def test_resume_refuses_unbucketed_table(spark, pages, tmp_path, run, table, mode):
+    """A results table written before the url_bucket column existed stops
+    the run before anything is written; the rewrite its message names makes
+    it resumable, and the resumed run processes only the urls it lacks."""
+    import os
+    import re
 
-    out = str(tmp_path / "old")
-    first = pages.limit(5)
-    # simulate the old layout: write results directly, unbucketed
-    res = _ocr(first)
-    (res.withColumn("run_id", F.lit("legacy")).withColumn("mode", F.lit("full"))
-        .write.mode("append").parquet(f"{out}/results"))
-    s = run_with_resume(spark, pages, out)
-    assert s["resumed"] is True
-    assert s["pages"] == pages.count() - 5
-    got = spark.read.parquet(f"{out}/results")
-    assert got.select("url").distinct().count() == pages.count()
+    from tesseract_wasm_spark import scale
+    from tesseract_wasm_spark.pipeline import extract_any
+
+    urls = sorted(r["url"] for r in pages.select("url").collect())
+    old_urls = urls[:5]
+    transform = ocr_pages if mode == "full" else extract_any
+    old = str(tmp_path / "old")
+    (transform(pages.filter(F.col("url").isin(old_urls)))
+        .withColumn("run_id", F.lit("old")).withColumn("mode", F.lit(mode))
+        .write.parquet(f"{old}/{table}"))
+
+    def listing():
+        return sorted(os.path.join(r, n) for r, _d, names in os.walk(old) for n in names)
+
+    before = listing()
+    hint = ('spark.read.parquet(old).withColumn("url_bucket", '
+            "scale.url_bucket_col()).write.parquet(new)")
+    with pytest.raises(ValueError, match=re.escape(hint)):
+        run(spark, pages, old)
+    assert listing() == before
+
+    new = str(tmp_path / "new")
+    (spark.read.parquet(f"{old}/{table}")
+        .withColumn("url_bucket", scale.url_bucket_col()).write.parquet(f"{new}/{table}"))
+    s = run(spark, pages, new)
+    assert s["resumed"] is True and s["pages"] == len(urls) - 5
+    got = spark.read.parquet(f"{new}/{table}")
+    fresh = [r["url"] for r in got.filter(F.col("run_id") != "old").select("url").collect()]
+    assert sorted(fresh) == urls[5:]
+    assert got.count() == len(urls)
+
+
+@pytest.mark.parametrize("run", [run_with_resume, run_extract_with_resume],
+                         ids=["ocr", "extract"])
+def test_failed_write_releases_cache(spark, pages, tmp_path, monkeypatch, run):
+    """A results write that raises still unpersists the job's result frame:
+    the session holds no more persisted RDDs afterwards than before."""
+    from tesseract_wasm_spark import scale
+
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    def failing_write(*_args, **_kw):
+        raise OSError("write failed")
+
+    monkeypatch.setattr(scale, "write_table", failing_write)
+    before = persisted()
+    with pytest.raises(OSError, match="write failed"):
+        run(spark, pages, str(tmp_path / "fail"))
+    assert persisted() <= before
 
 
 def test_extract_any_text_matches_oriented_engine(spark):

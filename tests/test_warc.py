@@ -87,6 +87,7 @@ def test_extract_job_warc_input(spark, tmp_path):
     import json
     import subprocess
     import sys
+    from pathlib import Path
 
     page = (b"<html><head><title>t</title></head><body>"
             b"<article><p>cli warc ingestion works</p></article></body></html>")
@@ -97,7 +98,7 @@ def test_extract_job_warc_input(spark, tmp_path):
         [sys.executable, "jobs/extract_job.py",
          "--input", str(tmp_path / "*.warc.gz"), "--input-format", "warc",
          "--mode", "mixed", "--output", str(tmp_path / "out"), "--cores", "2"],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=Path(__file__).resolve().parents[1], check=True,
     )
     summary = json.loads(out.stderr.strip().splitlines()[-1])
     assert summary["pages"] == 1 and summary["errors"] == 0
