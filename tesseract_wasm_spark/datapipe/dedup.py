@@ -182,8 +182,8 @@ def ngram_jaccard_pairs(docs: DataFrame, *, n: int = 3, threshold: float = 0.5,
     """Exact word-n-gram Jaccard similarity for candidate pairs.
 
     ``block_col`` restricts the quadratic join to within-block pairs (at scale
-    the blocks come from LSH buckets — see minhash_candidates; unblocked this
-    is the small-scale baseline / verification kernel)."""
+    the blocks come from LSH buckets — see minhash_near_duplicates; unblocked
+    this is the small-scale baseline / verification kernel)."""
     sh = _spread(docs.select("doc_id", "text", *([block_col] if block_col else []))).select(
         F.col("doc_id"), _word_ngrams(F.col("text"), n).alias("shingles"),
         *( [F.col(block_col)] if block_col else [] ),
@@ -338,32 +338,6 @@ def _minhash_params(num_perm: int, seed: int = 1) -> tuple[np.ndarray, np.ndarra
     a = rng.integers(1, MERSENNE31, size=num_perm, dtype=np.uint64)
     b = rng.integers(0, MERSENNE31, size=num_perm, dtype=np.uint64)
     return a, b
-
-
-def minhash_signatures(docs: DataFrame, *, num_perm: int = 64, ngram: int = 3,
-                       seed: int = 1) -> DataFrame:
-    """doc_id -> minhash signature (array<long>), one vectorized pandas pass.
-
-    The whole batch is hashed at once (_token_hashes_batch) and the
-    permutation min-reduce is one [n_shingles, num_perm] uint64 broadcast per
-    batch followed by a segmented ``minimum.reduceat`` per document — all
-    arithmetic in C, no per-token or per-doc Python. Duplicate shingles need
-    no dedup: min is idempotent."""
-    a_params, b_params = _minhash_params(num_perm, seed)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            h1, h2, counts = _token_hashes_batch(list(pdf["text"]))
-            sh, doc_bounds = _shingle_hashes_batch(h1, h2, counts, ngram, seed)
-            sigs = _minhash_min_reduce(sh, doc_bounds, a_params, b_params)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(),
-                 "signature": list(sigs.astype(np.int64))}
-            )
-
-    return _spread(docs.select("doc_id", "text")).mapInPandas(
-        run, schema="doc_id long, signature array<long>"
-    )
 
 
 def _minhash_min_reduce(sh: np.ndarray, doc_bounds: np.ndarray,
@@ -569,47 +543,6 @@ def minhash_banded(docs: DataFrame, *, num_perm: int = 64, bands: int = 16,
 
     return _spread(docs.select("doc_id", "text")).mapInPandas(
         run, schema="doc_id long, band_id int, bucket long"
-    )
-
-
-def minhash_candidates(signatures: DataFrame, *, bands: int = 16,
-                       max_bucket: int | None = DEFAULT_MAX_BUCKET) -> DataFrame:
-    """LSH banding over a precomputed signature table: explode skinny
-    (doc_id, band_id, bucket) rows, then bucket_pairs — one groupBy shuffle of
-    ~24-byte rows, no signature arrays in flight, no self-join."""
-    banded = signatures.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.hash(
-                    F.slice(
-                        "signature",
-                        i * (F.size("signature") / bands).cast("int") + 1,
-                        (F.size("signature") / bands).cast("int"),
-                    )
-                ),
-            )
-        ).alias("band_id", "bucket"),
-    )
-    return bucket_pairs(banded, ["band_id", "bucket"], max_bucket=max_bucket)
-
-
-def minhash_estimate_jaccard(signatures: DataFrame, candidates: DataFrame) -> DataFrame:
-    """Optional: estimated jaccard = full-signature agreement rate for given
-    candidate pairs (joins the signature table twice — only pay this when the
-    estimate is actually consumed; the near-dup pipeline verifies exactly
-    instead)."""
-    sig_a = signatures.select(F.col("doc_id").alias("doc_a"), F.col("signature").alias("sig_a"))
-    sig_b = signatures.select(F.col("doc_id").alias("doc_b"), F.col("signature").alias("sig_b"))
-    est = F.round(
-        F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m))
-        .cast("double") / F.size("sig_a"),
-        6,
-    )
-    return (
-        candidates.join(sig_a, "doc_a").join(sig_b, "doc_b")
-        .select("doc_a", "doc_b", est.alias("est_jaccard"))
     )
 
 

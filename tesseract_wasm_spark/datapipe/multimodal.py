@@ -2,10 +2,10 @@
 
 Image/audio/video payloads are treated as opaque ``binary`` columns with typed
 metadata extracted/attached by Arrow-batched UDFs. The container has no
-imaging/audio libraries, so the *decode* kernels for foreign formats are
-explicit stubs (NotImplementedError) — but the Spark-side plumbing (schemas,
-batching, partitioning, UDF signatures) is real and tested against the DRF
-payloads our own corpus uses.
+imaging/audio libraries, so foreign formats are recognized by magic bytes
+and reported as not decodable; the Spark-side plumbing (schemas, batching,
+partitioning, UDF signatures) is real and tested against the DRF payloads
+our own corpus uses.
 
 At 100 TB: payload columns dominate bytes; every operator here prunes to
 (key, payload) before the UDF and emits compact metadata, so downstream
@@ -66,36 +66,6 @@ def media_metadata(pages: DataFrame) -> DataFrame:
             ])
 
     return pages.select("url", "html").mapInPandas(run, schema=MEDIA_META_DDL)
-
-
-def decode_foreign_image(payload: bytes) -> np.ndarray:
-    """STUB: JPEG/PNG/WEBP pixel decode requires an imaging library that this
-    container does not ship. The DRF path (drf.decode) is the real decoder."""
-    raise NotImplementedError(
-        "foreign image decode requires an imaging library (Pillow/cv2); "
-        "use DRF payloads in this environment"
-    )
-
-
-def decode_audio(payload: bytes) -> np.ndarray:
-    """STUB: audio decode (wav/mp3/flac) requires an audio library this
-    container does not ship; the Spark-side plumbing (binary column in,
-    feature rows out via mapInPandas) is the tested part."""
-    raise NotImplementedError(
-        "audio decode requires an audio library (soundfile/librosa); "
-        "plug the decoder into audio_features' inner loop"
-    )
-
-
-def frame_sample(payload: bytes, every_n: int = 30) -> list[np.ndarray]:
-    """STUB: video frame sampling requires a video decoder (pyav/ffmpeg).
-    The batching/partitioning shape is identical to thumbnails(): prune to
-    (key, payload), decode inside the Arrow batch, emit one row per sampled
-    frame with (url, frame_idx, thumb binary)."""
-    raise NotImplementedError(
-        "video decode requires pyav/ffmpeg; use frame_sample_df's plumbing "
-        "with a real decoder at deployment"
-    )
 
 
 THUMBNAIL_DDL = "url string, thumb binary, thumb_w int, thumb_h int"

@@ -2261,7 +2261,7 @@ def ocr_text_degraded(spark, sf_dir):
     from tesseract_wasm_spark.outputs import page_text_df  # noqa: PLC0415
     from tesseract_wasm_spark.pipeline import ocr_pages  # noqa: PLC0415
 
-    return page_text_df(ocr_pages(degraded_df(spark)))
+    return page_text_df(ocr_pages(degraded_df(spark), with_orientation=False))
 
 
 SQL_OCR_TEXT_DEGRADED = f"""
@@ -2686,7 +2686,8 @@ def ocr_text_lstm(spark, sf_dir):
         for pdf in batches:
             out = []
             for url, payload, lang in zip(pdf["url"], pdf["html"], pdf["lang"]):
-                res = process_page(bytes(payload), recognizer="lstm", lang=lang)
+                res = process_page(bytes(payload), with_orientation=False,
+                                   recognizer="lstm", lang=lang)
                 if res.error is None:  # same error-null surface as ocr_text
                     out.append({"url": url, "text_out": res.page_text})
             yield pd.DataFrame(out, columns=["url", "text_out"])

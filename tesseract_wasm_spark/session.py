@@ -72,6 +72,16 @@ def get_spark(
         # (O6 in SURVEY.md §4 — the reference caps its heap at 1 GB)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # compile each generated class once per JVM, as the reference builds
+        # its engine once per worker. Spark's JVM-wide cache of Janino
+        # classes (whole-stage code, projections, orderings, predicates)
+        # holds 100 by default, split over 4 Guava segments of 25. One pass
+        # of the five benchmarked dedup queries needs 93+ classes and the
+        # 68-entry registry 566, so a repeated query compiled (and the JIT
+        # compiled) every class again. 1000 leaves room for the OCR and
+        # streaming plans sharing the JVM. Static: a session not built here
+        # must set it at launch (README, generated-class cache).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -1,7 +1,8 @@
 """session.ship_package: ships the package zip once per context and lets
 every failure other than "already shipped" raise.
 session.install_zip_cache_check: inside a Spark Python worker, zip importers
-re-read their archive on invalidate_caches only when its stat stamp moved."""
+re-read their archive on invalidate_caches only when its stat stamp moved.
+session.get_spark: a repeated query reuses its generated classes."""
 
 from __future__ import annotations
 
@@ -14,7 +15,10 @@ import zipimport
 import pytest
 from pyspark import TaskContext
 
+from perfbench import inputs
+from tesseract_wasm_spark import queries
 from tesseract_wasm_spark.session import install_zip_cache_check, ship_package
+from test_oracle_parity import SF_DIR
 
 needs_eager_reread = pytest.mark.skipif(
     sys.version_info >= (3, 13),
@@ -171,3 +175,21 @@ def test_workers_stat_check_and_still_see_a_new_py_file(spark, tmp_path):
 
     rows = sc.parallelize(range(n), n).mapPartitions(late).collect()
     assert rows and all(checked and value == 42 for _pid, checked, value in rows)
+
+
+def test_repeated_queries_compile_nothing(spark):
+    """The codegen cache holds every class the five benchmarked dedup and
+    similarity queries generate, so a second pass compiles none. With
+    Spark's default bound of 100 the pass evicts its own classes and
+    compiles about 90 again; a Spark that drops or renames the conf fails
+    here the same way."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def one_pass():
+        before = compiles.getCount()
+        for name in inputs.DEDUP_QUERIES:
+            assert queries.REGISTRY[name][0](spark, SF_DIR).collect()
+        return compiles.getCount() - before
+
+    one_pass()
+    assert one_pass() == 0
