@@ -179,10 +179,13 @@ def test_workers_stat_check_and_still_see_a_new_py_file(spark, tmp_path):
 
 def test_repeated_queries_compile_nothing(spark):
     """The codegen cache holds every class the five benchmarked dedup and
-    similarity queries generate, so a second pass compiles none. With
-    Spark's default bound of 100 the pass evicts its own classes and
-    compiles about 90 again; a Spark that drops or renames the conf fails
-    here the same way."""
+    similarity queries generate, so repeating them compiles nothing. With
+    Spark's default bound of 100 every pass evicts its own classes and
+    compiles about 110 of them again; a Spark that drops or renames the
+    conf fails here the same way. ``dedup_minhash``'s generated code varies
+    from run to run (a first pass compiled 37 or 40 of its classes, and a
+    repeated pass sometimes 4 or 7 new ones); each variant compiles once,
+    so the passes are repeated until one compiles nothing."""
     compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
 
     def one_pass():
@@ -192,4 +195,7 @@ def test_repeated_queries_compile_nothing(spark):
         return compiles.getCount() - before
 
     one_pass()
-    assert one_pass() == 0
+    repeated = [one_pass()]
+    while repeated[-1] and len(repeated) < 5:
+        repeated.append(one_pass())
+    assert repeated[-1] == 0, repeated
