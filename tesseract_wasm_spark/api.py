@@ -47,6 +47,7 @@ class OCREngine:
         self._image: np.ndarray | None = None
         self._result: PageResult | None = None
         self._layout_result: PageResult | None = None
+        self._orientation: tuple[int, float] | None = None
         self._variables = VariableStore()
 
     # --- model / image lifecycle -------------------------------------
@@ -80,6 +81,7 @@ class OCREngine:
         self._image = None
         self._result = None
         self._layout_result = None
+        self._orientation = None
         if isinstance(image, (bytes, bytearray)):
             rgba = drf.decode(bytes(image))  # raises with reference messages
         elif isinstance(image, dict):
@@ -109,6 +111,7 @@ class OCREngine:
         self._image = None
         self._result = None
         self._layout_result = None
+        self._orientation = None
 
     # --- variables ----------------------------------------------------
     def getVariable(self, name: str) -> str:
@@ -121,6 +124,7 @@ class OCREngine:
         # engine ahead of the next DoOCR (src/lib.cpp:150-170)
         self._result = None
         self._layout_result = None
+        self._orientation = None
 
     # --- queries ------------------------------------------------------
     def _check_image(self) -> np.ndarray:
@@ -147,7 +151,7 @@ class OCREngine:
                 for pct in (0, 50):
                     on_progress(pct)
             self._result = process_rgba(
-                img, with_text=True, with_orientation=True,
+                img, with_text=True, with_orientation=False,
                 variables=self._variables.as_dict(), lang=self._lang,
             )
         if on_progress:
@@ -162,7 +166,7 @@ class OCREngine:
             return self._result
         if self._layout_result is None:
             self._layout_result = process_rgba(
-                img, with_text=False, with_orientation=True,
+                img, with_text=False, with_orientation=False,
                 variables=self._variables.as_dict(),
             )
         return self._layout_result
@@ -192,8 +196,17 @@ class OCREngine:
         return self._ocr(on_progress).page_text
 
     def getOrientation(self) -> dict:
-        res = self._layout() if self._result is None else self._result
-        return {"rotation": res.rotation, "confidence": res.orient_confidence}
+        """Computed on the first call only: text and layout queries skip the
+        orientation pass, which is the page's costliest stage."""
+        img = self._check_image()
+        if self._orientation is None:
+            res = process_rgba(
+                img, with_text=False, with_orientation=True,
+                variables=self._variables.as_dict(),
+            )
+            self._orientation = (res.rotation, res.orient_confidence)
+        rotation, confidence = self._orientation
+        return {"rotation": rotation, "confidence": confidence}
 
     def getHOCR(self, on_progress=None) -> str:
         """Single-page hOCR via the same renderer the DataFrame path uses."""

@@ -21,9 +21,11 @@ descender ink, so the upright axis scores strongly positive, the 180° flip
 strongly negative, and a sideways page — whose y-band "lines" are implausibly
 short — scores ~0.
 
-All counting is whole-line-strip numpy row sums (no per-component work); the
-caller passes the already-computed segmentation for the upright axis so only
-the 90° axis costs an extra labeling pass.
+All counting is differences of one running row sum (no per-line or
+per-component Python work). The caller passes the already-computed
+segmentation for the upright axis; the 90° axis (and the upright center band
+of a page over 320 rows) costs one labeling and no objects: ``line_stats``
+gives each line's top, bottom, baseline and word count as arrays.
 """
 
 from __future__ import annotations
@@ -31,7 +33,7 @@ from __future__ import annotations
 import numpy as np
 
 from tesseract_wasm_spark.engine.components import label_components
-from tesseract_wasm_spark.engine.segment import Line, segment
+from tesseract_wasm_spark.engine.segment import Line, line_stats
 from tesseract_wasm_spark.font import BASELINE_ROW, CELL_H, XHEIGHT_TOP
 
 DECISION_MARGIN = 5.0  # reference: src/lib.cpp:280 "fabs(up_confidence) - fabs(left_confidence) > 5.0"
@@ -46,28 +48,35 @@ SCALE = 2.5
 
 
 def updown_score(mask: np.ndarray, lines: list[Line] | None = None) -> float:
-    """Ascender-vs-descender z-score over plausible text-line strips."""
+    """Ascender-vs-descender z-score over plausible text-line strips.
+
+    ``lines``: the mask's segmentation when the caller already has it;
+    otherwise the mask is labeled and only its per-line stats are built."""
     if lines is None:
-        lines = segment(label_components(mask))
-    if not lines:
+        stats = line_stats(label_components(mask))
+    else:
+        stats = np.array(
+            [(ln.top, ln.bottom, ln.baseline, len(ln.words)) for ln in lines], dtype=np.int64
+        ).reshape(-1, 4).T
+    top, bottom, baseline, n_words = stats
+    if len(top) == 0:
         return 0.0
-    # one row-sum pass over the whole mask serves every line strip
+    # one row-sum pass over the whole mask serves every line strip: strip
+    # sums are differences of its running sum
     row_ink = mask.sum(axis=1, dtype=np.int64)
     total_ink = int(row_ink.sum())
     if total_ink == 0:
         return 0.0
-    asc = desc = 0
-    valid_ink = 0
-    for line in lines:
-        height = line.bottom - line.top + 1
-        if not (MIN_LINE_HEIGHT <= height <= MAX_LINE_HEIGHT) or len(line.words) < 2:
-            continue
-        xheight_top = line.baseline - (BASELINE_ROW - XHEIGHT_TOP)  # baseline - 4
-        strip = row_ink[line.top : line.bottom + 1]
-        rows = np.arange(line.top, line.bottom + 1)
-        asc += int(strip[rows < xheight_top].sum())
-        desc += int(strip[rows > line.baseline].sum())
-        valid_ink += int(strip.sum())
+    cum = np.concatenate(([0], np.cumsum(row_ink)))
+    height = bottom - top + 1
+    ok = (MIN_LINE_HEIGHT <= height) & (height <= MAX_LINE_HEIGHT) & (n_words >= 2)
+    top, bottom, baseline = top[ok], bottom[ok], baseline[ok]
+    end = bottom + 1
+    xheight_top = baseline - (BASELINE_ROW - XHEIGHT_TOP)  # baseline - 4
+    # ascender rows: [top, xheight_top); descender rows: (baseline, bottom]
+    asc = int((cum[np.maximum(xheight_top, top)] - cum[top]).sum())
+    desc = int((cum[end] - cum[np.minimum(baseline + 1, end)]).sum())
+    valid_ink = int((cum[end] - cum[top]).sum())
     if valid_ink / total_ink < MIN_VALID_INK_FRACTION:
         return 0.0
     return float(SCALE * (asc - desc) / np.sqrt(asc + desc + 1.0))

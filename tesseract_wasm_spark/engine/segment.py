@@ -25,6 +25,7 @@ Algorithm (deterministic, font-geometry aware — see font.py; vectorized):
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 import numpy as np
 
@@ -62,25 +63,6 @@ class Line:
     @property
     def right(self) -> int:
         return max(w.right for w in self.words)
-
-
-def estimate_baseline(bottoms: np.ndarray) -> int:
-    """Baseline row from component bottoms. Non-descender glyphs bottom at the
-    baseline; descenders exactly DESC_ROWS below it. If both populations are
-    present the smaller value is the baseline; otherwise the mode wins."""
-    vals, counts = np.unique(bottoms, return_counts=True)
-    best_v, best_support = None, -1
-    lookup = dict(zip(vals.tolist(), counts.tolist()))
-    for v, c in lookup.items():
-        partner = lookup.get(v + DESC_ROWS)
-        if partner is not None and 2 * c + partner > best_support:
-            # baseline-row bottoms weighted double: non-descender glyphs always
-            # dominate a real text line, so a speck pairing with the true
-            # baseline row can't outvote the true (baseline, descender) pair
-            best_v, best_support = v, 2 * c + partner
-    if best_v is not None:
-        return int(best_v)
-    return int(vals[np.argmax(counts)])
 
 
 #: minimum blank-column run that counts as a column gutter: wider than any
@@ -129,9 +111,21 @@ def subset(comps: Components, idx: np.ndarray) -> Components:
     )
 
 
-def segment(comps: Components) -> list[Line]:
-    if comps.n == 0:
-        return []
+class _LineArrays(NamedTuple):
+    """Array core of the segmentation: components in (line, left) order."""
+
+    line: np.ndarray  # line id of each component
+    left: np.ndarray
+    top: np.ndarray
+    right: np.ndarray
+    bottom: np.ndarray
+    word_break: np.ndarray  # True where a component starts a new word
+    line_top: np.ndarray  # per line
+    line_bottom: np.ndarray
+    baseline: np.ndarray
+
+
+def _line_arrays(comps: Components) -> _LineArrays:
     order = np.argsort(comps.top, kind="stable")
     tops = comps.top[order]
     bottoms = comps.bottom[order]
@@ -159,27 +153,18 @@ def segment(comps: Components) -> list[Line]:
     new_line[1:] = li2[1:] != li2[:-1]
     wbreaks = new_line.copy()
     wbreaks[1:] |= lefts[1:] - runmax[:-1] - 1 >= ADV
-    wids = np.cumsum(wbreaks) - 1
-    n_words = int(wids[-1] + 1)
 
-    imax = np.iinfo(np.int64).max
-    wl = np.full(n_words, imax); wt = np.full(n_words, imax)
-    wr = np.full(n_words, -1); wb = np.full(n_words, -1)
-    np.minimum.at(wl, wids, lefts)
-    np.minimum.at(wt, wids, ctops)
-    np.maximum.at(wr, wids, rights)
-    np.maximum.at(wb, wids, cbots)
-    word_line = li2[wbreaks]  # line id of each word (its first component)
+    # each line is one contiguous segment of this order
+    line_start = np.flatnonzero(new_line)
+    lt = np.minimum.reduceat(ctops, line_start)
+    lb = np.maximum.reduceat(cbots, line_start)
 
-    # per-line stats
-    lt = np.full(n_lines, imax); lb = np.full(n_lines, -1)
-    np.minimum.at(lt, li2, ctops)
-    np.maximum.at(lb, li2, cbots)
-
-    # vectorized baseline per line (same rule as estimate_baseline): histogram
-    # of bottoms relative to line top; among values whose +DESC_ROWS twin also
-    # occurs, the best-supported pair wins (count + twin count — a lone noise
-    # blob can't hijack the baseline); else the mode.
+    # baseline per line: histogram of bottoms relative to line top; among
+    # values whose +DESC_ROWS twin also occurs, the pair with the most
+    # support wins, baseline-row bottoms counted twice (non-descender glyphs
+    # dominate a real text line, so a speck pairing with the true baseline
+    # row can't outvote the true (baseline, descender) pair); with no such
+    # pair, the mode wins. Ties go to the smaller row.
     bins = 64
     rel = np.minimum(cbots - lt[li2], bins - 1 - DESC_ROWS)
     counts = np.bincount(li2 * bins + rel, minlength=n_lines * bins).reshape(n_lines, bins)
@@ -193,24 +178,50 @@ def segment(comps: Components) -> list[Line]:
     baseline_rel = np.where(
         has_pair, np.argmax(pair_support, axis=1), np.argmax(counts, axis=1)
     )
-    baselines = lt + baseline_rel
+    return _LineArrays(li2, lefts, ctops, rights, cbots, wbreaks, lt, lb, lt + baseline_rel)
 
-    lines = [
-        Line(top=int(lt[li]), bottom=int(lb[li]), baseline=int(baselines[li]))
-        for li in range(n_lines)
-    ]
-    for wi in range(n_words):
-        lines[word_line[wi]].words.append(
-            Word(left=int(wl[wi]), top=int(wt[wi]), right=int(wr[wi]), bottom=int(wb[wi]))
-        )
+
+def line_stats(comps: Components) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Per-line (top, bottom, baseline, n_words) in reading order — the
+    fields of ``segment``'s lines, without building them."""
+    if comps.n == 0:
+        empty = np.empty(0, dtype=np.int64)
+        return empty, empty, empty, empty
+    la = _line_arrays(comps)
+    n_words = np.bincount(la.line[la.word_break], minlength=len(la.line_top))
+    return la.line_top, la.line_bottom, la.baseline, n_words
+
+
+def segment(comps: Components) -> list[Line]:
+    if comps.n == 0:
+        return []
+    la = _line_arrays(comps)
+    n_lines = len(la.line_top)
+    # each word is one contiguous segment of the (line, left) order, so its
+    # first component is its leftmost
+    word_start = np.flatnonzero(la.word_break)
+    word_line = la.line[word_start]
+    wl = la.left[word_start]
+    wt = np.minimum.reduceat(la.top, word_start)
+    wr = np.maximum.reduceat(la.right, word_start)
+    wb = np.maximum.reduceat(la.bottom, word_start)
+
     # pen-phase consensus per line: word starts are congruent mod ADV on a
     # rendered page; snap each word's recognition anchor to the line's mode
-    # phase so a single speck can't shift a word's whole glyph grid
-    for line in lines:
-        phase_counts = np.bincount([w.left % ADV for w in line.words], minlength=ADV)
-        phase = int(np.argmax(phase_counts))
-        for w in line.words:
-            delta = (w.left - phase + ADV // 2) % ADV - ADV // 2
-            w.pen_left = w.left - delta
+    # phase (the smallest on a tie) so a single speck can't shift a word's
+    # whole glyph grid
+    phase_counts = np.bincount(word_line * ADV + wl % ADV, minlength=n_lines * ADV)
+    phase = np.argmax(phase_counts.reshape(n_lines, ADV), axis=1)
+    delta = (wl - phase[word_line] + ADV // 2) % ADV - ADV // 2
+    pen_left = wl - delta
+
+    lines = [
+        Line(top=t, bottom=b, baseline=bl)
+        for t, b, bl in zip(la.line_top.tolist(), la.line_bottom.tolist(), la.baseline.tolist())
+    ]
+    for li, left, top, right, bottom, pen in zip(
+        word_line.tolist(), wl.tolist(), wt.tolist(), wr.tolist(), wb.tolist(), pen_left.tolist()
+    ):
+        lines[li].words.append(Word(left, top, right, bottom, pen))
     # reading order: lines top-to-bottom, words left-to-right (by construction)
     return lines

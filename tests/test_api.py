@@ -166,6 +166,55 @@ def test_orientation_api(loaded):
     assert loaded.getOrientation() == {"rotation": 0, "confidence": 1.0}
 
 
+@pytest.fixture()
+def orientation_calls(monkeypatch):
+    """Counts orientation passes (page.py looks the function up per call)."""
+    from tesseract_wasm_spark.engine import orientation  # noqa: PLC0415
+
+    calls = []
+    real = orientation.orientation_scores
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(orientation, "orientation_scores", spy)
+    return calls
+
+
+@pytest.mark.parametrize("n_lines", [10, 60])  # 60 lines: the center-band path
+@pytest.mark.parametrize("rot", [0, 90, 180, 270])
+def test_orientation_lazy_on_rotated_pages(engine, orientation_calls, rot, n_lines):
+    engine.loadModel(MODEL)
+    engine.loadImage(render_page((SMALL_PAGE_LINES * 6)[:n_lines], rot=rot))
+    engine.getText()
+    engine.getTextBoxes("word")
+    engine.getBoundingBoxes("line")
+    assert orientation_calls == []  # text and layout never run orientation
+    want = {"rotation": rot, "confidence": 1.0}
+    assert engine.getOrientation() == want
+    assert engine.getOrientation() == want
+    assert len(orientation_calls) == 1  # memoized
+
+
+def test_orientation_memo_invalidation(engine, orientation_calls):
+    engine.loadImage(render_page(SMALL_PAGE_LINES))
+    assert engine.getOrientation() == {"rotation": 0, "confidence": 1.0}
+    engine.loadModel(MODEL)  # the model does not change orientation
+    engine.getOrientation()
+    assert len(orientation_calls) == 1
+    # a margin this wide sends every page down the left axis (src/lib.cpp:280)
+    engine.setVariable("twspark_orientation_margin", "1000")
+    assert engine.getOrientation() == {"rotation": 270, "confidence": 1.0}
+    assert len(orientation_calls) == 2
+    engine.loadImage(render_page(SMALL_PAGE_LINES, rot=90))
+    assert engine.getOrientation() == {"rotation": 90, "confidence": 1.0}
+    assert len(orientation_calls) == 3
+    engine.clearImage()
+    with pytest.raises(ValueError, match="No image loaded"):
+        engine.getOrientation()
+
+
 def test_bounding_boxes_line_unit(loaded):
     lines = loaded.getBoundingBoxes("line")
     assert len(lines) == len(SMALL_PAGE_LINES)
