@@ -58,13 +58,14 @@ class OCREngine:
             raise ValueError(ERR_MODEL_LOAD)
         try:
             if bytes(model[:5]) == b"TWSM2":
-                # trained-weight blob: registers the LSTM tensors for this
-                # process — the lstm recognizer then runs from the blob
+                # trained-weight blob: validated, and its language selected;
+                # the weights reach recognition only as an explicit
+                # lstm_model argument, never as process-global state
                 from tesseract_wasm_spark.engine.lstm_ctc import (  # noqa: PLC0415
-                    load_lstm_model,
+                    parse_lstm_model,
                 )
 
-                self._lang = load_lstm_model(model)
+                self._lang = parse_lstm_model(model)[0]
             else:
                 self._lang = parse_model(model)
         except ValueError as exc:

@@ -156,7 +156,7 @@ def make_simple_pdf(lines: list[str], *, compress: bool = False,
     whole-file binary->string cast path (pdf_text_expr) applies.
     ``compress=True``: the content stream is FlateDecode (zlib) compressed —
     the real-world shape — which requires the byte-level decode path
-    (pdf_pages_text / extract_pdf_bytes).
+    (extract_pdf_bytes, the pdf branch of pipeline.extract_any).
     ``operators="mixed"``: cycle the three show-operator forms across lines —
     literal ``Tj``, kerned-array ``TJ`` (word gaps as -240 kerns, an
     intra-word -120 nudge that must NOT become a space), and hex ``Tj`` —
@@ -1452,37 +1452,3 @@ def extract_pdf_bytes(raw: bytes, *, order: str = "stream") -> str:
     if positional:
         return "\n".join(_position_sort(pos_runs))
     return "\n".join(runs)
-
-
-def pdf_pages_text(pages: DataFrame, *, payload_col: str = "html",
-                   id_col: str = "url", order: str = "stream") -> DataFrame:
-    """Distributed byte-level extraction over (url, pdf binary) rows —
-    handles compressed AND uncompressed streams. One vectorized pandas pass
-    (per-row zlib inflate is C-speed; regex parse per document).
-
-    Errors are VALUES: a malformed payload yields (text_out NULL, error set)
-    — same contract as pipeline.extract_any — because one bad document must
-    never kill a 10^12-row job."""
-    from collections.abc import Iterator  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts: list[str | None] = []
-            errors: list[str | None] = []
-            for b in pdf[payload_col]:
-                try:
-                    texts.append(extract_pdf_bytes(bytes(b), order=order))
-                    errors.append(None)
-                except Exception as exc:  # corrupt container: error-as-value
-                    texts.append(None)
-                    errors.append(str(exc))
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "text_out": texts, "error": errors},
-                columns=[id_col, "text_out", "error"],
-            )
-
-    return pages.select(id_col, payload_col).mapInPandas(
-        run, schema=f"{id_col} string, text_out string, error string"
-    )

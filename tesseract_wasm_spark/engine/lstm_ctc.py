@@ -80,17 +80,15 @@ class NumpyLSTM:
 
 @lru_cache(maxsize=None)
 def build_recognizer(lang: str = "eng") -> tuple[NumpyLSTM, np.ndarray, np.ndarray, str]:
-    """Construct (lstm, w_out, b_out, chars) — or return the weights a
-    TWSM2 blob registered for this language (load_lstm_model), the
-    trained-weight path.
+    """Construct (lstm, w_out, b_out, chars) for ``lang``: the built-in
+    weights. A TWSM2 blob's weights reach recognition only explicitly, as
+    the ``model`` tuple (parse_lstm_model).
 
     Hidden layout: 5 blocks of CELL_H units; block 0 mirrors the current
     column, block j the column j steps back. Shift register via saturated
     gates: i=1, f=0, o=1; g(block 0) = tanh(BIG * x_t), g(block j) =
     tanh(BIG * h[block j-1]).
     """
-    if lang in _LOADED_MODELS:
-        return _LOADED_MODELS[lang]
     d_in = CELL_H
     hidden = CELL_H * CELL_W  # 55
     w_x = np.zeros((d_in, 4 * hidden))
@@ -204,9 +202,7 @@ def recognize_page_lstm_scored(
     trained-weight path. EXPLICIT by design: Spark reuses python worker
     processes across jobs, so registering weights in a worker-global would
     leak one job's model into the next (a tamper test polluted an unrelated
-    job's workers before this parameter existed). The global registry
-    (load_lstm_model) is a driver-process convenience for OCREngine's
-    loadModel lifecycle, never mutated inside Spark tasks."""
+    job's workers before this parameter existed)."""
     lstm, w_out, b_out, chars = model if model is not None else build_recognizer(lang)
     blank = len(chars)
     if whitelist:
@@ -312,12 +308,9 @@ def recognize_page_lstm(mask: np.ndarray, lines: list[Line], **kw) -> str:
 # pins this). Layout: magic | sha256(body) | body, body = meta-length(4BE) |
 # meta json {lang, chars} | npz(w_x, w_h, b, w_out, b_out). At cluster scale
 # the driver parses the blob once and the task closure carries the weights
-# tuple (pipeline._engine_args); the registry below is the driver-process
-# state behind OCREngine.loadModel, never touched inside Spark tasks.
+# tuple (pipeline._bind_engine); no process-global registry exists.
 
 LSTM_MODEL_MAGIC = b"TWSM2"
-
-_LOADED_MODELS: dict[str, tuple] = {}
 
 
 def _pack_lstm_model(lang: str, chars: str, w_x, w_h, b, w_out, b_out) -> bytes:
@@ -358,19 +351,3 @@ def parse_lstm_model(blob: bytes) -> tuple[str, tuple]:
     arrs = np.load(io.BytesIO(body[4 + n_meta :]))
     lstm = NumpyLSTM(arrs["w_x"], arrs["w_h"], arrs["b"])
     return meta["lang"], (lstm, arrs["w_out"], arrs["b_out"], meta["chars"])
-
-
-def load_lstm_model(blob: bytes) -> str:
-    """Register a TWSM2 blob for this process: subsequent build_recognizer
-    calls for its language return the BLOB's weights (the lru_cache over the
-    constructed path is invalidated). Returns the lang."""
-    lang, tup = parse_lstm_model(blob)
-    _LOADED_MODELS[lang] = tup
-    build_recognizer.cache_clear()
-    return lang
-
-
-def unload_lstm_models() -> None:
-    """Drop every registered weight blob and return to constructed weights."""
-    _LOADED_MODELS.clear()
-    build_recognizer.cache_clear()

@@ -30,6 +30,7 @@ Scale design (the 100 TB view):
 
 from __future__ import annotations
 
+import functools
 import time
 from collections.abc import Iterator
 
@@ -53,61 +54,31 @@ RESULT_DDL = (
 )
 
 
-def rebalance_pages(
-    df: DataFrame,
-    num_partitions: int | None = None,
-    *,
-    strategy: str = "salt",
-) -> DataFrame:
-    """Explicit skew handling (north rule). Two strategies:
-
-    - ``salt`` (default): uniform-salt shuffle on xxhash64(url) — heavy pages
-      spread evenly in expectation instead of clustering by crawl append
-      order; AQE handles the residual tail. One cheap shuffle; the right
-      default at 100 TB.
-    - ``cost``: sorted round-robin bin packing — rank pages by descending
-      byte size and assign rank % P, so every partition receives a near-equal
-      *total* cost even under extreme heavy-tail skew (the biggest pages land
-      in distinct partitions by construction). Costs a global sort, so use it
-      when stragglers are observed in the metrics table rather than
-      unconditionally; at 10^12 rows the sort is a sampled range partition —
-      still one extra shuffle.
-    """
+def rebalance_pages(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
+    """Explicit skew handling (north rule): a uniform-salt shuffle on
+    xxhash64(url), so heavy pages spread evenly in expectation instead of
+    clustering by crawl append order; AQE handles the residual tail. One
+    cheap shuffle, the right default at 100 TB."""
     if num_partitions is None:
         num_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
-    if strategy == "cost":
-        from pyspark.sql import Window  # noqa: PLC0415
-
-        rank = F.row_number().over(
-            Window.orderBy(F.desc(F.length("html")), F.asc("url"))
-        )
-        # bin layout: high digit = round-robin partition index (spreads the
-        # heaviest pages across partitions), low digit subdivides within it so
-        # the range sampler's boundary error moves only ~1/8 of a partition's
-        # cost. Hash partitioning on the bin would collide bins; range keeps
-        # consecutive bins together.
-        sub = 8
-        part_idx = (rank - 1) % num_partitions
-        sub_idx = F.floor((rank - 1) / num_partitions) % sub
-        return (
-            df.withColumn("_bin", (part_idx * sub + sub_idx).cast("int"))
-            .repartitionByRange(num_partitions, "_bin")
-            .drop("_bin")
-        )
     return df.repartition(num_partitions, F.xxhash64("url"))
 
 
-def _engine_args(variables: dict[str, str] | None,
-                 model_blob: bytes | None) -> tuple[dict[str, str] | None, tuple | None]:
-    """Validate the engine's inputs on the driver, so a bad value fails the
-    CALL rather than 10^4 tasks: ``variables`` through config.VariableStore
+def _bind_engine(variables: dict[str, str] | None, model_blob: bytes | None, *,
+                 recognizer: str, with_text: bool,
+                 with_orientation: bool) -> functools.partial:
+    """The one Spark-side binding of the page engine: ``process_page`` with
+    every per-job setting fixed, so a mapper calls ``page(payload, lang=lang)``.
+
+    The inputs are validated on the driver, so a bad value fails the CALL
+    rather than 10^4 tasks: ``variables`` through config.VariableStore
     (raising the reference's message on an unknown name), ``model_blob``
     parsed once into its EXPLICIT weights tuple. The task closure carries
-    both and every page gets them as arguments — never worker-global state:
-    Spark reuses python worker processes across jobs, so a global
-    registration would leak one job's model into the next (found by the test
-    suite: a tampered-blob test polluted an unrelated lstm job's reused
-    workers)."""
+    the bound call and every page gets the weights as an argument — never
+    worker-global state: Spark reuses python worker processes across jobs,
+    so a global registration would leak one job's model into the next."""
+    from tesseract_wasm_spark.engine.page import process_page  # noqa: PLC0415
+
     if variables is not None:
         from tesseract_wasm_spark.config import VariableStore  # noqa: PLC0415
 
@@ -120,7 +91,11 @@ def _engine_args(variables: dict[str, str] | None,
         from tesseract_wasm_spark.engine.lstm_ctc import parse_lstm_model  # noqa: PLC0415
 
         lstm_model = parse_lstm_model(model_blob)[1]
-    return variables, lstm_model
+    return functools.partial(
+        process_page, variables=variables, lstm_model=lstm_model,
+        recognizer=recognizer, with_text=with_text,
+        with_orientation=with_orientation,
+    )
 
 
 def ocr_pages(
@@ -154,7 +129,8 @@ def ocr_pages(
     validated on the driver and captured by the task closure, the distributed
     analog of the reference's per-engine setVariable (src/lib.cpp:150-170).
     """
-    variables, lstm_model = _engine_args(variables, model_blob)
+    page = _bind_engine(variables, model_blob, recognizer=recognizer,
+                        with_text=with_text, with_orientation=with_orientation)
     cols = ["url", "html"] + (["lang"] if "lang" in pages.columns else [])
     src = pages.select(*cols)  # column pruning before the shuffle: never move text/warc_ts
     if "lang" not in pages.columns:
@@ -166,19 +142,13 @@ def ocr_pages(
         # imports inside the worker: keeps the task closure tiny
         from pyspark import TaskContext  # noqa: PLC0415
 
-        from tesseract_wasm_spark.engine.page import process_page  # noqa: PLC0415
-
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else -1
         for seq, pdf in enumerate(batches):
             t0 = time.monotonic()
             out = []
             for url, payload, lang in zip(pdf["url"], pdf["html"], pdf["lang"]):
-                res = process_page(
-                    bytes(payload), with_text=with_text,
-                    with_orientation=with_orientation, recognizer=recognizer,
-                    variables=variables, lang=lang, lstm_model=lstm_model,
-                )
+                res = page(bytes(payload), lang=lang)
                 # layout_boxes duplicate the words' rects on a full OCR run
                 # (the reference returns OCR boxes from getBoundingBoxes once
                 # recognition ran — src/ocr-engine.ts:236-239), so they are
@@ -234,15 +204,13 @@ def extract_any(
     rebalance: bool = True,
     num_partitions: int | None = None,
     model_blob: bytes | None = None,
-    pdf_order: str = "stream",
 ) -> DataFrame:
     """Unified main-content extraction over a mixed Common-Crawl-style table:
     dispatch per payload — DRF page images through the OCR engine, PDFs
-    through the byte-level container parser (xref streams, ObjStm, filter
-    cascades, CID fonts; ``pdf_order="position"`` opts into multi-column
-    reading-order recovery), HTML through the relational boilerplate-strip extractor
-    (datapipe/webtext.py), and known-but-undecodable image formats (PNG/JPEG)
-    to explicit error rows. Returns (url, kind, text_out, error); errors stay
+    through the byte-level container parser in stream order (xref streams,
+    ObjStm, filter cascades, CID fonts), HTML through the relational
+    boilerplate-strip extractor (datapipe/webtext.py), and
+    known-but-undecodable image formats (PNG/JPEG) to explicit error rows. Returns (url, kind, text_out, error); errors stay
     values (a bad payload must not kill a 10^12-row job).
 
     Plan shape — ONE scan of the pages table (the payload column is ~all the
@@ -277,7 +245,8 @@ def extract_any(
     # contract silently (one malformed payload would otherwise throw
     # MALFORMED_CHARACTER_CODING and kill a 10^12-row job)
     ensure_total_decode(pages)
-    variables, lstm_model = _engine_args(variables, model_blob)
+    page = _bind_engine(variables, model_blob, recognizer=recognizer,
+                        with_text=True, with_orientation=False)
 
     payload = F.col("html")
     is_drf = F.substring(payload, 1, len(drf.MAGIC)) == F.lit(drf.MAGIC)
@@ -322,7 +291,6 @@ def extract_any(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from tesseract_wasm_spark.datapipe.pdftext import extract_pdf_bytes  # noqa: PLC0415
-        from tesseract_wasm_spark.engine.page import process_page  # noqa: PLC0415
 
         for pdf in batches:
             texts: list[str | None] = []
@@ -331,16 +299,12 @@ def extract_any(
                 pdf["kind"], pdf["payload"], pdf["expr_text"], pdf["expr_error"], pdf["lang"]
             ):
                 if k == "ocr":
-                    res = process_page(
-                        bytes(raw), with_text=True, with_orientation=False,
-                        recognizer=recognizer, variables=variables, lang=lg,
-                        lstm_model=lstm_model,
-                    )
+                    res = page(bytes(raw), lang=lg)
                     texts.append(res.page_text)
                     errors.append(res.error)
                 elif k == "pdf":
                     try:
-                        texts.append(extract_pdf_bytes(bytes(raw), order=pdf_order))
+                        texts.append(extract_pdf_bytes(bytes(raw)))
                         errors.append(None)
                     except Exception as exc:  # corrupt container: error-as-value
                         texts.append(None)

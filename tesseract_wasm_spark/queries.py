@@ -2670,29 +2670,16 @@ def ocr_text_lstm(spark, sf_dir):
     TEMPLATE-path text golden restricted to this entry's url subset — so a
     hash match asserts the real invariant: the two recognizers agree
     byte-for-byte on every page (pytest pins the same agreement per line)."""
-    import pandas as pd  # noqa: PLC0415
-
     from tesseract_wasm_spark.fixtures import fixtures_df  # noqa: PLC0415
+    from tesseract_wasm_spark.outputs import page_text_df  # noqa: PLC0415
+    from tesseract_wasm_spark.pipeline import ocr_pages  # noqa: PLC0415
 
     pages = fixtures_df(spark, n_corpus_pages=4).filter(
         ~F.col("url").contains("/rot-") & ~F.col("url").contains("bad-")
         & ~F.col("url").contains("zero-") & ~F.col("url").contains("empty-")
         & ~F.col("url").contains("html-")
     )
-
-    def run(batches):
-        from tesseract_wasm_spark.engine.page import process_page  # noqa: PLC0415
-
-        for pdf in batches:
-            out = []
-            for url, payload, lang in zip(pdf["url"], pdf["html"], pdf["lang"]):
-                res = process_page(bytes(payload), with_orientation=False,
-                                   recognizer="lstm", lang=lang)
-                if res.error is None:  # same error-null surface as ocr_text
-                    out.append({"url": url, "text_out": res.page_text})
-            yield pd.DataFrame(out, columns=["url", "text_out"])
-
-    return pages.select("url", "html", "lang").mapInPandas(run, "url string, text_out string")
+    return page_text_df(ocr_pages(pages, with_orientation=False, recognizer="lstm"))
 
 
 # the template-path golden filtered to the lstm entry's subset: fixtures(4)

@@ -105,3 +105,26 @@ def test_pipeline_threads_variables(spark):
     # unknown variable fails fast on the driver with the reference message
     with pytest.raises(ValueError, match="Unable to set variable nope"):
         ocr_pages(pages, variables={"nope": "1"})
+
+
+def test_extract_any_threads_variables(spark):
+    """extract_any's OCR branch takes the same validated variables as
+    ocr_pages, and an unknown name fails the call on the driver."""
+    from tesseract_wasm_spark.fixtures import PAGES_DDL
+    from tesseract_wasm_spark.pipeline import extract_any
+    from tesseract_wasm_spark.raster import render_page_drf
+
+    import datetime as dt
+    import pandas as pd
+
+    rows = pd.DataFrame([
+        {"url": "u1", "warc_ts": dt.datetime(2024, 1, 1), "html": render_page_drf(["x  y"]),
+         "text": "x  y\n", "lang": "eng"},
+    ])
+    pages = spark.createDataFrame(rows, schema=PAGES_DDL)
+    plain = extract_any(pages).collect()
+    kept = extract_any(pages, variables={"preserve_interword_spaces": "1"}).collect()
+    assert [(r["kind"], r["text_out"]) for r in plain] == [("ocr", "x y\n")]
+    assert [(r["kind"], r["text_out"]) for r in kept] == [("ocr", "x  y\n")]
+    with pytest.raises(ValueError, match="Unable to set variable nope"):
+        extract_any(pages, variables={"nope": "1"})

@@ -109,12 +109,23 @@ def test_lstm_full_pageresult_parity():
         assert 0.0 < wb.confidence <= 1.0
 
 
+def _blob_without(char: str) -> bytes:
+    """A checksum-valid eng TWSM2 blob whose output bias bans ``char``: a
+    decode that runs from this blob's weights can never emit it."""
+    from tesseract_wasm_spark.engine import lstm_ctc as L
+
+    lang, (lstm, w_out, b_out, chars) = L.parse_lstm_model(L.export_lstm_model("eng"))
+    b_bad = b_out.copy()
+    b_bad[chars.index(char)] = -1e30
+    return L._pack_lstm_model(lang, chars, lstm.w_x, lstm.w_h, lstm.b, w_out, b_bad)
+
+
 def test_lstm_weight_blob_round_trip_and_tamper():
     """TWSM2 trained-weight blob: export -> parse returns equal tensors;
-    recognition from a LOADED blob is byte-identical; a (checksum-valid)
-    blob with perturbed output biases CHANGES recognition — proving the
-    decode really runs from the blob's weights — and corrupt/truncated
-    blobs are rejected."""
+    recognition from the parsed weights (``lstm_model=``) is byte-identical;
+    a (checksum-valid) blob with perturbed output biases CHANGES recognition
+    — proving the decode really runs from the blob's weights — and
+    corrupt/truncated blobs are rejected."""
     import numpy as np
     import pytest
 
@@ -133,22 +144,15 @@ def test_lstm_weight_blob_round_trip_and_tamper():
     assert lang == "eng" and chars == ref[3]
     np.testing.assert_array_equal(lstm.w_x, ref[0].w_x)
     np.testing.assert_array_equal(w_out, ref[1])
-    try:
-        assert L.load_lstm_model(blob) == "eng"
-        assert process_page(payload, recognizer="lstm").page_text == baseline
+    assert process_page(payload, recognizer="lstm",
+                        lstm_model=L.parse_lstm_model(blob)[1]).page_text == baseline
 
-        # tamper legally (repack with a valid checksum): ban the most common
-        # char by output bias -> decode must change if blob weights are used
-        banned = baseline.replace("\n", " ").split(" ")[0][0]
-        b_bad = b_out.copy()
-        b_bad[chars.index(banned)] = -1e30
-        bad_blob = L._pack_lstm_model("eng", chars, lstm.w_x, lstm.w_h,
-                                      lstm.b, w_out, b_bad)
-        L.load_lstm_model(bad_blob)
-        tampered = process_page(payload, recognizer="lstm").page_text
-        assert banned not in tampered and tampered != baseline
-    finally:
-        L.unload_lstm_models()
+    # tamper legally (repack with a valid checksum): ban the most common
+    # char by output bias -> decode must change if blob weights are used
+    banned = baseline.replace("\n", " ").split(" ")[0][0]
+    tampered = process_page(payload, recognizer="lstm",
+                            lstm_model=L.parse_lstm_model(_blob_without(banned))[1]).page_text
+    assert banned not in tampered and tampered != baseline
     assert process_page(payload, recognizer="lstm").page_text == baseline
 
     # integrity: one flipped byte in the body -> checksum mismatch
@@ -161,26 +165,33 @@ def test_lstm_weight_blob_round_trip_and_tamper():
 
 
 def test_load_model_accepts_weight_blob():
-    """OCREngine.loadModel routes TWSM2 blobs through the trained-weight
-    path and still rejects garbage with the reference's message."""
+    """OCREngine.loadModel validates TWSM2 blobs and selects their language,
+    leaves no process-global weights behind (a tampered blob loaded by one
+    engine must not change a later lstm decode anywhere in the process), and
+    still rejects garbage with the reference's message."""
     import pytest
 
     from tesseract_wasm_spark.api import ERR_MODEL_LOAD, OCREngine
     from tesseract_wasm_spark.engine import lstm_ctc as L
+    from tesseract_wasm_spark.engine.page import process_page
+    from tesseract_wasm_spark.raster import render_page_drf
 
     eng = OCREngine()
-    try:
-        eng.loadModel(L.export_lstm_model("deu"))
-        assert eng._lang == "deu"
-    finally:
-        L.unload_lstm_models()
+    eng.loadModel(L.export_lstm_model("deu"))
+    assert eng._lang == "deu"
+
+    payload = render_page_drf(SMALL_PAGE_LINES[:3])
+    baseline = process_page(payload, recognizer="lstm").page_text
+    OCREngine().loadModel(_blob_without("e"))
+    assert process_page(payload, recognizer="lstm").page_text == baseline
+
     with pytest.raises(ValueError, match=ERR_MODEL_LOAD):
         OCREngine().loadModel(b"TWSM2 garbage after the magic")
 
 
 def test_model_blob_flows_to_workers(spark):
-    """Distributed trained-weight path: ocr_pages(model_blob=...) registers
-    the TWSM2 blob inside every worker process — proven by a tampered blob
+    """Distributed trained-weight path: ocr_pages(model_blob=...) ships the
+    TWSM2 blob's parsed weights to every task — proven by a tampered blob
     (one output bias banned) changing the distributed extraction, while the
     clean blob reproduces the constructed weights byte-identically."""
     import pytest
@@ -199,15 +210,37 @@ def test_model_blob_flows_to_workers(spark):
     base = texts()
     blob = L.export_lstm_model("eng")
     assert texts(model_blob=blob) == base
-    lang, (lstm, w_out, b_out, chars) = L.parse_lstm_model(blob)
-    banned = "e"
-    b_bad = b_out.copy()
-    b_bad[chars.index(banned)] = -1e30
-    bad = L._pack_lstm_model("eng", chars, lstm.w_x, lstm.w_h, lstm.b,
-                             w_out, b_bad)
-    tampered = texts(model_blob=bad)
+    tampered = texts(model_blob=_blob_without("e"))
     assert tampered != base
-    assert all(banned not in t for t in tampered.values())
+    assert all("e" not in t for t in tampered.values())
     # driver-side validation: a corrupt blob fails the CALL, not the tasks
     with pytest.raises(ValueError):
         ocr_pages(pages, recognizer="lstm", model_blob=blob[:-3])
+
+
+def test_model_blob_flows_through_extract_any(spark):
+    """extract_any's OCR branch takes the same engine settings as ocr_pages:
+    a tampered TWSM2 blob changes the ocr-kind text_out exactly as it
+    changes ocr_pages' page_text, and leaves the pdf and html rows alone."""
+    from tesseract_wasm_spark.fixtures import fixtures_df
+    from tesseract_wasm_spark.pipeline import extract_any, ocr_pages
+
+    pages = fixtures_df(spark, n_corpus_pages=1).filter(
+        "url LIKE '%page-00000' OR url LIKE '%/pdf-0' OR url LIKE '%/html-0'"
+    )
+    bad = _blob_without("e")
+
+    def extracted(**kw):
+        return {r["url"]: (r["kind"], r["text_out"])
+                for r in extract_any(pages, recognizer="lstm", **kw).collect()}
+
+    base, tampered = extracted(), extracted(model_blob=bad)
+    assert sorted(k for k, _ in base.values()) == ["html", "ocr", "pdf"]
+    ocr_url = next(u for u, (k, _) in base.items() if k == "ocr")
+    assert {u: v for u, v in tampered.items() if u != ocr_url} == {
+        u: v for u, v in base.items() if u != ocr_url}
+    assert tampered[ocr_url][1] != base[ocr_url][1]
+    assert "e" not in tampered[ocr_url][1]
+    via_ocr_pages = ocr_pages(pages.filter(pages.url == ocr_url), recognizer="lstm",
+                              with_orientation=False, model_blob=bad).collect()
+    assert [r["page_text"] for r in via_ocr_pages] == [tampered[ocr_url][1]]

@@ -57,7 +57,7 @@ def test_flatedecode_streams(spark):
     """Real-world PDFs carry FlateDecode-compressed content streams; the
     byte-level path inflates and extracts them (and also handles the
     uncompressed fixtures identically)."""
-    from tesseract_wasm_spark.datapipe.pdftext import extract_pdf_bytes, pdf_pages_text
+    from tesseract_wasm_spark.datapipe.pdftext import extract_pdf_bytes
 
     lines = ["compressed stream line one", "and (two) \\ with escapes"]
     comp = make_simple_pdf(lines, compress=True)
@@ -72,8 +72,8 @@ def test_flatedecode_streams(spark):
         [("u1", bytearray(comp)), ("u2", bytearray(make_simple_pdf(lines)))],
         "url string, html binary",
     )
-    got = {r["url"]: r["text_out"] for r in pdf_pages_text(df).collect()}
-    assert got == {"u1": "\n".join(lines), "u2": "\n".join(lines)}
+    got = {r["url"]: (r["kind"], r["text_out"]) for r in extract_any(df).collect()}
+    assert got == {"u1": ("pdf", "\n".join(lines)), "u2": ("pdf", "\n".join(lines))}
 
 
 def test_tj_array_and_hex_strings(spark):
@@ -213,17 +213,16 @@ def test_length_indirect_ref_not_matched():
     assert extract_pdf_bytes(direct) == "direct length ok"
 
 
-def test_pdf_pages_text_error_as_value(spark):
+def test_extract_any_pdf_error_as_value(spark):
     """One malformed payload in a batch must not kill the job: it yields
     (text_out NULL, error set) while the good rows extract normally."""
-    from tesseract_wasm_spark.datapipe.pdftext import pdf_pages_text
-
     good = make_simple_pdf(["fine document"])
     rows = spark.createDataFrame(
         [("ok", bytearray(good)), ("bad", bytearray(b"%PDF-1.4 not a real pdf"))],
         "url string, html binary",
     )
-    got = {r["url"]: r for r in pdf_pages_text(rows).collect()}
+    got = {r["url"]: r for r in extract_any(rows).collect()}
+    assert got["ok"]["kind"] == got["bad"]["kind"] == "pdf"
     assert got["ok"]["text_out"] == "fine document" and got["ok"]["error"] is None
     # no streams at all -> empty text, not an error (nothing to extract)
     assert got["bad"]["text_out"] == "" and got["bad"]["error"] is None
@@ -548,7 +547,7 @@ def test_modern_container_corruption_never_raises():
     """The 10^12-row contract: ANY corruption of a modern-container PDF —
     truncation at every region, bit flips in xref/ObjStm/CMap/content,
     doubled or shuffled fragments — must yield a string, never an
-    exception (errors are values at the pdf_pages_text/extract_any layer;
+    exception (errors are values at the extract_any layer;
     the parser itself degrades per layer)."""
     from hypothesis import given, settings, strategies as st
 
@@ -575,18 +574,3 @@ def test_modern_container_corruption_never_raises():
         assert isinstance(extract_pdf_bytes(raw, order="position"), str)
 
     check()
-
-
-def test_extract_any_pdf_order_option(spark):
-    """extract_any exposes the reading-order knob: a two-column modern PDF
-    dispatches through the pdf branch and comes back in column order with
-    pdf_order='position'."""
-    from tesseract_wasm_spark.datapipe.pdftext import make_modern_pdf
-
-    lines = ["c1 a", "c1 b", "c2 a", "c2 b"]
-    pages = spark.createDataFrame(
-        [("u", bytearray(make_modern_pdf(lines, columns=2)))],
-        "url string, html binary",
-    )
-    row = extract_any(pages, pdf_order="position").collect()[0]
-    assert row["kind"] == "pdf" and row["text_out"] == "\n".join(lines)

@@ -198,31 +198,6 @@ def test_extract_all_shares_one_result(results):
     ).count()
 
 
-def test_cost_rebalance_beats_salt_on_skew(spark):
-    """Sorted round-robin packing bounds per-partition cost under heavy tail."""
-    import tesseract_wasm_spark.fixtures as fx
-    from tesseract_wasm_spark.pipeline import rebalance_pages
-
-    pages = fx.fixtures_df(spark, n_corpus_pages=200).select("url", "html")
-
-    def max_partition_cost(df):
-        sizes = (
-            df.withColumn("_c", F.length("html"))
-            .select(F.spark_partition_id().alias("p"), "_c")
-            .groupBy("p").agg(F.sum("_c").alias("cost"))
-            .collect()
-        )
-        costs = [r["cost"] for r in sizes]
-        return max(costs) / (sum(costs) / len(costs))
-
-    cost_ratio = max_partition_cost(rebalance_pages(pages, 8, strategy="cost"))
-    salt_ratio = max_partition_cost(rebalance_pages(pages, 8, strategy="salt"))
-    # deterministic comparison on the same skewed input: packing must beat
-    # uniform salting and keep the heaviest partition near the mean
-    assert cost_ratio <= salt_ratio
-    assert cost_ratio < 1.35
-
-
 def test_resume_is_mode_scoped(spark, pages, tmp_path):
     """A layout-only run must not mark urls complete for full extraction."""
     out = str(tmp_path / "ckpt3")
@@ -389,3 +364,47 @@ def test_extract_any_text_matches_oriented_engine(spark):
     for url in ocr:
         res = process_page(payloads[url], with_text=True, with_orientation=True)
         assert got[url] == (url, "ocr", res.page_text, res.error)
+
+
+def test_process_page_has_one_spark_side_caller():
+    """Every Spark job reaches the page engine through one binding: outside
+    engine/ and api.py, the name ``process_page`` (a reference, an attribute
+    or an import — not a comment or docstring) occurs in exactly one
+    function of the package."""
+    import ast
+    from pathlib import Path
+
+    import tesseract_wasm_spark
+
+    root = Path(tesseract_wasm_spark.__file__).parent
+    found: set[str] = set()
+
+    class Scopes(ast.NodeVisitor):
+        def __init__(self, module: str) -> None:
+            self.stack = [module]
+
+        def visit_FunctionDef(self, node) -> None:
+            self.stack.append(node.name)
+            self.generic_visit(node)
+            self.stack.pop()
+
+        visit_AsyncFunctionDef = visit_ClassDef = visit_FunctionDef
+
+        def generic_visit(self, node) -> None:
+            names = (
+                [node.id] if isinstance(node, ast.Name)
+                else [node.attr] if isinstance(node, ast.Attribute)
+                else [a.name for a in node.names] if isinstance(node, ast.ImportFrom)
+                else []
+            )
+            if "process_page" in names:
+                found.add(".".join(self.stack))
+            super().generic_visit(node)
+
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root)
+        if rel.parts[0] == "engine" or rel == Path("api.py"):
+            continue
+        module = ".".join(rel.with_suffix("").parts)
+        Scopes(module).visit(ast.parse(path.read_text(), str(path)))
+    assert found == {"pipeline._bind_engine"}
