@@ -60,7 +60,9 @@ def main() -> None:
     ap.add_argument("--url-blocklist", default=None,
                     help="optional domain blocklist file (one registrable "
                          "domain per line) replacing the built-in default")
-    ap.add_argument("--partitions", type=int, default=None)
+    ap.add_argument("--partitions", type=int, default=None,
+                    help="partitions of the salted page shuffle (default: "
+                         "one task per core)")
     ap.add_argument("--cores", type=int, default=None,
                     help="local mode cores (ignored under a real cluster master)")
     args = ap.parse_args()

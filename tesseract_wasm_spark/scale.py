@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from tesseract_wasm_spark.pipeline import extract_any, metrics_df, ocr_pages
@@ -114,11 +113,14 @@ def completed_urls(spark: SparkSession, results_path: str, mode: str = "full") -
     layout-only run must not mark urls complete for full extraction (and
     vice versa).
 
-    Only a genuinely-absent results table means "first run": any OTHER read
-    failure (permissions blip, corrupt footer, eventual consistency) is
-    re-raised — silently treating it as first-run would disable resume and
-    re-append duplicates for the whole input, which at 10^12 rows is a very
-    expensive way to learn the directory was briefly unlistable.
+    Only a genuinely-absent results table means "first run": the path's
+    Hadoop FileSystem is asked whether it exists, and any failure to read a
+    path that does exist (permissions blip, corrupt footer, eventual
+    consistency, an empty or non-parquet directory) raises — silently
+    treating it as first-run would disable resume and re-append duplicates
+    for the whole input, which at 10^12 rows is a very expensive way to
+    learn the directory was briefly unlistable. Asking costs a few ms and
+    raises nothing on a first run.
 
     Two older layouts are refused with ValueError before the run writes
     anything, each naming its one-line rewrite: ``url_bucket=K/`` directories
@@ -126,13 +128,10 @@ def completed_urls(spark: SparkSession, results_path: str, mode: str = "full") -
     Spark's "conflicting directory structures"), and a table written before
     the url_bucket column existed (files with and without it in one
     directory would give the table two schemas)."""
-    try:
-        df = spark.read.parquet(results_path)
-    except AnalysisException as exc:
-        msg = str(exc)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return None  # first run: nothing written yet
-        raise
+    path = spark._jvm.org.apache.hadoop.fs.Path(results_path)
+    if not path.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf()).exists(path):
+        return None  # first run: nothing written yet
+    df = spark.read.parquet(results_path)
     if any(f.rsplit("/", 2)[-2].startswith("url_bucket=") for f in df.inputFiles()):
         raise ValueError(
             f"{results_path} uses the old url_bucket=K/ directory layout; "
@@ -229,9 +228,10 @@ def run_extract_with_resume(
     OCR, PDF -> pdftext, HTML -> webtext) under the same checkpoint-resume
     contract: results keyed by url at ``{out_dir}/extracted``, anti-join on
     completed urls, idempotent partition replay. Per-kind counts land in the
-    summary; per-partition lineage for the heavy OCR branch stays available
-    via the run_with_resume path (the HTML/PDF branches are pure expressions
-    with no Python stage to instrument)."""
+    summary. No metrics table is written: ``extract_any``'s output carries
+    no lineage columns (its DRF and PDF rows are decoded in one
+    ``mapInPandas`` pass, its HTML and image rows by expressions), so
+    per-partition lineage for the OCR branch comes from run_with_resume."""
 
     def summarize(res: DataFrame) -> dict:
         per_kind = res.groupBy("kind").agg(F.count("*"), F.count("error")).collect()

@@ -152,15 +152,23 @@ def test_rebalance_partitioning(spark, pages):
 
     df = rebalance_pages(pages.select("url", "html"), num_partitions=6)
     assert df.rdd.getNumPartitions() == 6
+    # no count: one partition per core, so a page job runs one task wave
+    df = rebalance_pages(pages.select("url", "html"))
+    assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
 
 def test_resume_idempotent(spark, pages, tmp_path):
     out = str(tmp_path / "ckpt")
     s1 = run_with_resume(spark, pages, out)
     assert s1["pages"] == pages.count() and s1["resumed"] is False
-    # replay: everything already present -> nothing processed, no duplicates
+    _assert_flat_bucket_layout(spark, f"{out}/results", spark.sparkContext.defaultParallelism)
+    # replay: everything already present -> nothing processed, no duplicates,
+    # and no file in results/ or metrics/ added, removed or rewritten
+    before = [_listing(f"{out}/results"), _listing(f"{out}/metrics")]
+    assert all(before)
     s2 = run_with_resume(spark, pages, out)
     assert s2["pages"] == 0 and s2["resumed"] is True
+    assert [_listing(f"{out}/results"), _listing(f"{out}/metrics")] == before
     res = spark.read.parquet(f"{out}/results")
     assert res.count() == res.select("url").distinct().count() == pages.count()
     # partial replay: drop half the inputs -> still nothing to do (idempotence)
@@ -261,6 +269,31 @@ def test_extract_results_bucket_layout(spark, pages, tmp_path):
     assert s2["pages"] == 0 and s2["resumed"] is True
 
 
+def _listing(path) -> list[tuple[str, int]]:
+    """(path, size) of every file under ``path``, sorted."""
+    import os
+
+    return sorted((os.path.join(r, n), os.path.getsize(os.path.join(r, n)))
+                  for r, _d, names in os.walk(path) for n in names)
+
+
+@pytest.mark.parametrize("content", [None, "notes.txt"], ids=["empty-dir", "non-parquet"])
+def test_resume_raises_on_unreadable_results_path(spark, pages, tmp_path, content):
+    """Only an absent results path means first run: one that exists but
+    does not read as a table raises before the run writes anything."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import AnalysisException
+
+    out = tmp_path / "unreadable"
+    (out / "results").mkdir(parents=True)
+    if content is not None:
+        (out / "results" / content).write_text("not a parquet file\n")
+    before = _listing(out)
+    with pytest.raises((AnalysisException, Py4JJavaError)):
+        run_with_resume(spark, pages, str(out))
+    assert _listing(out) == before
+
+
 @pytest.mark.parametrize("run,table", [(run_with_resume, "results"),
                                        (run_extract_with_resume, "extracted")],
                          ids=["ocr", "extract"])
@@ -268,20 +301,15 @@ def test_resume_refuses_hive_layout(spark, pages, tmp_path, run, table):
     """A results table in the old url_bucket=K/ directory layout stops the
     run before anything is written: flat files appended beside those
     directories would break every later read of the table."""
-    import os
     import re
 
     out = str(tmp_path / "hive")
     (spark.createDataFrame([("u", "full", 7)], "url string, mode string, url_bucket int")
         .write.partitionBy("url_bucket").parquet(f"{out}/{table}"))
-
-    def listing():
-        return sorted(os.path.join(r, n) for r, _d, names in os.walk(out) for n in names)
-
-    before = listing()
+    before = _listing(out)
     with pytest.raises(ValueError, match=re.escape("spark.read.parquet(old).write.parquet(new)")):
         run(spark, pages, out)
-    assert listing() == before
+    assert _listing(out) == before
 
 
 @pytest.mark.parametrize("run,table,mode", [(run_with_resume, "results", "full"),
@@ -291,7 +319,6 @@ def test_resume_refuses_unbucketed_table(spark, pages, tmp_path, run, table, mod
     """A results table written before the url_bucket column existed stops
     the run before anything is written; the rewrite its message names makes
     it resumable, and the resumed run processes only the urls it lacks."""
-    import os
     import re
 
     from tesseract_wasm_spark import scale
@@ -304,16 +331,12 @@ def test_resume_refuses_unbucketed_table(spark, pages, tmp_path, run, table, mod
     (transform(pages.filter(F.col("url").isin(old_urls)))
         .withColumn("run_id", F.lit("old")).withColumn("mode", F.lit(mode))
         .write.parquet(f"{old}/{table}"))
-
-    def listing():
-        return sorted(os.path.join(r, n) for r, _d, names in os.walk(old) for n in names)
-
-    before = listing()
+    before = _listing(old)
     hint = ('spark.read.parquet(old).withColumn("url_bucket", '
             "scale.url_bucket_col()).write.parquet(new)")
     with pytest.raises(ValueError, match=re.escape(hint)):
         run(spark, pages, old)
-    assert listing() == before
+    assert _listing(old) == before
 
     new = str(tmp_path / "new")
     (spark.read.parquet(f"{old}/{table}")
