@@ -390,54 +390,32 @@ def _pairs_in_bucket(ids):
 #: documents hashing identically in every band) would otherwise materialize
 #: O(B^2) pairs inside ONE task — the standard LSH OOM at crawl scale. 512 ids
 #: bounds a bucket's expansion at ~131k pairs (one comfortably-sized task)
-#: while sitting orders of magnitude above any honest near-dup bucket. Pass
-#: ``max_bucket=None`` to disable, and read ``bucket_stats`` / the ``dropped``
-#: Observation to see what the cap removed.
+#: while sitting orders of magnitude above any honest near-dup bucket. Every
+#: LSH path applies it in ``_bucket_pair_rows``; ``max_bucket=None`` disables
+#: it, and ``bucket_stats`` / the ``dropped`` Observation show what it removed.
 DEFAULT_MAX_BUCKET = 512
 
 
 #: monotone suffix for the always-on named observation (observation names
 #: must be unique within one query; a pipeline may compose several
-#: bucket_pairs stages)
+#: bucket stages)
 _OBS_SEQ = itertools.count()
 
 
-def bucket_pairs(banded: DataFrame, bucket_cols: list[str], id_col: str = "doc_id",
-                 max_bucket: int | None = DEFAULT_MAX_BUCKET,
-                 dropped=None, oversize: str = "drop") -> DataFrame:
-    """(id, bucket...) rows -> distinct candidate pairs, via ONE groupBy:
-    collect the (sorted) ids per bucket and expand pairs with array
-    expressions. Compared to the classic bucket self-join this halves the
-    shuffled data and avoids recomputing the (Python-stage) signature source
-    for each join side.
-
-    Bucket-size skew is the standard LSH caveat: a band value shared by a
-    huge fraction of the corpus (mass-duplicated boilerplate) would expand
-    to O(B^2) pairs inside ONE task. ``max_bucket`` (default
-    ``DEFAULT_MAX_BUCKET``) bounds that, with two policies:
-
-    - ``oversize='drop'`` (default): oversized buckets contribute NO pairs —
-      maximum recall loss on exactly the highest-value dedup target, so the
-      drop is always observable (below).
-    - ``oversize='star'``: oversized buckets are SAMPLED linearly instead of
-      dropped — every id pairs with the bucket's min id (size-1 pairs, one
-      bounded task). After pair verification + ``duplicate_clusters`` this
-      preserves cluster MEMBERSHIP for genuine mass-dup buckets (the star
-      keeps the component connected) at the cost of the non-anchor pairwise
-      edges; a verification-failing anchor breaks the chain, so 'star' is a
-      recall heuristic for clustering, not an exact pair set.
-
-    Capped-bucket counts are ALWAYS emitted via a named observation
-    (``lsh_capped_buckets_N``, visible to QueryExecutionListener/the UI) so
-    the cap is never silent; additionally pass a ``pyspark.sql.Observation``
-    as ``dropped`` to read ``dropped_buckets``/``max_bucket_size`` driver-
-    side without an extra job (metrics ride the same action)."""
-    if oversize not in ("drop", "star"):
-        raise ValueError(f"oversize must be 'drop' or 'star', got {oversize!r}")
-    grouped = banded.groupBy(*bucket_cols).agg(
-        F.sort_array(F.collect_list(id_col)).alias("_ids")
+def _bucket_pair_rows(banded: DataFrame, bucket_cols: list[str], item,
+                      max_bucket: int | None, dropped) -> DataFrame:
+    """The bucket stage of every LSH path: ONE groupBy collects the sorted
+    ``item`` values per bucket (ids, or structs carrying a payload such as
+    simhash's signature) and array expressions explode each bucket's ordered
+    pairs as ``_p`` (``_p.a`` < ``_p.b``). Buckets over ``max_bucket`` items
+    give NO pairs, never silently: the named observation
+    ``lsh_capped_buckets_N`` always counts them, and an Observation passed as
+    ``dropped`` reads ``dropped_buckets``/``max_bucket_size`` on the same action."""
+    grouped = (
+        banded.groupBy(*bucket_cols)
+        .agg(F.sort_array(F.collect_list(item)).alias("_ids"))
+        .filter(F.size("_ids") >= 2)
     )
-    grouped = grouped.filter(F.size("_ids") >= 2)
     if max_bucket is not None:
         over = F.size("_ids") > max_bucket
         grouped = grouped.observe(
@@ -451,20 +429,21 @@ def bucket_pairs(banded: DataFrame, bucket_cols: list[str], id_col: str = "doc_i
                 F.sum(over.cast("int")).alias("dropped_buckets"),
                 F.max(F.size("_ids")).alias("max_bucket_size"),
             )
-        if oversize == "star":
-            anchor = F.element_at("_ids", 1)
-            star = F.transform(
-                F.slice("_ids", 2, F.size("_ids")),
-                lambda y: F.struct(anchor.alias("a"), y.alias("b")),
-            )
-            pairs_col = F.when(over, star).otherwise(_pairs_in_bucket(F.col("_ids")))
-        else:
-            grouped = grouped.filter(~over)
-            pairs_col = _pairs_in_bucket(F.col("_ids"))
-    else:
-        pairs_col = _pairs_in_bucket(F.col("_ids"))
+        grouped = grouped.filter(~over)
+    return grouped.select(F.explode(_pairs_in_bucket(F.col("_ids"))).alias("_p"))
+
+
+def bucket_pairs(banded: DataFrame, bucket_cols: list[str], id_col: str = "doc_id",
+                 max_bucket: int | None = DEFAULT_MAX_BUCKET,
+                 dropped=None) -> DataFrame:
+    """(id, bucket...) rows -> distinct candidate pairs through the shared
+    bucket stage (``_bucket_pair_rows``: ONE groupBy, pairs expanded with
+    array expressions). Compared to the classic bucket self-join this halves
+    the shuffled data and avoids recomputing the (Python-stage) signature
+    source for each join side. Buckets over ``max_bucket`` ids (default
+    ``DEFAULT_MAX_BUCKET``) contribute no pairs, observably."""
     return (
-        grouped.select(F.explode(pairs_col).alias("_p"))
+        _bucket_pair_rows(banded, bucket_cols, F.col(id_col), max_bucket, dropped)
         .select(F.col("_p.a").alias("doc_a"), F.col("_p.b").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
@@ -486,33 +465,6 @@ def bucket_stats(banded: DataFrame, bucket_cols: list[str]) -> DataFrame:
              * F.col("n_buckets")).cast("long"),
         )
     )
-
-
-def suggest_max_bucket(banded: DataFrame, bucket_cols: list[str], *,
-                       headroom: int = 16,
-                       ceiling: int = DEFAULT_MAX_BUCKET) -> int:
-    """Data-driven degenerate-bucket cap: ``headroom`` x the corpus' MEDIAN
-    bucket size, floored at 8 and never above ``ceiling`` (a pathological
-    corpus must not talk the guard out of existing). The median — not a high
-    quantile — anchors the suggestion because degenerate buckets can easily
-    be more than 1% of all buckets (one shared band value appears once per
-    band) while the median stays honest. The stats aggregate is one groupBy
-    over the skinny banded table; the driver collects only the DISTINCT
-    bucket sizes (bounded: a handful of values even at crawl scale)."""
-    rows = sorted(
-        (r["bucket_size"], r["n_buckets"])
-        for r in bucket_stats(banded, bucket_cols).collect()
-    )
-    total = sum(n for _, n in rows)
-    if total == 0:
-        return ceiling
-    acc, median = 0, rows[-1][0]
-    for size, n in rows:
-        acc += n
-        if acc >= 0.5 * total:
-            median = size
-            break
-    return max(8, min(ceiling, headroom * median))
 
 
 def minhash_banded(docs: DataFrame, *, num_perm: int = 64, bands: int = 16,
@@ -663,11 +615,12 @@ def simhash_near_duplicates(docs: DataFrame, *, max_hamming: int = 3,
                             dropped=None) -> DataFrame:
     """Pigeonhole banding: split 64 bits into max_hamming+1 chunks; any pair
     within Hamming distance k must agree on >= 1 chunk (exact-recall filter).
-    The signature travels INSIDE the collect_list structs, so verification is
-    a pure bit-op filter on the expanded pairs — zero joins end to end.
-    ``max_bucket`` caps degenerate chunk buckets exactly like bucket_pairs
-    (identical signatures in every chunk — e.g. empty documents — would
-    otherwise expand quadratically in one task). CAVEAT: the pigeonhole
+    The chunk buckets go through bucket_pairs' stage (``_bucket_pair_rows``)
+    with (id, signature) structs as items, so verification is a pure bit-op
+    filter on the expanded pairs — zero joins end to end. That stage caps
+    degenerate chunk buckets at ``max_bucket`` (identical signatures in every
+    chunk — e.g. empty documents — would otherwise expand quadratically in
+    one task). CAVEAT: the pigeonhole
     exact-recall guarantee therefore holds only for pairs whose shared chunk
     bucket is <= ``max_bucket``; a mass-duplicated signature (>512 copies of
     the same boilerplate) loses its pairs to the cap — which is why capped
@@ -687,27 +640,9 @@ def simhash_near_duplicates(docs: DataFrame, *, max_hamming: int = 3,
         F.struct(F.col("doc_id").alias("id"), F.col("simhash").alias("sig")).alias("ds"),
         F.posexplode(chunk_exprs).alias("chunk_id", "chunk"),
     )
-    grouped = (
-        banded.groupBy("chunk_id", "chunk")
-        .agg(F.sort_array(F.collect_list("ds")).alias("_ids"))
-        .filter(F.size("_ids") >= 2)
-    )
-    if max_bucket is not None:
-        over = F.size("_ids") > max_bucket
-        grouped = grouped.observe(
-            f"lsh_capped_buckets_{next(_OBS_SEQ)}",
-            F.sum(over.cast("int")).alias("capped_buckets"),
-            F.max(F.size("_ids")).alias("max_bucket_size"),
-        )
-        if dropped is not None:
-            grouped = grouped.observe(
-                dropped,
-                F.sum(over.cast("int")).alias("dropped_buckets"),
-                F.max(F.size("_ids")).alias("max_bucket_size"),
-            )
-        grouped = grouped.filter(~over)
-    pairs = (
-        grouped.select(F.explode(_pairs_in_bucket(F.col("_ids"))).alias("_p"))
+    return (
+        _bucket_pair_rows(banded, ["chunk_id", "chunk"], F.col("ds"),
+                          max_bucket, dropped)
         .select(
             F.col("_p.a.id").alias("doc_a"),
             F.col("_p.b.id").alias("doc_b"),
@@ -716,7 +651,6 @@ def simhash_near_duplicates(docs: DataFrame, *, max_hamming: int = 3,
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    return pairs
 
 
 def line_dedup(docs: DataFrame, *, id_col: str = "doc_id",

@@ -181,26 +181,9 @@ def assign_ivf_cells(embeddings: DataFrame, centroids: np.ndarray) -> DataFrame:
 
 def deterministic_centroids(embeddings: DataFrame, k: int) -> np.ndarray:
     """Centroids = the k lowest-vec_id vectors (deterministic, no kmeans
-    iterations — the oracle-stable choice the driver entry pins; use
-    kmeans_centroids for real cells at scale)."""
+    iterations — the oracle-stable choice the ann_ivf registry entry pins)."""
     rows = embeddings.orderBy("vec_id").limit(k).collect()
     return np.array([list(r["embedding"]) for r in rows], dtype=np.float64)
-
-
-def kmeans_centroids(embeddings: DataFrame, k: int, *, seed: int = 13,
-                     max_iter: int = 20) -> np.ndarray:
-    """Real IVF training: Spark MLlib k-means (the kmeans|| initializer —
-    distributed, one pass per iteration, centroids stay driver-sized). The
-    returned array drops into assign_ivf_cells/ivf_topk exactly like the
-    deterministic plumbing centroids."""
-    from pyspark.ml.clustering import KMeans  # noqa: PLC0415
-    from pyspark.ml.functions import array_to_vector  # noqa: PLC0415
-
-    feats = embeddings.select(
-        array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
-    )
-    model = KMeans(k=k, seed=seed, maxIter=max_iter, initMode="k-means||").fit(feats)
-    return np.array([np.asarray(c) for c in model.clusterCenters()], dtype=np.float64)
 
 
 def srp_signatures(embeddings: DataFrame, *, n_bits: int = 16, seed: int = 9) -> DataFrame:
@@ -407,16 +390,11 @@ def cosine_pairs_tiled(embeddings: DataFrame, *, threshold: float = 0.25,
 
 
 def ivf_topk(embeddings: DataFrame, query_ids: list[int], *, k: int = 5,
-             n_cells: int = 16, nprobe: int = 4,
-             centroids: str = "deterministic") -> DataFrame:
-    """IVF approximate top-k: search only the nprobe cells nearest each query.
-    Returns the same schema as brute_force_topk (recall < 1 by construction).
-    ``centroids``: 'deterministic' (oracle-stable plumbing cells) or 'kmeans'
-    (MLlib kmeans|| — the real cell layout at scale)."""
-    if centroids == "kmeans":
-        cents = kmeans_centroids(embeddings, n_cells)
-    else:
-        cents = deterministic_centroids(embeddings, n_cells)
+             n_cells: int = 16, nprobe: int = 4) -> DataFrame:
+    """IVF approximate top-k: search only the nprobe cells nearest each query,
+    over the oracle-stable ``deterministic_centroids`` cells. Returns the
+    same schema as brute_force_topk (recall < 1 by construction)."""
+    cents = deterministic_centroids(embeddings, n_cells)
     cells = assign_ivf_cells(embeddings, cents)
     corpus = embeddings.join(cells, "vec_id")
 

@@ -220,7 +220,7 @@ def fixture_rows(n_corpus_pages: int = 16, seed: int = 42) -> list[dict]:
         add(f"html-{j}", article_html(paras), "\n".join(paras), 130 + j)
     # PDF payloads: minimal valid uncompressed-stream PDFs (the third payload
     # kind extract_any dispatches; extraction = Tj runs in stream order)
-    from tesseract_wasm_spark.datapipe.pdftext import make_simple_pdf  # noqa: PLC0415
+    from tesseract_wasm_spark.datapipe.pdfgen import make_simple_pdf  # noqa: PLC0415
 
     for j, lines in enumerate(PDF_PAGE_LINES):
         add(f"pdf-{j}", make_simple_pdf(lines), "\n".join(lines), 140 + j)
@@ -380,7 +380,7 @@ def mixed_corpus_df(spark, n_pages: int, seed: int = 11, partitions: int | None 
         sdf = sdf.repartition(partitions)
 
     def gen(iterator):
-        from tesseract_wasm_spark.datapipe.pdftext import (  # noqa: PLC0415
+        from tesseract_wasm_spark.datapipe.pdfgen import (  # noqa: PLC0415
             make_modern_pdf, make_simple_pdf,
         )
 

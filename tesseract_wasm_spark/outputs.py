@@ -16,26 +16,6 @@ START_OF_LINE = 1
 END_OF_LINE = 2
 
 
-def extract_all(results: DataFrame) -> dict[str, DataFrame]:
-    """Persist the extraction result once and derive every output surface —
-    the explicit form of the reference's memoization (``getText`` after
-    ``getTextBoxes`` is free, src/lib.cpp:325-331; SURVEY.md §4 O2). Callers
-    must unpersist results when done."""
-    results.persist()
-    words = words_df(results)
-    lines = lines_df(words)
-    return {
-        "results": results,
-        "words": words,
-        "lines": lines,
-        "text": page_text_df(results),
-        "layout": layout_df(results),
-        "orientation": orientation_df(results),
-        "errors": errors_df(results),
-        "hocr": hocr_df(results),
-    }
-
-
 def words_df(results: DataFrame) -> DataFrame:
     """Exploded word-level TextItems (reference getTextBoxes("word") —
     src/ocr-engine.ts:255-267): one row per word per url."""

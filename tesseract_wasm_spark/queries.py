@@ -1280,7 +1280,7 @@ SQL_PDF_TEXT = _sql_pdf_text()
 
 
 def pdf_text_objstm(spark, sf_dir):
-    """Real-world PDF container depth (pdftext.make_modern_pdf /
+    """Real-world PDF container depth (pdfgen.make_modern_pdf /
     extract_pdf_bytes): each document's text becomes a PDF 1.5 file with a
     compressed /Type /XRef cross-reference STREAM (PNG Up predictor for
     even doc_ids, unfiltered for odd — both decode paths exercised),
@@ -1299,9 +1299,8 @@ def pdf_text_objstm(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
 
     def roundtrip(batches):
-        from tesseract_wasm_spark.datapipe.pdftext import (  # noqa: PLC0415
-            extract_pdf_bytes, make_modern_pdf,
-        )
+        from tesseract_wasm_spark.datapipe.pdfgen import make_modern_pdf  # noqa: PLC0415
+        from tesseract_wasm_spark.datapipe.pdftext import extract_pdf_bytes  # noqa: PLC0415
 
         for pdf in batches:
             out = []
@@ -1335,9 +1334,8 @@ def pdf_text_columns(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
 
     def roundtrip(batches):
-        from tesseract_wasm_spark.datapipe.pdftext import (  # noqa: PLC0415
-            extract_pdf_bytes, make_modern_pdf,
-        )
+        from tesseract_wasm_spark.datapipe.pdfgen import make_modern_pdf  # noqa: PLC0415
+        from tesseract_wasm_spark.datapipe.pdftext import extract_pdf_bytes  # noqa: PLC0415
 
         for pdf in batches:
             out = []

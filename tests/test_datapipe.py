@@ -462,43 +462,29 @@ def test_degenerate_bucket_cap(spark, docs):
     assert obs2.get["dropped_buckets"] >= 1
 
 
-def test_oversize_star_sampling(spark, docs):
-    """oversize='star': a bucket past the cap is sampled LINEARLY (every id
-    pairs with the bucket min) instead of dropped wholesale — the mass-
-    duplicated-boilerplate case keeps its cluster connectivity at size-1
-    pairs instead of losing every candidate (round-4 ADVICE)."""
-    empties = spark.createDataFrame(
-        [(100 + i, "", "planted") for i in range(20)],
-        "doc_id long, text string, source string",
-    )
-    planted = docs.unionByName(empties)
-    banded = dedup.minhash_banded(planted)
-    star = dedup.bucket_pairs(banded, ["band_id", "bucket"], max_bucket=8,
-                              oversize="star")
-    planted_pairs = {
-        (a, b) for a, b in
-        ((r["doc_a"], r["doc_b"]) for r in star.collect())
-        if a >= 100 or b >= 100
-    }
-    # exactly the star: anchor (min id = 100) x each other planted doc
-    assert planted_pairs == {(100, 100 + i) for i in range(1, 20)}
-    # and the star keeps the whole component resolvable to ONE cluster
-    clusters = dedup.duplicate_clusters(
-        star.filter("doc_a >= 100"), planted.filter("doc_id >= 100")
-    )
-    assert clusters.select("cluster_id").distinct().count() == 1
+def test_lsh_bucket_stage_is_one_core():
+    """Every LSH path shares one bucket stage: in dedup.py the pair expansion
+    ``_pairs_in_bucket`` is called from exactly one place, and exactly one
+    ``observe(...)`` call names its metric ``lsh_capped_buckets_N`` (calls
+    counted in the AST, not in comments or docstrings)."""
+    import ast
+    from pathlib import Path
 
-
-def test_ivf_kmeans_centroids(spark, embeddings):
-    from tesseract_wasm_spark.datapipe.similarity import brute_force_topk, ivf_topk
-
-    approx = ivf_topk(embeddings, [0, 1], k=3, n_cells=4, nprobe=2,
-                      centroids="kmeans")
-    exact = brute_force_topk(embeddings, [0, 1], k=3)
-    a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
-    e = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
-    # clustered data + kmeans cells: high recall of the true top-k
-    assert len(a & e) / len(e) >= 2 / 3
+    tree = ast.parse(Path(dedup.__file__).read_text())
+    calls = [n for n in ast.walk(tree) if isinstance(n, ast.Call)]
+    pair_calls = [
+        c for c in calls
+        if isinstance(c.func, ast.Name) and c.func.id == "_pairs_in_bucket"
+    ]
+    capped_observes = [
+        c for c in calls
+        if isinstance(c.func, ast.Attribute) and c.func.attr == "observe"
+        and c.args and isinstance(c.args[0], ast.JoinedStr)
+        and any(isinstance(v, ast.Constant) and "lsh_capped_buckets_" in str(v.value)
+                for v in c.args[0].values)
+    ]
+    assert len(pair_calls) == 1
+    assert len(capped_observes) == 1
 
 
 def test_rolling_fingerprint(spark):
@@ -579,27 +565,6 @@ def test_contamination_flags(spark):
     assert got[1] == (0, False)
     assert got[2][0] >= 1 and got[2][1] is True
     assert got[3] == (0, False)       # sub-n overlap does not flag
-
-
-def test_suggest_max_bucket(spark, docs):
-    """The data-driven cap sits well above the corpus' honest bucket sizes
-    (nothing dropped on normal data) but clamps a planted degenerate bucket,
-    and never exceeds the static ceiling."""
-    banded = dedup.minhash_banded(docs)
-    cap = dedup.suggest_max_bucket(banded, ["band_id", "bucket"])
-    max_honest = (banded.groupBy("band_id", "bucket").count()
-                  .agg(F.max("count")).collect()[0][0])
-    assert cap >= max_honest            # normal corpus: no drops
-    assert cap <= dedup.DEFAULT_MAX_BUCKET
-    # planted degenerate band: many empty docs -> one giant bucket; p99 of
-    # bucket sizes stays honest, so the suggestion clamps the degenerate one
-    empties = spark.createDataFrame(
-        [(1000 + i, "", "planted") for i in range(200)],
-        "doc_id long, text string, source string",
-    )
-    banded2 = dedup.minhash_banded(docs.unionByName(empties))
-    cap2 = dedup.suggest_max_bucket(banded2, ["band_id", "bucket"])
-    assert cap2 < 200  # the 200-doc degenerate bucket gets dropped by cap2
 
 
 def test_line_dedup(spark):

@@ -6,11 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tesseract_wasm_spark.datapipe.pdftext import (
-    make_simple_pdf,
-    pdf_text,
-    pdf_text_expr,
-)
+from tesseract_wasm_spark.datapipe.pdfgen import make_simple_pdf
+from tesseract_wasm_spark.datapipe.pdftext import pdf_text, pdf_text_expr
 from tesseract_wasm_spark.fixtures import PDF_PAGE_LINES, fixtures_df
 from tesseract_wasm_spark.pipeline import extract_any
 
@@ -297,9 +294,8 @@ def test_modern_pdf_matrix():
     on/off, PNG Up predictor on/off, ObjStm packing on/off, Flate on/off,
     CID vs simple fonts. CID show strings alternate literal/hex operator
     forms per line, so both byte routes hit the CMap."""
-    from tesseract_wasm_spark.datapipe.pdftext import (
-        extract_pdf_bytes, make_modern_pdf,
-    )
+    from tesseract_wasm_spark.datapipe.pdfgen import make_modern_pdf
+    from tesseract_wasm_spark.datapipe.pdftext import extract_pdf_bytes
 
     expected = "\n".join(_CID_LINES)
     for kw in (
@@ -318,7 +314,7 @@ def test_cid_text_not_plaintext_in_file():
     """The CID payload is genuinely opaque: neither UTF-8 nor latin-1 bytes
     of the shown words appear in the file — only the ToUnicode CMap can
     bring the text back."""
-    from tesseract_wasm_spark.datapipe.pdftext import make_modern_pdf
+    from tesseract_wasm_spark.datapipe.pdfgen import make_modern_pdf
 
     pdf = make_modern_pdf(_CID_LINES, compress=False)
     assert b"Hello" not in pdf and b"digits" not in pdf
@@ -330,9 +326,8 @@ def test_xref_stream_entries_authoritative():
     wrote: ObjStm members as type-2 (objstm 8, dense indexes), top-level
     streams as type-1 whose offsets land on real 'N 0 obj' headers —
     through the PNG Up predictor."""
-    from tesseract_wasm_spark.datapipe.pdftext import (
-        _OBJ_AT_RE, _xref_entries, make_modern_pdf,
-    )
+    from tesseract_wasm_spark.datapipe.pdfgen import make_modern_pdf
+    from tesseract_wasm_spark.datapipe.pdftext import _OBJ_AT_RE, _xref_entries
 
     pdf = make_modern_pdf(_CID_LINES, predictor=True)
     ents = _xref_entries(pdf)
@@ -361,9 +356,8 @@ def test_xref_recovery_damaged_endobj():
     """Object bodies whose endobj markers are damaged are invisible to the
     linear scan; the xref chain recovers them, so a Differences font still
     decodes. Conversely a damaged xref never blocks the linear path."""
-    from tesseract_wasm_spark.datapipe.pdftext import (
-        extract_pdf_bytes, make_modern_pdf,
-    )
+    from tesseract_wasm_spark.datapipe.pdfgen import make_modern_pdf
+    from tesseract_wasm_spark.datapipe.pdftext import extract_pdf_bytes
 
     lines = ["caf\xe9 d\xe9j\xe0", "plain line"]
     diffs = {200: "eacute", 201: "agrave"}
@@ -381,9 +375,8 @@ def test_objstm_fonts_visible():
     dicts live inside an /ObjStm — the dominant real-file layout — still
     decodes; without ObjStm expansion the accents would come back as raw
     code bytes."""
-    from tesseract_wasm_spark.datapipe.pdftext import (
-        extract_pdf_bytes, make_modern_pdf,
-    )
+    from tesseract_wasm_spark.datapipe.pdfgen import make_modern_pdf
+    from tesseract_wasm_spark.datapipe.pdftext import extract_pdf_bytes
 
     lines = ["\xe9tude facile", "\xdcber alles"]
     diffs = {200: "eacute", 202: "Udieresis"}
@@ -448,7 +441,7 @@ def test_png_predictor_filters():
 def test_extract_any_routes_modern_pdf(spark):
     """A modern-container PDF dispatches through extract_any's pdf branch
     and extracts through the full xref-stream/ObjStm/CMap path."""
-    from tesseract_wasm_spark.datapipe.pdftext import make_modern_pdf
+    from tesseract_wasm_spark.datapipe.pdfgen import make_modern_pdf
 
     pdf = make_modern_pdf(_CID_LINES)
     pages = spark.createDataFrame(
@@ -464,9 +457,8 @@ def test_filter_cascades():
     9->12-bit growth), RunLength, the ASCII armor filters, and CASCADES
     (/Filter arrays, decode order first-to-last) — all through the full
     container round trip."""
-    from tesseract_wasm_spark.datapipe.pdftext import (
-        extract_pdf_bytes, make_modern_pdf,
-    )
+    from tesseract_wasm_spark.datapipe.pdfgen import make_modern_pdf
+    from tesseract_wasm_spark.datapipe.pdftext import extract_pdf_bytes
 
     expected = "\n".join(_CID_LINES)
     for filters in (
@@ -484,9 +476,8 @@ def test_filter_cascades():
 def test_unsupported_image_filter_skipped():
     """A DCTDecode (JPEG pixel) stream is not text: it must be skipped as a
     whole, never decoded or crashed on — the error-as-value contract."""
-    from tesseract_wasm_spark.datapipe.pdftext import (
-        extract_pdf_bytes, make_modern_pdf,
-    )
+    from tesseract_wasm_spark.datapipe.pdfgen import make_modern_pdf
+    from tesseract_wasm_spark.datapipe.pdftext import extract_pdf_bytes
 
     pdf = make_modern_pdf(["real text line"], objstm=False)
     fake_img = (b"\n20 0 obj\n<< /Length 6 /Filter /DCTDecode "
@@ -499,7 +490,8 @@ def test_unsupported_image_filter_skipped():
 def test_lzw_kwkwk_and_growth():
     """LZWDecode unit coverage: the KwKwK self-reference case and code-width
     growth through 10/11/12 bits with the early-change convention."""
-    from tesseract_wasm_spark.datapipe.pdftext import _lzw_decode, _lzw_encode
+    from tesseract_wasm_spark.datapipe.pdfgen import _lzw_encode
+    from tesseract_wasm_spark.datapipe.pdftext import _lzw_decode
 
     for data in (b"ababababab", b"ab" * 9000, b"x" * 20000,
                  bytes(range(256)) * 40, b""):
@@ -511,9 +503,8 @@ def test_position_reading_order():
     extracts column-by-column with order='position' (Td/Tm tracking +
     column-band clustering), while stream order shows the interleave;
     single-column files are invariant between the two modes."""
-    from tesseract_wasm_spark.datapipe.pdftext import (
-        extract_pdf_bytes, make_modern_pdf,
-    )
+    from tesseract_wasm_spark.datapipe.pdfgen import make_modern_pdf
+    from tesseract_wasm_spark.datapipe.pdftext import extract_pdf_bytes
 
     lines = ["col1 line one", "col1 line two", "col1 line three",
              "col2 line one", "col2 line two", "col2 line three"]
@@ -551,9 +542,8 @@ def test_modern_container_corruption_never_raises():
     the parser itself degrades per layer)."""
     from hypothesis import given, settings, strategies as st
 
-    from tesseract_wasm_spark.datapipe.pdftext import (
-        extract_pdf_bytes, make_modern_pdf,
-    )
+    from tesseract_wasm_spark.datapipe.pdfgen import make_modern_pdf
+    from tesseract_wasm_spark.datapipe.pdftext import extract_pdf_bytes
 
     base = make_modern_pdf(_CID_LINES)
     n = len(base)

@@ -114,6 +114,11 @@ def test_empty_page_quirk_distributed(results):
     assert words.filter((F.col("text") != "") | (F.col("right") != 0)).count() == 0
     layout = O.layout_df(results).filter(F.col("url").contains("empty-"))
     assert layout.count() == 0
+    # full OCR run: boxes come from the words (layout_boxes intentionally
+    # empty), one per word with text or a non-zero right edge
+    assert O.layout_df(results).count() == O.words_df(results).filter(
+        (F.col("text") != "") | (F.col("right") != 0)
+    ).count() > 0
 
 
 def test_hocr_distributed(results):
@@ -189,21 +194,6 @@ def test_resume_processes_only_new(spark, pages, tmp_path):
     assert s2["pages"] == pages.count() - n_first
     res = spark.read.parquet(f"{out}/results")
     assert res.count() == pages.count()
-
-
-def test_extract_all_shares_one_result(results):
-    from tesseract_wasm_spark.outputs import extract_all
-
-    surfaces = extract_all(results)
-    assert set(surfaces) == {
-        "results", "words", "lines", "text", "layout", "orientation", "errors", "hocr",
-    }
-    assert surfaces["words"].count() > 0
-    assert surfaces["hocr"].count() > 0
-    # full OCR run: boxes come from the words (layout_boxes intentionally empty)
-    assert surfaces["layout"].count() == surfaces["words"].filter(
-        (F.col("text") != "") | (F.col("right") != 0)
-    ).count()
 
 
 def test_resume_is_mode_scoped(spark, pages, tmp_path):
