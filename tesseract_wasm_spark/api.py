@@ -161,10 +161,6 @@ class OCREngine:
 
     def _layout(self) -> PageResult:
         img = self._check_image()
-        if self._result is not None:
-            # after OCR, layout comes from the OCR result (reference comment
-            # src/ocr-engine.ts:236-239)
-            return self._result
         if self._layout_result is None:
             self._layout_result = process_rgba(
                 img, with_text=False, with_orientation=False,
@@ -173,8 +169,16 @@ class OCREngine:
         return self._layout_result
 
     def getBoundingBoxes(self, unit: str) -> list[dict]:
-        """Layout-only boxes; works with no model (reference src/lib.cpp:197-203)."""
+        """Layout-only boxes; works with no model (reference src/lib.cpp:197-203).
+        After OCR they are the recognized word and line rects, as
+        outputs.layout_df gives (reference comment src/ocr-engine.ts:236-239):
+        the degraded-scan tier re-aligns and splits the segmentation's words."""
         self._check_unit(unit)
+        if self._result is not None:
+            # the empty-page quirk row is a text box, not a layout box
+            words = [w for w in self._result.words if w.text or w.right]
+            items = [_word_item(w) for w in words] if unit == "word" else _line_items(words)
+            return [{"rect": it["rect"], "flags": 0} for it in items]
         res = self._layout()
         boxes = [
             {"rect": {"left": b[0], "top": b[1], "right": b[2], "bottom": b[3]}, "flags": b[4]}
@@ -190,7 +194,7 @@ class OCREngine:
         res = self._ocr(on_progress)
         if unit == "word":
             return [_word_item(w) for w in res.words]
-        return _line_items(res)
+        return _line_items(res.words)
 
     def getText(self, on_progress=None) -> str:
         self._check_model()
@@ -233,9 +237,9 @@ def _word_item(w: WordBox) -> dict:
     }
 
 
-def _line_items(res: PageResult) -> list[dict]:
+def _line_items(words: list[WordBox]) -> list[dict]:
     lines: dict[int, list[WordBox]] = {}
-    for w in res.words:
+    for w in words:
         lines.setdefault(w.line_id, []).append(w)
     out = []
     for li in sorted(lines):

@@ -13,6 +13,9 @@
     vectorized verify kernel: every in-block pair verified once, in tiles
     of at most EXACT_TILE vectors, so one pandas group never exceeds
     2 * EXACT_TILE vectors and no task sorts a whole block.
+  - srp_signatures / srp_multi_signatures: signed-random-projection
+    buckets (one table / many tables) from one numpy kernel; srp_near_pairs
+    is cosine_pairs_blocked with the SRP bucket as the block.
 At 100 TB the centroid table stays broadcast-sized (k <= 2^16) and the probe
 join is a bucket join on cell_id — no all-pairs shuffle anywhere.
 """
@@ -186,21 +189,35 @@ def deterministic_centroids(embeddings: DataFrame, k: int) -> np.ndarray:
     return np.array([list(r["embedding"]) for r in rows], dtype=np.float64)
 
 
+def _srp_buckets(n_bits: int, n_tables: int, seed: int):
+    """The SRP kernel: ``buckets(mat)`` is the int64 [B, n_tables] matrix of
+    sign(mat @ R) packed ``n_bits`` to a table, from ONE matmul per batch
+    against planes R drawn once per (seed, dim)."""
+    planes_by_dim: dict[int, np.ndarray] = {}
+
+    def buckets(mat: np.ndarray) -> np.ndarray:
+        dim = mat.shape[1]
+        if dim not in planes_by_dim:
+            planes_by_dim[dim] = np.random.default_rng(seed).normal(
+                size=(dim, n_tables * n_bits)
+            )
+        bits = (mat @ planes_by_dim[dim]) > 0
+        bits3 = bits.reshape(len(mat), n_tables, n_bits).astype(np.int64)
+        return (bits3 << np.arange(n_bits, dtype=np.int64)).sum(axis=2)
+
+    return buckets
+
+
 def srp_signatures(embeddings: DataFrame, *, n_bits: int = 16, seed: int = 9) -> DataFrame:
     """Signed-random-projection LSH: sign(R @ v) packed into an int bucket.
     Vectors with high cosine land in the same bucket with probability
     (1 - theta/pi)^n_bits; one numpy matmul per Arrow batch."""
-    planes_by_dim: dict[int, np.ndarray] = {}  # deterministic per (seed, dim)
+    buckets = _srp_buckets(n_bits, 1, seed)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            dim = mat.shape[1]
-            if dim not in planes_by_dim:
-                planes_by_dim[dim] = np.random.default_rng(seed).normal(size=(dim, n_bits))
-            bits = (mat @ planes_by_dim[dim]) > 0
-            sig = (bits.astype(np.int64) << np.arange(n_bits, dtype=np.int64)).sum(axis=1)
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "bucket": sig})
+            ids, mat = _stack(pdf)
+            yield pd.DataFrame({"vec_id": ids, "bucket": buckets(mat)[:, 0]})
 
     return embeddings.select("vec_id", "embedding").mapInPandas(
         run, schema="vec_id long, bucket long"
@@ -209,23 +226,13 @@ def srp_signatures(embeddings: DataFrame, *, n_bits: int = 16, seed: int = 9) ->
 
 def srp_near_pairs(embeddings: DataFrame, *, n_bits: int = 12, threshold: float = 0.25,
                    seed: int = 9) -> DataFrame:
-    """LSH-bucketed near-pair search: candidates share an SRP bucket, then the
-    exact cosine verifies. The scale path when no IVF/label blocking exists:
-    quadratic only within buckets (expected bucket size = n / 2^n_bits)."""
+    """LSH-bucketed near-pair search: cosine_pairs_blocked with the SRP
+    bucket as the block, so candidates share a bucket and the exact cosine
+    verifies. The scale path when no IVF/label blocking exists: quadratic
+    only within buckets (expected bucket size = n / 2^n_bits)."""
     sigs = srp_signatures(embeddings, n_bits=n_bits, seed=seed)
-    e = embeddings.join(sigs, "vec_id").select("vec_id", "embedding", "bucket")
-    a, b = e.alias("a"), e.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            cosine_expr(F.col("a.embedding"), F.col("b.embedding")).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
+    return cosine_pairs_blocked(
+        embeddings.join(sigs, "vec_id"), threshold=threshold, block_col="bucket"
     )
 
 
@@ -238,20 +245,12 @@ def srp_multi_signatures(embeddings: DataFrame, *, n_bits: int = 3, n_tables: in
     with probability 1-(1-(1-theta/pi)^n_bits)^n_tables, so low-cosine
     thresholds use small n_bits / large n_tables and near-dup thresholds the
     reverse. ``carry_cols`` pass through (e.g. the block column)."""
-    planes_by_dim: dict[int, np.ndarray] = {}
+    buckets = _srp_buckets(n_bits, n_tables, seed)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            dim = mat.shape[1]
-            if dim not in planes_by_dim:
-                planes_by_dim[dim] = np.random.default_rng(seed).normal(
-                    size=(dim, n_tables * n_bits)
-                )
-            bits = (mat @ planes_by_dim[dim]) > 0
-            bits3 = bits.reshape(len(pdf), n_tables, n_bits).astype(np.int64)
-            buckets = (bits3 << np.arange(n_bits, dtype=np.int64)).sum(axis=2)
-            out = {"vec_id": pdf["vec_id"].to_numpy(), "buckets": list(buckets)}
+            ids, mat = _stack(pdf)
+            out = {"vec_id": ids, "buckets": list(buckets(mat))}
             for c in carry_cols:
                 out[c] = pdf[c].to_numpy()
             yield pd.DataFrame(out)

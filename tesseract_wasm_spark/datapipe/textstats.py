@@ -110,16 +110,14 @@ ROLL_BASE = 257
 ROLL_PRIME = (1 << 31) - 1
 
 
-def rolling_fingerprints(docs: DataFrame, *, window: int | None = None) -> DataFrame:
+def rolling_fingerprints(docs: DataFrame) -> DataFrame:
     """Rabin-Karp polynomial rolling-hash fingerprints over normalized text.
 
-    Vectorized per Arrow batch: the hash h = sum(c_i * B^(n-1-i)) mod p is one
-    uint64 dot product against precomputed powers (31-bit prime keeps products
-    in range). With ``window`` set, emits the minimum window-hash (winnowing
-    style, one representative per document) — the content-defined fingerprint
-    used for shift-robust near-dup blocking at scale; without it, the whole
-    document's hash (equivalent to exact dedup, but O(1) to combine
-    incrementally as documents append)."""
+    Vectorized per Arrow batch: the whole document's hash
+    h = sum(c_i * B^(n-1-i)) mod p is one uint64 dot product against
+    precomputed powers (31-bit prime keeps products in range). Equivalent
+    to exact dedup, but O(1) to combine incrementally as documents
+    append."""
     import numpy as np  # noqa: PLC0415
     from collections.abc import Iterator  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
@@ -127,21 +125,20 @@ def rolling_fingerprints(docs: DataFrame, *, window: int | None = None) -> DataF
 
     p = np.uint64(ROLL_PRIME)
     b = np.uint64(ROLL_BASE)
-    b_inv = np.uint64(pow(ROLL_BASE, ROLL_PRIME - 2, ROLL_PRIME))  # Fermat inverse
 
     _LO = 1024
 
-    def _pow_tables(base: np.uint64, n: int) -> tuple[np.ndarray, np.ndarray]:
-        """Two-level power table: base**k = hi[k >> 10] * lo[k & 1023] (mod p).
+    def _pow_tables(n: int) -> tuple[np.ndarray, np.ndarray]:
+        """Two-level power table: B**k = hi[k >> 10] * lo[k & 1023] (mod p).
         Building cost is O(sqrt-ish) tiny loops; lookups are vectorized."""
         lo = np.empty(_LO, dtype=np.uint64)
         acc = np.uint64(1)
         for i in range(_LO):
             lo[i] = acc
-            acc = (acc * base) % p
+            acc = (acc * b) % p
         n_hi = n // _LO + 2
         hi = np.empty(n_hi, dtype=np.uint64)
-        step = acc  # base**_LO
+        step = acc  # B**_LO
         acc = np.uint64(1)
         for i in range(n_hi):
             hi[i] = acc
@@ -152,83 +149,32 @@ def rolling_fingerprints(docs: DataFrame, *, window: int | None = None) -> DataF
         hi, lo = tables
         return (hi[k >> 10] * lo[k & (_LO - 1)]) % p
 
-    def _seg_arange(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
-        """Concatenated [s, s+len) ranges: the segmented-arange idiom that
-        makes every per-document loop below a single numpy expression."""
-        total = int(lens.sum())
-        if total == 0:
-            return np.empty(0, dtype=np.int64)
-        offs = np.zeros(len(lens), dtype=np.int64)
-        np.cumsum(lens[:-1], out=offs[1:])
-        return np.repeat(starts - offs, lens) + np.arange(total, dtype=np.int64)
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # ONE concatenated buffer per Arrow batch (the _token_hashes_batch
         # pattern, dedup.py): for short-document corpora the per-document
         # Python/allocation overhead dominates, so all per-doc math below is
         # segmented numpy (reduceat) over the batch buffer — zero per-doc
         # Python beyond the normalize/encode step.
-        tables: dict[str, tuple] = {}
-
-        def pows(name, base, n):
-            t = tables.get(name)
-            if t is None or (n >> 10) + 2 > len(t[0]):
-                t = tables[name] = _pow_tables(base, max(n, 1 << 16))
-            return t
-
+        tables = None
         for pdf in batches:
             texts = [
                 re.sub(r"\s+", " ", (t or "").lower()).encode() for t in pdf["text"]
             ]
             counts = np.array([len(t) for t in texts], dtype=np.int64)
             buf = np.frombuffer(b"".join(texts), dtype=np.uint8).astype(np.uint64)
-            n_total = len(buf)
-            starts = np.zeros(len(counts), dtype=np.int64)
-            np.cumsum(counts[:-1], out=starts[1:])
-            ends = starts + counts
             out = np.zeros(len(counts), dtype=np.int64)  # empty docs stay 0
-
             nonempty = counts > 0
-            whole = nonempty if window is None else nonempty & (counts <= window)
-            if whole.any():
-                # h_d = sum(c_j * B^(end_d-1-j)) mod p over global positions j
-                idx = _seg_arange(starts[whole], counts[whole])
-                k = np.repeat(ends[whole] - 1, counts[whole]) - idx
-                terms = buf[idx] * _pow_at(pows("b", b, n_total), k) % p
-                offs = np.zeros(int(whole.sum()), dtype=np.int64)
-                np.cumsum(counts[whole][:-1], out=offs[1:])
-                out[np.flatnonzero(whole)] = (np.add.reduceat(terms, offs) % p).astype(
-                    np.int64
-                )
-
-            if window is not None:
-                win = nonempty & (counts > window)
-                if win.any():
-                    # every window hash from ONE global prefix sum: the
-                    # position-invariant identity h_t = (P[t+w]-P[t])*B^(t+w-1)
-                    # holds at global coordinates as long as each evaluated t
-                    # stays inside its document (t in [start_d, end_d - w])
-                    inv = _pow_at(
-                        pows("binv", b_inv, n_total), np.arange(n_total, dtype=np.int64)
-                    )
-                    prod = buf * inv % p  # < 2^31; safe to cumsum 2^20 terms
-                    pref = np.zeros(n_total + 1, dtype=np.uint64)
-                    chunk = 1 << 20
-                    carry = np.uint64(0)
-                    for s in range(0, n_total, chunk):
-                        seg = prod[s : s + chunk].cumsum()
-                        pref[s + 1 : s + 1 + len(seg)] = (seg + carry) % p
-                        carry = pref[s + len(seg)]
-                    lens_w = counts[win] - window + 1
-                    t_idx = _seg_arange(starts[win], lens_w)
-                    scale = _pow_at(pows("b", b, n_total + window), t_idx + (window - 1))
-                    hs = (pref[t_idx + window] + p - pref[t_idx]) % p * scale % p
-                    offs = np.zeros(int(win.sum()), dtype=np.int64)
-                    np.cumsum(lens_w[:-1], out=offs[1:])
-                    out[np.flatnonzero(win)] = np.minimum.reduceat(hs, offs).astype(
-                        np.int64
-                    )
-
+            if nonempty.any():
+                if tables is None or (len(buf) >> 10) + 2 > len(tables[0]):
+                    tables = _pow_tables(max(len(buf), 1 << 16))
+                # h_d = sum(c_j * B^(end_d-1-j)) mod p: the concatenated
+                # non-empty docs, each position's exponent counted back from
+                # its own document's last byte
+                lens = counts[nonempty]
+                ends = np.cumsum(lens)
+                k = np.repeat(ends - 1, lens) - np.arange(len(buf), dtype=np.int64)
+                terms = buf * _pow_at(tables, k) % p
+                out[nonempty] = (np.add.reduceat(terms, ends - lens) % p).astype(np.int64)
             yield pd.DataFrame(
                 {"doc_id": pdf["doc_id"].to_numpy(), "rolling_fp": out},
                 columns=["doc_id", "rolling_fp"],
@@ -243,12 +189,12 @@ def rolling_fingerprints(docs: DataFrame, *, window: int | None = None) -> DataF
 
 def fingerprints(docs: DataFrame) -> DataFrame:
     """Document fingerprint: md5 over whitespace-normalized lowercase text
-    (the exact-dedup key; a content-defined rolling-hash variant lives in
-    dedup.simhash_signatures for the near-dup path)."""
-    norm = F.regexp_replace(F.lower(F.col("text")), WS_RE, " ")
+    (dedup.text_digest_expr, the exact-dedup key; the Rabin-Karp
+    rolling-hash variant is rolling_fingerprints)."""
+    from tesseract_wasm_spark.datapipe.dedup import text_digest_expr  # noqa: PLC0415
+
     return docs.select(
-        "doc_id",
-        F.md5(norm.cast("binary")).alias("fingerprint"),
+        "doc_id", text_digest_expr(F.col("text")).alias("fingerprint")
     )
 
 

@@ -149,12 +149,12 @@ def _strip_containers(html: Column) -> Column:
     return h
 
 
-def _kept_blocks(html: Column) -> Column:
+def _blocks(html: Column) -> Column:
     """The shared block pipeline: strip containers, split at block tags,
-    compute per-block text + link density, keep non-empty low-link blocks.
-    Returns the array<struct<txt,link_len>> every consumer filters/joins."""
+    compute per-block text + anchor-text length. Returns the unfiltered
+    array<struct<txt,link_len>> both block-selection rules filter."""
     segs = F.split(_strip_containers(html), _BLOCK_SPLIT)
-    blocks = F.transform(
+    return F.transform(
         segs,
         lambda s: F.struct(
             _block_text(s).alias("txt"),
@@ -166,8 +166,13 @@ def _kept_blocks(html: Column) -> Column:
             ).alias("link_len"),
         ),
     )
+
+
+def _kept_blocks(html: Column) -> Column:
+    """The non-empty low-link blocks: the array<struct<txt,link_len>> every
+    link-density consumer filters/joins."""
     return F.filter(
-        blocks,
+        _blocks(html),
         lambda b: (b["txt"] != "")
         & (b["link_len"] * 3 <= F.length(b["txt"])),
     )
@@ -202,20 +207,7 @@ def density_main_text_expr(html: Column) -> Column:
     stubs) that passes any link threshold but is tiny next to the article.
     Pure array expressions over the same shared block pipeline — still one
     scan, whole-stage codegen."""
-    segs = F.split(_strip_containers(html), _BLOCK_SPLIT)
-    blocks = F.transform(
-        segs,
-        lambda s: F.struct(
-            _block_text(s).alias("txt"),
-            F.coalesce(
-                F.length(
-                    F.array_join(F.regexp_extract_all(s, F.lit(_ANCHOR_TEXT), 1), "")
-                ),
-                F.lit(0),
-            ).alias("link_len"),
-        ),
-    )
-    nonempty = F.filter(blocks, lambda b: b["txt"] != "")
+    nonempty = F.filter(_blocks(html), lambda b: b["txt"] != "")
     mx = F.coalesce(
         F.array_max(F.transform(nonempty, _density_of)), F.lit(0.0)
     )
@@ -418,13 +410,24 @@ def ensure_total_decode(df) -> None:
         pass  # read-only conf surface (e.g. Connect) — documented contract applies
 
 
+#: the escape table of html_escape_expr and html_escape, applied in order:
+#: & first, then < and >, then quotes as NUMERIC references (decimal + hex)
+_ESCAPES = (
+    ("&", "&amp;"), ("<", "&lt;"), (">", "&gt;"), ('"', "&#34;"), ("'", "&#x27;"),
+)
+
+
 def html_escape_expr(text: Column) -> Column:
     """Inverse of the entity decode (for building synthetic pages whose
-    extraction round-trips exactly): & first, then < and >, then quotes as
-    NUMERIC references (decimal + hex) so the round-trip exercises the
-    numeric-entity decode path."""
-    out = F.replace(text, F.lit("&"), F.lit("&amp;"))
-    out = F.replace(out, F.lit("<"), F.lit("&lt;"))
-    out = F.replace(out, F.lit(">"), F.lit("&gt;"))
-    out = F.replace(out, F.lit('"'), F.lit("&#34;"))
-    return F.replace(out, F.lit("'"), F.lit("&#x27;"))
+    extraction round-trips exactly); the quotes' numeric references make
+    the round-trip exercise the numeric-entity decode path."""
+    for ch, ref in _ESCAPES:
+        text = F.replace(text, F.lit(ch), F.lit(ref))
+    return text
+
+
+def html_escape(text: str) -> str:
+    """Python twin of html_escape_expr, for pages built in Python."""
+    for ch, ref in _ESCAPES:
+        text = text.replace(ch, ref)
+    return text

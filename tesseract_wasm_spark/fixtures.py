@@ -29,6 +29,7 @@ import numpy as np
 import pandas as pd
 
 from tesseract_wasm_spark import drf
+from tesseract_wasm_spark.datapipe.webtext import html_escape
 from tesseract_wasm_spark.raster import empty_page, render_page, render_page_drf
 
 BASE_TS = dt.datetime(2024, 1, 1, 0, 0, 0)
@@ -90,26 +91,19 @@ HTML_ARTICLES: list[list[str]] = [
 ]
 
 
-def _py_escape(s: str) -> str:
-    """Mirror of webtext.html_escape_expr: quotes become NUMERIC character
-    references so fixture extraction exercises the &#NNN;/&#xNN; decode."""
-    return (
-        s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-        .replace('"', "&#34;").replace("'", "&#x27;")
-    )
-
-
 def article_html(paras: list[str]) -> bytes:
-    """Wrap article paragraphs in boilerplate HTML (the webtext fixtures)."""
+    """Wrap article paragraphs in boilerplate HTML (the webtext fixtures).
+    Quotes become NUMERIC character references (webtext.html_escape), so
+    fixture extraction exercises the &#NNN;/&#xNN; decode."""
     body = []
     for i, p in enumerate(paras):
         if "full documentation" in p:
             # keep one genuine inline anchor (low link density -> block kept)
-            p_html = _py_escape(p).replace(
+            p_html = html_escape(p).replace(
                 "full documentation", '<a href="/docs">full documentation</a>'
             )
         else:
-            p_html = _py_escape(p)
+            p_html = html_escape(p)
         body.append(f"<p>{p_html}</p>" if i % 2 == 0 else f"<div>{p_html}</div>")
     html = (
         "<html><head><title>article</title><script>var a = 1;</script>"
@@ -302,120 +296,26 @@ def fixtures_df(spark, n_corpus_pages: int = 16, seed: int = 42):
     return spark.createDataFrame(fixtures_pandas(n_corpus_pages, seed), schema=PAGES_DDL)
 
 
-def corpus_df(spark, n_pages: int, seed: int = 7, partitions: int | None = None):
-    """Bench-scale corpus: only seeded pages (no error/rot fixtures), built in
-    a distributed way — the page *spec* (tiny) is parallelized and rasterized
-    on executors, so building a large corpus doesn't bottleneck the driver."""
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
+def _spec_pages(spark, n_pages: int, seed: int, partitions: int | None,
+                host: str, page):
+    """The volume corpora's scaffold: the page *specs* (page_id, seed) are
+    tiny and parallelized, and each page's (payload, text) comes from
+    ``page(page_id, rng)`` on the executors, so building a large corpus
+    doesn't bottleneck the driver. ``rng`` is seeded per (seed, page_id)."""
     specs = [(i, seed) for i in range(n_pages)]
     sdf = spark.createDataFrame(specs, "page_id int, seed int")
     if partitions:
         sdf = sdf.repartition(partitions)
 
     def gen(iterator):
-        for pdf in iterator:
-            out = []
-            for pid, sd in zip(pdf["page_id"], pdf["seed"]):
-                rng = np.random.default_rng((int(sd) << 32) | int(pid))
-                big = rng.random() < 0.125
-                n_lines = int(rng.integers(40, 90)) if big else int(rng.integers(4, 14))
-                lines = _seeded_lines(rng, n_lines)
-                out.append(
-                    {
-                        "url": f"https://corpus.test/page/{int(pid):08d}",
-                        "warc_ts": BASE_TS + dt.timedelta(seconds=int(pid)),
-                        "html": render_page_drf(lines),
-                        "text": expected_text(lines),
-                        "lang": "eng",
-                    }
-                )
-            yield pd.DataFrame(out, columns=["url", "warc_ts", "html", "text", "lang"])
-
-    return sdf.mapInPandas(gen, schema=PAGES_DDL)
-
-
-def degraded_corpus_df(spark, n_pages: int, seed: int = 31, partitions: int | None = None):
-    """Volume-scale DEGRADED corpus (defocused scans): corpus_df's shape with
-    every payload box-blurred on the executors — the degraded-scan recovery
-    soak input (every page must still extract byte-identically)."""
-    from tesseract_wasm_spark.raster import degrade_page_drf  # noqa: PLC0415
-
-    specs = [(i, seed) for i in range(n_pages)]
-    sdf = spark.createDataFrame(specs, "page_id int, seed int")
-    if partitions:
-        sdf = sdf.repartition(partitions)
-
-    def gen(iterator):
-        for pdf in iterator:
-            out = []
-            for pid, sd in zip(pdf["page_id"], pdf["seed"]):
-                rng = np.random.default_rng((int(sd) << 32) | int(pid))
-                lines = _seeded_lines(rng, int(rng.integers(3, 12)))
-                out.append(
-                    {
-                        "url": f"https://degraded.test/page/{int(pid):08d}",
-                        "warc_ts": BASE_TS + dt.timedelta(seconds=int(pid)),
-                        "html": degrade_page_drf(render_page_drf(lines)),
-                        "text": expected_text(lines),
-                        "lang": "eng",
-                    }
-                )
-            yield pd.DataFrame(out, columns=["url", "warc_ts", "html", "text", "lang"])
-
-    return sdf.mapInPandas(gen, schema=PAGES_DDL)
-
-
-def mixed_corpus_df(spark, n_pages: int, seed: int = 11, partitions: int | None = None):
-    """Volume-scale MIXED corpus for soaking pipeline.extract_any: every
-    fourth payload is HTML (article page), every fourth a PDF (alternating
-    FlateDecode compression and mixed show operators), the rest DRF page
-    images — built distributed like corpus_df (specs parallelized,
-    payloads rasterized/serialized on executors)."""
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    specs = [(i, seed) for i in range(n_pages)]
-    sdf = spark.createDataFrame(specs, "page_id int, seed int")
-    if partitions:
-        sdf = sdf.repartition(partitions)
-
-    def gen(iterator):
-        from tesseract_wasm_spark.datapipe.pdfgen import (  # noqa: PLC0415
-            make_modern_pdf, make_simple_pdf,
-        )
-
         for pdf in iterator:
             out = []
             for pid, sd in zip(pdf["page_id"], pdf["seed"]):
                 pid, sd = int(pid), int(sd)
-                rng = np.random.default_rng((sd << 32) | pid)
-                kind = pid % 4
-                if kind == 2:  # html article
-                    paras = [" ".join(_seeded_lines(rng, 1)) for _ in range(3)]
-                    payload, truth = article_html(paras), "\n".join(paras)
-                elif kind == 3:  # pdf (classic + modern containers)
-                    lines = _seeded_lines(rng, int(rng.integers(3, 7)))
-                    if pid % 16 == 7:  # PDF 1.5: xref stream + ObjStm + CID
-                        payload = make_modern_pdf(
-                            lines, predictor=(pid % 32 == 7)
-                        )
-                    elif pid % 16 == 15:  # armored filter cascade
-                        payload = make_modern_pdf(
-                            lines,
-                            content_filters=("ASCII85Decode", "FlateDecode"),
-                        )
-                    else:
-                        payload = make_simple_pdf(
-                            lines, compress=(pid % 8 == 3),
-                            operators="mixed" if pid % 3 == 0 else "tj",
-                        )
-                    truth = "\n".join(lines)
-                else:  # DRF page image
-                    lines = _seeded_lines(rng, int(rng.integers(4, 14)))
-                    payload, truth = render_page_drf(lines), expected_text(lines)
+                payload, truth = page(pid, np.random.default_rng((sd << 32) | pid))
                 out.append(
                     {
-                        "url": f"https://mixed.test/page/{pid:08d}",
+                        "url": f"https://{host}/page/{pid:08d}",
                         "warc_ts": BASE_TS + dt.timedelta(seconds=pid),
                         "html": payload,
                         "text": truth,
@@ -425,3 +325,64 @@ def mixed_corpus_df(spark, n_pages: int, seed: int = 11, partitions: int | None 
             yield pd.DataFrame(out, columns=["url", "warc_ts", "html", "text", "lang"])
 
     return sdf.mapInPandas(gen, schema=PAGES_DDL)
+
+
+def corpus_df(spark, n_pages: int, seed: int = 7, partitions: int | None = None):
+    """Bench-scale corpus: only seeded pages (no error/rot fixtures) with
+    heavy-tailed sizes, built distributed (_spec_pages)."""
+
+    def page(pid, rng):
+        big = rng.random() < 0.125
+        n_lines = int(rng.integers(40, 90)) if big else int(rng.integers(4, 14))
+        lines = _seeded_lines(rng, n_lines)
+        return render_page_drf(lines), expected_text(lines)
+
+    return _spec_pages(spark, n_pages, seed, partitions, "corpus.test", page)
+
+
+def degraded_corpus_df(spark, n_pages: int, seed: int = 31, partitions: int | None = None):
+    """Volume-scale DEGRADED corpus (defocused scans): corpus_df's shape with
+    every payload box-blurred on the executors — the degraded-scan recovery
+    soak input (every page must still extract byte-identically)."""
+    from tesseract_wasm_spark.raster import degrade_page_drf  # noqa: PLC0415
+
+    def page(pid, rng):
+        lines = _seeded_lines(rng, int(rng.integers(3, 12)))
+        return degrade_page_drf(render_page_drf(lines)), expected_text(lines)
+
+    return _spec_pages(spark, n_pages, seed, partitions, "degraded.test", page)
+
+
+def mixed_corpus_df(spark, n_pages: int, seed: int = 11, partitions: int | None = None):
+    """Volume-scale MIXED corpus for soaking pipeline.extract_any: every
+    fourth payload is HTML (article page), every fourth a PDF (alternating
+    FlateDecode compression and mixed show operators), the rest DRF page
+    images — built distributed like corpus_df."""
+
+    def page(pid, rng):
+        from tesseract_wasm_spark.datapipe.pdfgen import (  # noqa: PLC0415
+            make_modern_pdf, make_simple_pdf,
+        )
+
+        kind = pid % 4
+        if kind == 2:  # html article
+            paras = [" ".join(_seeded_lines(rng, 1)) for _ in range(3)]
+            return article_html(paras), "\n".join(paras)
+        if kind != 3:  # DRF page image
+            lines = _seeded_lines(rng, int(rng.integers(4, 14)))
+            return render_page_drf(lines), expected_text(lines)
+        lines = _seeded_lines(rng, int(rng.integers(3, 7)))  # pdf
+        if pid % 16 == 7:  # PDF 1.5: xref stream + ObjStm + CID
+            payload = make_modern_pdf(lines, predictor=(pid % 32 == 7))
+        elif pid % 16 == 15:  # armored filter cascade
+            payload = make_modern_pdf(
+                lines, content_filters=("ASCII85Decode", "FlateDecode"),
+            )
+        else:  # classic containers
+            payload = make_simple_pdf(
+                lines, compress=(pid % 8 == 3),
+                operators="mixed" if pid % 3 == 0 else "tj",
+            )
+        return payload, "\n".join(lines)
+
+    return _spec_pages(spark, n_pages, seed, partitions, "mixed.test", page)

@@ -1279,19 +1279,10 @@ FROM pages
 SQL_PDF_TEXT = _sql_pdf_text()
 
 
-def pdf_text_objstm(spark, sf_dir):
-    """Real-world PDF container depth (pdfgen.make_modern_pdf /
-    extract_pdf_bytes): each document's text becomes a PDF 1.5 file with a
-    compressed /Type /XRef cross-reference STREAM (PNG Up predictor for
-    even doc_ids, unfiltered for odd — both decode paths exercised),
-    catalog/page/font dicts packed inside a /Type /ObjStm object stream,
-    FlateDecode content, and a subsetted Type0/Identity-H font whose
-    2-byte CIDs are decodable only through its /ToUnicode CMap (bfchar +
-    both bfrange dst forms; literal and hex show operators alternate per
-    line). Build and extraction run in ONE mapInPandas pass (generation is
-    deterministic from the text), so the oracle is fully ANALYTIC: the
-    extracted text must equal the source text verbatim — any xref/ObjStm/
-    predictor/CMap mis-parse anywhere in the container goes hash-red."""
+def _pdf_roundtrip(spark, sf_dir, pdf_kw, *, order: str):
+    """(doc_id, text_out) of each document's lines built into a modern PDF
+    by make_modern_pdf(lines, **pdf_kw(doc_id)) and extracted back by
+    extract_pdf_bytes(blob, order=order), in ONE mapInPandas pass."""
     import pandas as pd  # noqa: PLC0415
 
     from tesseract_wasm_spark.datapipe.dedup import _spread  # noqa: PLC0415
@@ -1305,13 +1296,29 @@ def pdf_text_objstm(spark, sf_dir):
         for pdf in batches:
             out = []
             for did, text in zip(pdf["doc_id"], pdf["text"]):
-                blob = make_modern_pdf(
-                    str(text).split("\n"), predictor=int(did) % 2 == 0
-                )
-                out.append({"doc_id": did, "text_out": extract_pdf_bytes(blob)})
+                blob = make_modern_pdf(str(text).split("\n"), **pdf_kw(int(did)))
+                out.append({"doc_id": did, "text_out": extract_pdf_bytes(blob, order=order)})
             yield pd.DataFrame(out, columns=["doc_id", "text_out"])
 
     return _spread(docs).mapInPandas(roundtrip, "doc_id long, text_out string")
+
+
+def pdf_text_objstm(spark, sf_dir):
+    """Real-world PDF container depth (pdfgen.make_modern_pdf /
+    extract_pdf_bytes): each document's text becomes a PDF 1.5 file with a
+    compressed /Type /XRef cross-reference STREAM (PNG Up predictor for
+    even doc_ids, unfiltered for odd — both decode paths exercised),
+    catalog/page/font dicts packed inside a /Type /ObjStm object stream,
+    FlateDecode content, and a subsetted Type0/Identity-H font whose
+    2-byte CIDs are decodable only through its /ToUnicode CMap (bfchar +
+    both bfrange dst forms; literal and hex show operators alternate per
+    line). Build and extraction run in ONE mapInPandas pass (generation is
+    deterministic from the text), so the oracle is fully ANALYTIC: the
+    extracted text must equal the source text verbatim — any xref/ObjStm/
+    predictor/CMap mis-parse anywhere in the container goes hash-red."""
+    return _pdf_roundtrip(
+        spark, sf_dir, lambda did: {"predictor": did % 2 == 0}, order="stream"
+    )
 
 
 SQL_PDF_TEXT_OBJSTM = "SELECT doc_id, text AS text_out FROM documents"
@@ -1327,27 +1334,9 @@ def pdf_text_columns(spark, sf_dir):
     reproduce the source text verbatim — an ordering bug (or any container
     mis-parse underneath) goes hash-red. Stream-order extraction of the
     same file would interleave the columns and fail."""
-    import pandas as pd  # noqa: PLC0415
-
-    from tesseract_wasm_spark.datapipe.dedup import _spread  # noqa: PLC0415
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def roundtrip(batches):
-        from tesseract_wasm_spark.datapipe.pdfgen import make_modern_pdf  # noqa: PLC0415
-        from tesseract_wasm_spark.datapipe.pdftext import extract_pdf_bytes  # noqa: PLC0415
-
-        for pdf in batches:
-            out = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                blob = make_modern_pdf(str(text).split("\n"), columns=2)
-                out.append({
-                    "doc_id": did,
-                    "text_out": extract_pdf_bytes(blob, order="position"),
-                })
-            yield pd.DataFrame(out, columns=["doc_id", "text_out"])
-
-    return _spread(docs).mapInPandas(roundtrip, "doc_id long, text_out string")
+    return _pdf_roundtrip(
+        spark, sf_dir, lambda _did: {"columns": 2}, order="position"
+    )
 
 
 SQL_PDF_TEXT_COLUMNS = "SELECT doc_id, text AS text_out FROM documents"
@@ -1568,15 +1557,12 @@ def warc_extract(spark, sf_dir):
     from tesseract_wasm_spark.datapipe.warc import (  # noqa: PLC0415
         make_warc, parse_warc_bytes,
     )
-    from tesseract_wasm_spark.datapipe.webtext import main_content_expr  # noqa: PLC0415
+    from tesseract_wasm_spark.datapipe.webtext import (  # noqa: PLC0415
+        html_escape, main_content_expr,
+    )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     base = datetime(2024, 1, 1)
-
-    def esc(t: str) -> str:  # python twin of webtext.html_escape_expr
-        return (t.replace("&", "&amp;").replace("<", "&lt;")
-                 .replace(">", "&gt;").replace('"', "&#34;")
-                 .replace("'", "&#x27;"))
 
     def roundtrip(batches):
         for pdf in batches:
@@ -1588,7 +1574,7 @@ def warc_extract(spark, sf_dir):
                 page = (
                     "<html><head><title>d</title></head><body>"
                     '<nav><a href="/">Home</a></nav><article><p>'
-                    + esc(str(text))
+                    + html_escape(str(text))
                     + "</p></article><footer>2024 example corp</footer>"
                     "</body></html>"
                 ).encode("utf-8")
@@ -2055,15 +2041,10 @@ def warc_charset(spark, sf_dir):
         make_warc, parse_warc_bytes,
     )
     from tesseract_wasm_spark.datapipe.webtext import (  # noqa: PLC0415
-        decode_html_expr, detect_charset_expr, main_content_expr,
+        decode_html_expr, detect_charset_expr, html_escape, main_content_expr,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def esc(t: str) -> str:  # python twin of webtext.html_escape_expr
-        return (t.replace("&", "&amp;").replace("<", "&lt;")
-                 .replace(">", "&gt;").replace('"', "&#34;")
-                 .replace("'", "&#x27;"))
 
     def roundtrip(batches):
         for pdf in batches:
@@ -2073,7 +2054,7 @@ def warc_charset(spark, sf_dir):
                 page = (
                     "<html><head><title>d</title></head><body>"
                     '<nav><a href="/">Home</a></nav><article><p>'
-                    + esc(str(text)) + _WC_PLANT
+                    + html_escape(str(text)) + _WC_PLANT
                     + "</p></article><footer>2024 example corp</footer>"
                     "</body></html>"
                 )

@@ -37,12 +37,8 @@ def _start(df: DataFrame, output_path: str, checkpoint_path: str,
     return writer.start()
 
 
-def read_pages_stream(spark: SparkSession, input_path: str,
-                      max_files_per_trigger: int | None = None) -> DataFrame:
-    reader = spark.readStream.schema(PAGES_DDL)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(input_path)
+def read_pages_stream(spark: SparkSession, input_path: str) -> DataFrame:
+    return spark.readStream.schema(PAGES_DDL).parquet(input_path)
 
 
 def ocr_stream(

@@ -8,9 +8,9 @@ import pytest
 
 from tesseract_wasm_spark import drf
 from tesseract_wasm_spark.api import createOCREngine
-from tesseract_wasm_spark.fixtures import SMALL_PAGE_LINES, expected_text
+from tesseract_wasm_spark.fixtures import SMALL_PAGE_LINES, degraded_rows, expected_text
 from tesseract_wasm_spark.font import export_model
-from tesseract_wasm_spark.raster import render_page
+from tesseract_wasm_spark.raster import empty_page, render_page
 
 MODEL = export_model()
 
@@ -226,10 +226,31 @@ def test_bounding_boxes_line_unit(loaded):
         assert ln["rect"]["top"] < ln["rect"]["bottom"]
 
 
-def test_boxes_after_ocr_come_from_recognition(loaded):
+@pytest.mark.parametrize("page", ["clean", "degraded", "empty"])
+def test_boxes_after_ocr_come_from_recognition(engine, page):
     # reference: getBoundingBoxes after OCR returns OCR-quality boxes
-    # (src/ocr-engine.ts:236-239)
-    t_words = loaded.getTextBoxes("word")
-    l_words = loaded.getBoundingBoxes("word")
+    # (src/ocr-engine.ts:236-239); the degraded-scan tier re-aligns and
+    # splits words, so its boxes differ from the segmentation's
+    engine.loadModel(MODEL)
+    if page == "clean":
+        engine.loadImage(render_page(SMALL_PAGE_LINES))
+    elif page == "empty":
+        engine.loadImage(drf.encode(empty_page(100, 100)))
+    else:
+        # 10 recognized words from 7 segmentation boxes
+        row = next(r for r in degraded_rows(0) if r["url"].endswith("/merge-kx"))
+        engine.loadImage(row["html"])
+    # the empty-page quirk row (test/ocr-engine-test.js:211-229) is a text
+    # box only
+    t_words = [
+        w for w in engine.getTextBoxes("word") if w["text"] or w["rect"]["right"]
+    ]
+    l_words = engine.getBoundingBoxes("word")
     assert len(t_words) == len(l_words)
     assert [w["rect"] for w in t_words] == [w["rect"] for w in l_words]
+    t_lines = [
+        ln for ln in engine.getTextBoxes("line") if ln["text"] or ln["rect"]["right"]
+    ]
+    assert [ln["rect"] for ln in t_lines] == [
+        ln["rect"] for ln in engine.getBoundingBoxes("line")
+    ]

@@ -214,6 +214,41 @@ def test_srp_lsh_pairs(spark, embeddings):
     assert recall > 0.3
 
 
+def test_srp_near_pairs_are_blocked_pairs_over_srp_buckets(spark, embeddings):
+    """srp_near_pairs is cosine_pairs_blocked with the SRP bucket as the
+    block: the same pairs and cosines."""
+    from tesseract_wasm_spark.datapipe.similarity import (
+        cosine_pairs_blocked, srp_near_pairs, srp_signatures,
+    )
+
+    sigs = srp_signatures(embeddings, n_bits=10)
+    blocked = cosine_pairs_blocked(
+        embeddings.join(sigs, "vec_id"), threshold=0.2, block_col="bucket"
+    )
+    got = srp_near_pairs(embeddings, n_bits=10, threshold=0.2)
+    assert sorted(got.collect()) == sorted(blocked.collect())
+    assert got.count() > 0
+
+
+def test_srp_signatures_are_one_table_of_multi_signatures(spark, embeddings):
+    """One SRP kernel: srp_signatures' bucket is the first (and only) table
+    of srp_multi_signatures at the same bits and seed."""
+    from tesseract_wasm_spark.datapipe.similarity import (
+        srp_multi_signatures, srp_signatures,
+    )
+
+    single = {
+        r["vec_id"]: r["bucket"]
+        for r in srp_signatures(embeddings, n_bits=10, seed=9).collect()
+    }
+    multi = {
+        r["vec_id"]: r["buckets"][0]
+        for r in srp_multi_signatures(embeddings, n_bits=10, n_tables=1, seed=9).collect()
+    }
+    assert single == multi
+    assert len(set(single.values())) > 1
+
+
 def test_srp_blocked_pairs_equal_exact_kernel(spark, embeddings):
     """The tiled verify path must return EXACTLY the pairs and cosines of
     the quadratic-within-label kernel."""
@@ -507,32 +542,6 @@ def test_rolling_fingerprint(spark):
     assert got[3] != got[1]
     assert got[4] == ref("abc ")  # lowercased, whitespace collapsed
     assert got[5] == 0
-    # windowed (winnowing) mode: shift-invariant representative
-    long = spark.createDataFrame(
-        [(10, "prefix AAAA common-core-text BBBB"),
-         (11, "totally different head AAAA common-core-text tail")],
-        "doc_id long, text string",
-    )
-    w = {r["doc_id"]: r["rolling_fp"] for r in
-         rolling_fingerprints(long, window=8).collect()}
-    assert isinstance(w[10], int) and isinstance(w[11], int)
-
-    # the vectorized prefix-sum windowed path must equal the naive per-char
-    # rolling reference exactly (min over all window hashes)
-    def ref_win(s, window):
-        import re
-        norm = re.sub(r"\s+", " ", s.lower()).encode()
-        hashes = []
-        for t in range(len(norm) - window + 1):
-            h = 0
-            for ch in norm[t : t + window]:
-                h = (h * ROLL_BASE + ch) % ROLL_PRIME
-            hashes.append(h)
-        return min(hashes)
-
-    for did, txt in [(10, "prefix AAAA common-core-text BBBB"),
-                     (11, "totally different head AAAA common-core-text tail")]:
-        assert w[did] == ref_win(txt, 8), did
 
 
 def test_redact_pii(spark):
@@ -746,6 +755,29 @@ def test_unigram_logprob_ranks_gibberish(spark):
     assert got[4]["nll_bits"] > got[1]["nll_bits"]
     assert got[1]["nll_bits"] == got[2]["nll_bits"]  # identical docs tie
     assert got[1]["n_tokens"] == 9
+
+
+def test_unigram_logprob_persisted_vocab(spark, tmp_path):
+    """A (token, cnt) vocabulary of the same docs, written to parquet and
+    passed back as ``vocab``, scores every document as the self-contained
+    call does."""
+    from tesseract_wasm_spark.datapipe import textstats
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"),
+         (2, "The  dog sleeps; the fox runs"),
+         (3, "zxqv kjhg wqpo mnbv plkj qwer"), (4, "")],
+        "doc_id long, text string",
+    )
+    toks = docs.select(
+        F.explode(F.split(F.trim(F.lower("text")), textstats.WS_RE)).alias("token")
+    ).filter(F.col("token") != "")
+    path = str(tmp_path / "vocab")
+    toks.groupBy("token").agg(F.count("*").alias("cnt")).write.parquet(path)
+
+    persisted = textstats.unigram_logprob(docs, vocab=spark.read.parquet(path))
+    assert sorted(persisted.collect()) == sorted(textstats.unigram_logprob(docs).collect())
+    assert persisted.count() == 3
 
 
 def test_pack_sequences_manifest(spark):
