@@ -50,8 +50,9 @@ def main() -> None:
                          "(production fast path) or the LSTM+CTC v2 path")
     ap.add_argument("--model-blob", default=None,
                     help="path to a TWSM2 trained-weight blob "
-                         "(lstm_ctc.export_lstm_model); shipped to every "
-                         "worker — the cluster form of loadModel")
+                         "(lstm_ctc.export_lstm_model); needs --recognizer "
+                         "lstm; shipped to every worker — the cluster form "
+                         "of loadModel")
     ap.add_argument("--url-filter", action="store_true",
                     help="apply the URL screening gate (datapipe/urlfilter: "
                          "blocklist, IP hosts, media extensions, path-depth "

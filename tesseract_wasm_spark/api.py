@@ -120,12 +120,11 @@ class OCREngine:
 
     def setVariable(self, name: str, value: str) -> None:
         self._variables.set(name, value)
-        # variables change recognition behavior (P11), so memoized results are
-        # stale — the reference likewise applies SetVariable to the live
-        # engine ahead of the next DoOCR (src/lib.cpp:150-170)
+        # variables change recognition only (P11), so the recognition memo is
+        # stale; layout and orientation stand — the reference likewise applies
+        # SetVariable to the live engine ahead of the next DoOCR
+        # (src/lib.cpp:150-170)
         self._result = None
-        self._layout_result = None
-        self._orientation = None
 
     # --- queries ------------------------------------------------------
     def _check_image(self) -> np.ndarray:
@@ -162,10 +161,7 @@ class OCREngine:
     def _layout(self) -> PageResult:
         img = self._check_image()
         if self._layout_result is None:
-            self._layout_result = process_rgba(
-                img, with_text=False, with_orientation=False,
-                variables=self._variables.as_dict(),
-            )
+            self._layout_result = process_rgba(img, with_text=False, with_orientation=False)
         return self._layout_result
 
     def getBoundingBoxes(self, unit: str) -> list[dict]:
@@ -177,16 +173,12 @@ class OCREngine:
         if self._result is not None:
             # the empty-page quirk row is a text box, not a layout box
             words = [w for w in self._result.words if w.text or w.right]
-            items = [_word_item(w) for w in words] if unit == "word" else _line_items(words)
-            return [{"rect": it["rect"], "flags": 0} for it in items]
-        res = self._layout()
-        boxes = [
-            {"rect": {"left": b[0], "top": b[1], "right": b[2], "bottom": b[3]}, "flags": b[4]}
-            for b in res.layout_boxes
-        ]
-        if unit == "line":
-            boxes = _rollup_boxes(res)
-        return boxes
+        else:
+            # before OCR: the segmentation's boxes, grouped by its line ids
+            words = [WordBox(i, li, l, t, r, b, 0, 0.0, "", 0)
+                     for i, (l, t, r, b, _, li) in enumerate(self._layout().layout_boxes)]
+        items = [_word_item(w) for w in words] if unit == "word" else _line_items(words)
+        return [{"rect": it["rect"], "flags": 0} for it in items]
 
     def getTextBoxes(self, unit: str, on_progress=None) -> list[dict]:
         self._check_unit(unit)
@@ -205,10 +197,7 @@ class OCREngine:
         orientation pass, which is the page's costliest stage."""
         img = self._check_image()
         if self._orientation is None:
-            res = process_rgba(
-                img, with_text=False, with_orientation=True,
-                variables=self._variables.as_dict(),
-            )
+            res = process_rgba(img, with_text=False, with_orientation=True)
             self._orientation = (res.rotation, res.orient_confidence)
         rotation, confidence = self._orientation
         return {"rotation": rotation, "confidence": confidence}
@@ -260,32 +249,6 @@ def _line_items(words: list[WordBox]) -> list[dict]:
             }
         )
     return out
-
-
-def _rollup_boxes(res: PageResult) -> list[dict]:
-    # group layout boxes into lines by vertical overlap (no text available)
-    boxes = sorted(res.layout_boxes, key=lambda b: (b[1], b[0]))
-    lines: list[list[tuple]] = []
-    band_bottom = -1
-    for b in boxes:
-        if b[1] > band_bottom:
-            lines.append([])
-            band_bottom = b[3]
-        else:
-            band_bottom = max(band_bottom, b[3])
-        lines[-1].append(b)
-    return [
-        {
-            "rect": {
-                "left": min(b[0] for b in ln),
-                "top": min(b[1] for b in ln),
-                "right": max(b[2] for b in ln),
-                "bottom": max(b[3] for b in ln),
-            },
-            "flags": 0,
-        }
-        for ln in lines
-    ]
 
 
 def _render_hocr_local(res: PageResult) -> str:

@@ -10,8 +10,9 @@ messages on unknown names.
 Every variable except ``user_defined_dpi`` is CONSUMED by the engine
 (engine/page.py:process_rgba documents the behavioral effect of each;
 tests/test_config_behavior.py pins them): the whitelist restricts the emit
-alphabet, preserve_interword_spaces keeps measured gaps, and the twspark_*
-knobs parameterize the replacement threshold and orientation margin.
+alphabet and preserve_interword_spaces keeps measured gaps. The engine's
+own thresholds are constants, not variables (recognize.MIN_PARTIAL_OVERLAP,
+orientation.DECISION_MARGIN), and the degraded-scan tier is always on.
 ``user_defined_dpi`` is round-trip-only because the synthetic raster model
 has no physical DPI (the reference test itself only round-trips it).
 """
@@ -28,10 +29,6 @@ DEFAULT_VARIABLES: dict[str, str] = {
     "user_defined_dpi": "300",
     "tessedit_char_whitelist": "",
     "preserve_interword_spaces": "0",
-    # engine-specific knobs (documented extensions)
-    "twspark_min_partial_overlap": "0.5",
-    "twspark_orientation_margin": "5.0",
-    "twspark_degraded_retry": "1",
 }
 
 

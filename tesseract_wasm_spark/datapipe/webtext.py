@@ -215,28 +215,6 @@ def density_main_text_expr(html: Column) -> Column:
     return F.array_join(F.transform(kept, lambda b: b["txt"]), "\n")
 
 
-def block_quality_expr(txt: Column) -> Column:
-    """The textstats.quality_score composite applied to ONE block's text —
-    identical constants/rounding so the DuckDB twin reproduces it exactly."""
-    from tesseract_wasm_spark.datapipe.textstats import (  # noqa: PLC0415
-        EN_STOPWORDS_RE,
-        _punct_count,
-    )
-
-    n_chars = F.length(txt)
-    ws_tokens = F.size(F.split(F.trim(txt), r"\s+"))
-    punct = _punct_count(txt)  # r06: regex-free, identical count
-    stop = F.size(F.regexp_extract_all(F.lower(txt), F.lit(EN_STOPWORDS_RE), 0))
-    punct_ratio = F.round(punct.cast("double") / F.greatest(n_chars, F.lit(1)), 6)
-    stop_ratio = F.round(stop.cast("double") / F.greatest(ws_tokens, F.lit(1)), 6)
-    return F.round(
-        F.least(F.lit(1.0), ws_tokens.cast("double") / 64.0) * 0.4
-        + F.least(F.lit(1.0), stop_ratio * 4.0) * 0.3
-        + (1.0 - F.least(F.lit(1.0), punct_ratio * 10.0)) * 0.3,
-        6,
-    )
-
-
 def quality_filtered_main_text(docs: DataFrame, *, html_col: str = "html_text",
                                id_col: str = "url",
                                min_quality: float = 0.2) -> DataFrame:
@@ -245,10 +223,13 @@ def quality_filtered_main_text(docs: DataFrame, *, html_col: str = "html_text",
     main text is assembled: boilerplate strip -> link-density keep ->
     per-block quality composite >= min_quality -> join. Pure whole-stage
     codegen expressions end to end (zero Python), so at 100 TB it stays a
-    single-pass map over the scan like main_content."""
+    single-pass map over the scan like main_content. The per-block composite
+    is textstats.quality_cols's document score over the block's text."""
+    from tesseract_wasm_spark.datapipe.textstats import quality_cols  # noqa: PLC0415
+
     good = F.filter(
         _kept_blocks(F.col(html_col)),
-        lambda b: block_quality_expr(b["txt"]) >= F.lit(min_quality),
+        lambda b: quality_cols(b["txt"])["quality"] >= F.lit(min_quality),
     )
     return docs.select(
         id_col,

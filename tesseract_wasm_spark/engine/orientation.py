@@ -118,14 +118,12 @@ def orientation_scores(mask: np.ndarray,
     return up_conf, left_conf
 
 
-def decide_orientation(up_conf: float, left_conf: float,
-                       margin: float = DECISION_MARGIN) -> tuple[int, float]:
+def decide_orientation(up_conf: float, left_conf: float) -> tuple[int, float]:
     """The reference decision tree (src/lib.cpp:264-287) over the two axis
-    scores: -> (rotation in {0, 90, 180, 270}, confidence in {0.0, 1.0}).
-    ``margin`` is the up-vs-left decision margin (P11
-    twspark_orientation_margin; reference literal 5.0, src/lib.cpp:280)."""
+    scores: -> (rotation in {0, 90, 180, 270}, confidence in {0.0, 1.0}),
+    with the reference's literal up-vs-left margin (DECISION_MARGIN)."""
     if max(abs(up_conf), abs(left_conf)) < 1.0:
         return 0, 0.0  # detection failed (reference: src/lib.cpp:264-268)
-    if abs(up_conf) - abs(left_conf) > margin:
+    if abs(up_conf) - abs(left_conf) > DECISION_MARGIN:
         return (0 if up_conf > 0 else 180), 1.0
     return (90 if left_conf > 0 else 270), 1.0

@@ -68,7 +68,8 @@ class PageResult:
     orient_confidence: float = 0.0
     skew_degrees: float = 0.0
     words: list[WordBox] = field(default_factory=list)
-    layout_boxes: list[tuple[int, int, int, int, int]] = field(default_factory=list)
+    # (left, top, right, bottom, flags, line_id); readers take fields by index
+    layout_boxes: list[tuple[int, int, int, int, int, int]] = field(default_factory=list)
     page_text: str = ""
     # raw orientation axis scores (orientation.orientation_scores) — kept on
     # the result so the decision tree can be re-derived independently of the
@@ -124,13 +125,6 @@ def process_rgba(
       - ``preserve_interword_spaces``: "1" keeps the measured inter-word gap
         as that many spaces instead of normalizing to one (Tesseract's
         documented effect of the same parameter)
-      - ``twspark_min_partial_overlap``: replacement-char threshold
-      - ``twspark_orientation_margin``: the up-vs-left decision margin
-        (reference default 5.0, src/lib.cpp:280)
-      - ``twspark_degraded_retry``: "0" disables the degraded-scan
-        recovery tier (engine/recognize.py) — blurred pages then degrade
-        to replacement chars instead of being re-matched against the
-        count-threshold template banks
     ``user_defined_dpi`` is stored for round-trip parity but has no pixel
     meaning for the synthetic raster model."""
     from tesseract_wasm_spark.font import LANG_CHARSETS  # noqa: PLC0415
@@ -140,9 +134,6 @@ def process_rgba(
     v = variables or {}
     whitelist = v.get("tessedit_char_whitelist", "") or None
     preserve_spaces = v.get("preserve_interword_spaces", "0") == "1"
-    min_overlap = float(v.get("twspark_min_partial_overlap", "0.5"))
-    orient_margin = float(v.get("twspark_orientation_margin", "5.0"))
-    degraded_retry = v.get("twspark_degraded_retry", "1") != "0"
 
     h, w = rgba.shape[:2]
     res = PageResult(width=w, height=h)
@@ -158,7 +149,7 @@ def process_rgba(
     from tesseract_wasm_spark.engine.deskew import detect_shear_per_mille, unshear  # noqa: PLC0415
 
     k = detect_shear_per_mille(comps)
-    if k != 0 and degraded_retry and abs(k) <= 5:
+    if k != 0 and abs(k) <= 5:
         # defocused scans thicken strokes and jitter the component-bottom
         # fit by a row, which reads as a tiny spurious shear; unshearing
         # would split thickened glyphs across column-shift boundaries and
@@ -197,11 +188,11 @@ def process_rgba(
             lines.append(line)
             line_block.append(b)
 
-    # layout-only boxes (P4): available without recognition; empty page -> 0
-    for line in lines:
+    # layout-only boxes (P4): available without recognition; empty page -> 0.
+    # Each carries its segmentation line id, so line rects need no regrouping
+    for li, line in enumerate(lines):
         for word in line.words:
-            flags = 0
-            res.layout_boxes.append((word.left, word.top, word.right, word.bottom, flags))
+            res.layout_boxes.append((word.left, word.top, word.right, word.bottom, 0, li))
 
     if with_orientation:
         from tesseract_wasm_spark.engine.orientation import (  # noqa: PLC0415
@@ -210,9 +201,7 @@ def process_rgba(
 
         up, left = orientation_scores(mask, lines)
         res.up_conf, res.left_conf = float(up), float(left)
-        res.rotation, res.orient_confidence = decide_orientation(
-            up, left, orient_margin
-        )
+        res.rotation, res.orient_confidence = decide_orientation(up, left)
 
     if not with_text:
         return res
@@ -232,10 +221,7 @@ def process_rgba(
             mask, lines, whitelist=whitelist, lang=lang, model=lstm_model
         )
     else:
-        recognized = recognize_words(
-            mask, lines, whitelist=whitelist, min_partial_overlap=min_overlap,
-            lang=lang, degraded_retry=degraded_retry,
-        )
+        recognized = recognize_words(mask, lines, whitelist=whitelist, lang=lang)
     wid = 0
     text_lines: list[str] = []
     for li, line in enumerate(lines):

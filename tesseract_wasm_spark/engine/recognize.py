@@ -176,17 +176,15 @@ def _extract_cells(mask: np.ndarray, lines: list[Line]) -> tuple[np.ndarray, lis
 
 def recognize_words(mask: np.ndarray, lines: list[Line], *,
                     whitelist: str | None = None,
-                    min_partial_overlap: float = MIN_PARTIAL_OVERLAP,
                     lang: str = "eng",
-                    degraded_retry: bool = True,
                     ) -> list[list[tuple[str, float]]]:
     """Per line, per word: (text, confidence). Batched over the whole page.
 
     ``whitelist`` restricts the emit alphabet (tessedit_char_whitelist);
-    ``min_partial_overlap`` is the replacement-char threshold
-    (twspark_min_partial_overlap); ``lang`` selects the glyph model (S4 —
-    the reference hardcodes "eng", src/lib.cpp:138; the Spark pipeline
-    dispatches per row)."""
+    ``lang`` selects the glyph model (S4 — the reference hardcodes "eng",
+    src/lib.cpp:138; the Spark pipeline dispatches per row). A cell that
+    matches no template reads as the replacement char when its best
+    Jaccard overlap is under MIN_PARTIAL_OVERLAP."""
     cells_bool, index = _extract_cells(mask, lines)
     results: list[list[tuple[str, float]]] = [[] for _ in lines]
     if len(index) == 0:
@@ -219,7 +217,7 @@ def recognize_words(mask: np.ndarray, lines: list[Line], *,
         no_ink = cell_ink == 0
         conf[miss] = np.where(no_ink, 0.0, jacc)
         chars_arr[miss] = chars_bytes[best]
-        use_repl[miss] = no_ink | (jacc < min_partial_overlap)
+        use_repl[miss] = no_ink | (jacc < MIN_PARTIAL_OVERLAP)
 
     # bulk decode: slice one latin-1 string per word; per-word confidence via
     # segmented reduceat (no per-cell Python in the common all-exact case)
@@ -276,7 +274,7 @@ def recognize_words(mask: np.ndarray, lines: list[Line], *,
     # against the count-threshold degraded banks. Clean pages never get here
     # (no unmatched cells), so the byte-identity fast path is untouched.
     remaining = sorted(retry_lines - resolved)
-    if degraded_retry and remaining and stroke_thickness(mask) >= DEGRADED_MIN_THICKNESS:
+    if remaining and stroke_thickness(mask) >= DEGRADED_MIN_THICKNESS:
         _degraded_retry(mask, lines, remaining, results,
                         whitelist=whitelist, lang=lang)
     return results

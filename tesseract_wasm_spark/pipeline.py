@@ -16,9 +16,9 @@ particular one matmul per page (the analog of the reference's SIMD dot-product
 lever, src/tesseract-init.js:30-39).
 
 Scale design (the 100 TB view):
-  - the extraction map is embarrassingly parallel: no shuffle at all unless
-    skew rebalancing is requested; downstream relational ops shuffle only on
-    (url) / (url, line_id) keys.
+  - the extraction map is embarrassingly parallel: its one shuffle is the
+    skew rebalance below (none on a stream); downstream relational ops
+    shuffle only on (url) / (url, line_id) keys.
   - skew (O10): page byte-size is heavy-tailed; ``rebalance_pages`` salts by
     xxhash64(url) into one uniform partition per core (one task wave), and
     at cluster scale AQE's coalescing/skew handling refines it at runtime.
@@ -69,7 +69,13 @@ def rebalance_pages(df: DataFrame, num_partitions: int | None = None) -> DataFra
     in 0.70 s against 0.97 s as 8 tasks; at 256 and 1024 the two counts
     read within noise of each other, and the heaviest stage's slowest task
     took a median 1.07x its median task, no more than as 8 tasks. Above
-    that it is unmeasured; pass ``num_partitions`` there."""
+    that it is unmeasured; pass ``num_partitions`` there.
+
+    A streaming frame is returned untouched: file-stream sources already
+    split per file, and a repartition would force a shuffle per
+    micro-batch (as datapipe.dedup._spread)."""
+    if df.isStreaming:
+        return df
     if num_partitions is None:
         num_partitions = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(num_partitions, F.xxhash64("url"))
@@ -84,10 +90,12 @@ def _bind_engine(variables: dict[str, str] | None, model_blob: bytes | None, *,
     The inputs are validated on the driver, so a bad value fails the CALL
     rather than 10^4 tasks: ``variables`` through config.VariableStore
     (raising the reference's message on an unknown name), ``model_blob``
-    parsed once into its EXPLICIT weights tuple. The task closure carries
-    the bound call and every page gets the weights as an argument — never
-    worker-global state: Spark reuses python worker processes across jobs,
-    so a global registration would leak one job's model into the next."""
+    parsed once into its EXPLICIT weights tuple (only the lstm recognizer
+    reads weights, so a blob with any other is refused, not ignored). The
+    task closure carries the bound call and every page gets the weights as
+    an argument — never worker-global state: Spark reuses python worker
+    processes across jobs, so a global registration would leak one job's
+    model into the next."""
     from tesseract_wasm_spark.engine.page import process_page  # noqa: PLC0415
 
     if variables is not None:
@@ -99,6 +107,8 @@ def _bind_engine(variables: dict[str, str] | None, model_blob: bytes | None, *,
         variables = store.as_dict()
     lstm_model = None
     if model_blob is not None:
+        if recognizer != "lstm":
+            raise ValueError("model_blob needs recognizer='lstm'")
         from tesseract_wasm_spark.engine.lstm_ctc import parse_lstm_model  # noqa: PLC0415
 
         lstm_model = parse_lstm_model(model_blob)[1]
@@ -115,7 +125,6 @@ def ocr_pages(
     with_text: bool = True,
     with_orientation: bool = True,
     recognizer: str = "template",
-    rebalance: bool = True,
     num_partitions: int | None = None,
     variables: dict[str, str] | None = None,
     model_blob: bytes | None = None,
@@ -136,7 +145,7 @@ def ocr_pages(
     opaque UDF (SURVEY.md §4 O3).
 
     ``variables`` is the validated P11 parameter store (config.VariableStore
-    — whitelist, interword-space preservation, engine knobs); values are
+    — whitelist, interword-space preservation); values are
     validated on the driver and captured by the task closure, the distributed
     analog of the reference's per-engine setVariable (src/lib.cpp:150-170).
     """
@@ -146,8 +155,7 @@ def ocr_pages(
     src = pages.select(*cols)  # column pruning before the shuffle: never move text/warc_ts
     if "lang" not in pages.columns:
         src = src.withColumn("lang", F.lit("eng"))
-    if rebalance:
-        src = rebalance_pages(src, num_partitions)
+    src = rebalance_pages(src, num_partitions)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # imports inside the worker: keeps the task closure tiny
@@ -212,7 +220,6 @@ def extract_any(
     *,
     recognizer: str = "template",
     variables: dict[str, str] | None = None,
-    rebalance: bool = True,
     num_partitions: int | None = None,
     model_blob: bytes | None = None,
 ) -> DataFrame:
@@ -232,8 +239,8 @@ def extract_any(
          the payload bytes to NULL for every row that doesn't need Python
          (html/image) — after this projection only OCR/PDF rows still carry
          their bytes;
-      2. an optional ``rebalance_pages`` salt repartition (the same
-         one-Exchange skew handling as ``ocr_pages``);
+      2. the ``rebalance_pages`` salt repartition (the same one-Exchange
+         skew handling as ``ocr_pages``; none on a stream);
       3. one ``mapInPandas`` pass decodes the remaining payloads (DRF -> OCR
          engine, PDF -> zlib-inflating stream parser) and passes the
          already-extracted html/image rows through untouched.
@@ -297,8 +304,7 @@ def extract_any(
         F.when(kind.isin("ocr", "pdf"), payload).alias("payload"),
         lang.alias("lang"),
     )
-    if rebalance:
-        src = rebalance_pages(src, num_partitions)
+    src = rebalance_pages(src, num_partitions)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from tesseract_wasm_spark.datapipe.pdftext import extract_pdf_bytes  # noqa: PLC0415

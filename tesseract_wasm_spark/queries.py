@@ -647,28 +647,10 @@ def html_block_langs(spark, sf_dir):
     derivation: the oracle builds the same page, extracts the same blocks,
     and argmaxes the same marker counts in SQL, then unnests with
     ordinality."""
-    from tesseract_wasm_spark.datapipe.textstats import LANG_MARKERS  # noqa: PLC0415
     from tesseract_wasm_spark.datapipe.webtext import (  # noqa: PLC0415
-        _kept_blocks,
+        block_languages,
         html_escape_expr,
     )
-
-    def block_lang(txt):
-        lowered = F.lower(txt)
-        sc = {
-            lang: F.coalesce(
-                F.size(F.regexp_extract_all(lowered, F.lit(pat), 0)), F.lit(0)
-            )
-            for lang, pat in LANG_MARKERS.items()
-        }
-        best = F.greatest(*sc.values())
-        return (
-            F.when(best == 0, "und")
-            .when(sc["de"] == best, "de")
-            .when(sc["en"] == best, "en")
-            .when(sc["es"] == best, "es")
-            .otherwise("fr")
-        )
 
     docs = _t(spark, sf_dir, "documents")
     page = F.concat(
@@ -681,17 +663,12 @@ def html_block_langs(spark, sf_dir):
         F.lit(f"</p><p>{_DE_PARA}</p></article>"
               "<footer>2024 example corp</footer></body></html>"),
     )
-    # explode FIRST, score as plain columns: the per-language regex counts
-    # then run inside whole-stage codegen instead of an interpreted
-    # higher-order lambda (measured ~2x on the sf0.1 corpus)
-    blocks = docs.select(
-        "doc_id",
-        F.posexplode(F.transform(_kept_blocks(page), lambda b: b["txt"]))
-        .alias("block_pos", "_txt"),
-    )
-    return blocks.select(
-        "doc_id", "block_pos", block_lang(F.col("_txt")).alias("lang")
-    )
+    # block_languages explodes FIRST and scores plain columns: the
+    # per-language regex counts then run inside whole-stage codegen instead
+    # of an interpreted higher-order lambda (measured ~2x on the sf0.1 corpus)
+    return block_languages(
+        docs.select("doc_id", page.alias("h")), html_col="h", id_col="doc_id"
+    ).withColumnRenamed("pred_lang", "lang")
 
 
 def _sql_html_block_langs() -> str:
@@ -990,7 +967,7 @@ def _sql_main_text_over(col_sql: str, min_quality: float | None = None,
     qfilter = ""
     if min_quality is not None:
         # the textstats quality composite over one block's text — identical
-        # constants and rounding as webtext.block_quality_expr
+        # constants and rounding as textstats.quality_cols' "quality"
         from tesseract_wasm_spark.datapipe.textstats import EN_STOPWORDS_RE  # noqa: PLC0415
 
         ws = r"len(string_split_regex(trim(b.txt), '\s+'))"

@@ -55,11 +55,10 @@ def ocr_stream(
     the batch-with-checkpoint shape used in tests and backfills; leave False
     for a long-running ingest query.
 
-    Note: no shuffle-rebalance inside the stream (rebalance=False) — file
-    sources already split by file, and streaming repartition would force a
-    stateful shuffle per micro-batch.
+    No shuffle-rebalance inside the stream (pipeline.rebalance_pages returns
+    a streaming frame untouched): file sources already split by file.
     """
-    results = ocr_pages(read_pages_stream(spark, input_path), rebalance=False)
+    results = ocr_pages(read_pages_stream(spark, input_path))
     return _start(results, output_path, checkpoint_path, available_now)
 
 
@@ -75,7 +74,7 @@ def extract_stream(
     text_out, error) parquet, dispatching DRF/PDF/HTML exactly like the batch
     pipeline.extract_any (its single-scan plan composes with Structured
     Streaming because every row is extracted statelessly)."""
-    results = extract_any(read_pages_stream(spark, input_path), rebalance=False)
+    results = extract_any(read_pages_stream(spark, input_path))
     return _start(results, output_path, checkpoint_path, available_now)
 
 

@@ -8,9 +8,11 @@ import pytest
 
 from tesseract_wasm_spark import drf
 from tesseract_wasm_spark.api import createOCREngine
-from tesseract_wasm_spark.fixtures import SMALL_PAGE_LINES, degraded_rows, expected_text
+from tesseract_wasm_spark.fixtures import (
+    SMALL_PAGE_LINES, TWO_COL_LINES, degraded_rows, expected_text,
+)
 from tesseract_wasm_spark.font import export_model
-from tesseract_wasm_spark.raster import empty_page, render_page
+from tesseract_wasm_spark.raster import empty_page, render_columns, render_page
 
 MODEL = export_model()
 
@@ -203,13 +205,13 @@ def test_orientation_memo_invalidation(engine, orientation_calls):
     engine.loadModel(MODEL)  # the model does not change orientation
     engine.getOrientation()
     assert len(orientation_calls) == 1
-    # a margin this wide sends every page down the left axis (src/lib.cpp:280)
-    engine.setVariable("twspark_orientation_margin", "1000")
-    assert engine.getOrientation() == {"rotation": 270, "confidence": 1.0}
-    assert len(orientation_calls) == 2
+    # variables change recognition only: the orientation memo stands
+    engine.setVariable("tessedit_char_whitelist", "abc")
+    assert engine.getOrientation() == {"rotation": 0, "confidence": 1.0}
+    assert len(orientation_calls) == 1
     engine.loadImage(render_page(SMALL_PAGE_LINES, rot=90))
     assert engine.getOrientation() == {"rotation": 90, "confidence": 1.0}
-    assert len(orientation_calls) == 3
+    assert len(orientation_calls) == 2
     engine.clearImage()
     with pytest.raises(ValueError, match="No image loaded"):
         engine.getOrientation()
@@ -224,6 +226,18 @@ def test_bounding_boxes_line_unit(loaded):
     for ln in lines:
         assert ln["rect"]["left"] < ln["rect"]["right"]
         assert ln["rect"]["top"] < ln["rect"]["bottom"]
+
+
+def test_line_boxes_before_ocr_keep_columns(engine):
+    # before OCR the line rects come from the segmentation's own lines, so a
+    # two-column page gives one rect per column line, as after recognition
+    engine.loadModel(MODEL)
+    engine.loadImage(render_columns(TWO_COL_LINES))
+    before = engine.getBoundingBoxes("line")
+    engine.getText()
+    after = engine.getBoundingBoxes("line")
+    assert len(before) == len(TWO_COL_LINES[0]) + len(TWO_COL_LINES[1])
+    assert before == after
 
 
 @pytest.mark.parametrize("page", ["clean", "degraded", "empty"])

@@ -1,6 +1,7 @@
 """P11 behavioral tests: config variables must CHANGE engine output, not just
 round-trip (reference: setVariable feeds Tesseract's live parameter store,
-src/lib.cpp:150-170; round-trip shape pinned separately in test_api.py)."""
+src/lib.cpp:150-170; round-trip shape pinned separately in test_api.py), and
+the engine's fixed thresholds must act where they are documented to."""
 
 from __future__ import annotations
 
@@ -8,7 +9,9 @@ import numpy as np
 import pytest
 
 from tesseract_wasm_spark.api import createOCREngine
+from tesseract_wasm_spark.engine.orientation import DECISION_MARGIN, decide_orientation
 from tesseract_wasm_spark.engine.page import process_rgba
+from tesseract_wasm_spark.engine.recognize import MIN_PARTIAL_OVERLAP
 from tesseract_wasm_spark.font import REPLACEMENT_CHAR
 from tesseract_wasm_spark.raster import render_page
 from tesseract_wasm_spark.font import export_model
@@ -62,24 +65,38 @@ def test_orientation_margin_is_consumed():
     img = render_page(["The quick brown fox jumps over the lazy dog"] * 4)
     base = process_rgba(img)
     assert (base.rotation, base.orient_confidence) == (0, 1.0)
-    # an absurd margin forces the up-vs-left tie branch -> sideways verdict,
-    # proving the knob reaches the decision tree
-    forced = process_rgba(img, variables={"twspark_orientation_margin": "1e9"})
-    assert forced.rotation in (90, 270)
+    assert abs(base.up_conf) - abs(base.left_conf) > DECISION_MARGIN
+    # the up axis decides only when it leads by MORE than the reference's
+    # literal margin (src/lib.cpp:280); at the margin the left axis decides
+    assert DECISION_MARGIN == 5.0
+    assert decide_orientation(1.0 + DECISION_MARGIN, 1.0) == (90, 1.0)
+    assert decide_orientation(1.5 + DECISION_MARGIN, 1.0) == (0, 1.0)
+    assert decide_orientation(-1.5 - DECISION_MARGIN, 1.0) == (180, 1.0)
+    assert decide_orientation(1.0 + DECISION_MARGIN, -1.0) == (270, 1.0)
 
 
 def test_min_partial_overlap_threshold():
+    """A cell that matches no template reads as its nearest glyph while its
+    Jaccard overlap is at least MIN_PARTIAL_OVERLAP, and as the replacement
+    char below it."""
     img = render_page(["Hi there"])
     g = img[..., 0].copy()
-    # degrade one glyph: erase a couple of ink pixels inside the first cell
     ys, xs = np.where(g < 128)
-    for i in range(2):
-        g[ys[i], xs[i]] = 245
-    rgba = np.stack([g, g, g, np.full_like(g, 255)], axis=-1)
-    lenient = process_rgba(rgba, variables={"twspark_min_partial_overlap": "0.3"})
-    strict = process_rgba(rgba, variables={"twspark_min_partial_overlap": "0.999"})
-    assert REPLACEMENT_CHAR not in lenient.page_text
-    assert REPLACEMENT_CHAR in strict.page_text
+    in_h = xs < xs.min() + 5  # the ink of the first glyph cell, "H"
+
+    def erase(n):
+        g2 = g.copy()
+        g2[ys[in_h][:n], xs[in_h][:n]] = 245
+        res = process_rgba(np.stack([g2, g2, g2, np.full_like(g2, 255)], axis=-1))
+        # word confidence = mean over its cells; "i" still matches exactly
+        return res.page_text, 2 * res.words[0].confidence - 1.0
+
+    text, overlap = erase(8)
+    assert text == "Hi there\n"
+    assert MIN_PARTIAL_OVERLAP <= overlap < 1.0
+    text, overlap = erase(10)
+    assert text == REPLACEMENT_CHAR + "i there\n"
+    assert overlap < MIN_PARTIAL_OVERLAP
 
 
 def test_pipeline_threads_variables(spark):

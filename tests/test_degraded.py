@@ -8,8 +8,8 @@ two-level render binarizes to the count-threshold morphology
 exactly via pre-degraded template banks + alignment search + verified
 gap repair. These tests pin: byte-identical recovery, honest reduced
 confidences, merged-word splitting, the unigram-prior collision
-tie-break, the thickness gate (clean/garbage pages untouched), and the
-``twspark_degraded_retry`` kill switch.
+tie-break, the tier's premise (blurred cells miss every clean template),
+and the thickness gate (clean/garbage pages never reach the tier).
 """
 
 from __future__ import annotations
@@ -33,6 +33,23 @@ from tesseract_wasm_spark.raster import (
 )
 
 
+@pytest.fixture
+def tier_calls(monkeypatch):
+    """One entry per page that reaches the degraded-scan tier: the line ids
+    handed to it."""
+    from tesseract_wasm_spark.engine import recognize
+
+    calls = []
+    real = recognize._degraded_retry
+
+    def spy(mask, lines, remaining, results, **kw):
+        calls.append(list(remaining))
+        return real(mask, lines, remaining, results, **kw)
+
+    monkeypatch.setattr(recognize, "_degraded_retry", spy)
+    return calls
+
+
 def test_blur_recovery_byte_identical_seeded_pages():
     rng = np.random.default_rng(23)
     for _ in range(15):
@@ -50,11 +67,12 @@ def test_recovered_confidences_are_reduced_not_full():
     assert all(0.3 < c < 1.0 for c in confs)  # degraded, not exact, not garbage
 
 
-def test_clean_page_confidences_stay_exact():
+def test_clean_page_confidences_stay_exact(tier_calls):
     lines = _seeded_lines(np.random.default_rng(5), 5)
     res = process_page(render_page_drf(lines), with_orientation=False)
     assert res.page_text == expected_text(lines)
     assert all(w.confidence == 1.0 for w in res.words)
+    assert tier_calls == []
 
 
 def test_merged_words_split_back_with_boxes():
@@ -82,13 +100,24 @@ def test_unigram_prior_resolves_capital_I():
     assert res.page_text == expected_text(pg)
 
 
-def test_kill_switch_variable():
+def test_degraded_cells_miss_clean_templates(tier_calls):
+    # the tier's premise: blur moves the cells off every clean template key,
+    # so the page reads only through the tier's degraded banks
+    from tesseract_wasm_spark.engine.components import label_components
+    from tesseract_wasm_spark.engine.recognize import (
+        _extract_cells, _pack_keys, _template_keys,
+    )
+    from tesseract_wasm_spark.engine.segment import segment
+
     lines = _seeded_lines(np.random.default_rng(9), 4)
-    payload = degrade_page_drf(render_page_drf(lines))
-    res = process_page(payload, with_orientation=False,
-                       variables={"twspark_degraded_retry": "0"})
-    assert res.page_text != expected_text(lines)
-    assert REPLACEMENT_CHAR in res.page_text
+    mask = binarize(degrade_boxblur(render_page(lines, channels=1)))
+    cells, _ = _extract_cells(mask, segment(label_components(mask)))
+    tkeys, _ = _template_keys(None, "eng")
+    assert not np.isin(_pack_keys(cells), tkeys).any()
+    res = process_page(degrade_page_drf(render_page_drf(lines)),
+                       with_orientation=False)
+    assert res.page_text == expected_text(lines)
+    assert len(tier_calls) == 1
 
 
 def test_thickness_gate_separates_populations():
@@ -99,10 +128,10 @@ def test_thickness_gate_separates_populations():
     assert stroke_thickness(blurred) > DEGRADED_MIN_THICKNESS * 2
 
 
-def test_garbage_page_behavior_unchanged_by_tier():
+def test_garbage_page_behavior_unchanged_by_tier(tier_calls):
     # speckle noise is thin: the thickness gate keeps the tier out, so the
-    # pre-existing graceful-degradation contract (replacement chars, low
-    # confidence) is byte-stable with the tier enabled
+    # graceful-degradation contract (replacement chars, low confidence) is
+    # the clean recognizer's alone
     rng = np.random.default_rng(77)
     img = np.full((120, 300), 245, dtype=np.uint8)
     noise = rng.random((120, 300)) < 0.08
@@ -111,11 +140,10 @@ def test_garbage_page_behavior_unchanged_by_tier():
     assert stroke_thickness(mask) < DEGRADED_MIN_THICKNESS
     from tesseract_wasm_spark import drf
 
-    on = process_page(drf.encode(img[:, :, None]), with_orientation=False)
-    off = process_page(drf.encode(img[:, :, None]), with_orientation=False,
-                       variables={"twspark_degraded_retry": "0"})
-    assert on.page_text == off.page_text
-    assert [w.confidence for w in on.words] == [w.confidence for w in off.words]
+    res = process_page(drf.encode(img[:, :, None]), with_orientation=False)
+    assert tier_calls == []
+    assert REPLACEMENT_CHAR in res.page_text
+    assert all(w.confidence < 1.0 for w in res.words)
 
 
 def test_double_blur_graceful_not_crashing():

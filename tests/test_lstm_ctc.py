@@ -244,3 +244,18 @@ def test_model_blob_flows_through_extract_any(spark):
     via_ocr_pages = ocr_pages(pages.filter(pages.url == ocr_url), recognizer="lstm",
                               with_orientation=False, model_blob=bad).collect()
     assert [r["page_text"] for r in via_ocr_pages] == [tampered[ocr_url][1]]
+
+
+def test_model_blob_needs_lstm_recognizer(spark):
+    """Only the lstm recognizer decodes from weights: a blob passed with the
+    template recognizer fails the call on the driver instead of being
+    ignored by every task."""
+    from tesseract_wasm_spark.fixtures import fixtures_df
+    from tesseract_wasm_spark.pipeline import extract_any, ocr_pages
+
+    pages = fixtures_df(spark, n_corpus_pages=1)
+    blob = _blob_without("e")
+    with pytest.raises(ValueError, match="model_blob needs recognizer='lstm'"):
+        ocr_pages(pages, model_blob=blob)
+    with pytest.raises(ValueError, match="model_blob needs recognizer='lstm'"):
+        extract_any(pages, recognizer="template", model_blob=blob)

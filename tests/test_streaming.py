@@ -109,3 +109,22 @@ def test_dedup_stream_within_watermark(spark, tmp_path):
     q2 = dedup_stream(spark, in_dir, out_dir, ckpt)
     q2.awaitTermination(120)
     assert spark.read.parquet(out_dir).count() == n_distinct_payloads
+
+
+def test_rebalance_leaves_streams_alone(spark, tmp_path):
+    """pipeline.rebalance_pages returns a streaming frame untouched (file
+    sources already split per file; a repartition would shuffle every
+    micro-batch), while a batch page job still gets its one Exchange."""
+    from tesseract_wasm_spark.pipeline import extract_any, ocr_pages, rebalance_pages
+    from tesseract_wasm_spark.streaming import read_pages_stream
+
+    in_dir = str(tmp_path / "pages")
+    fixtures_df(spark, n_corpus_pages=1).write.parquet(in_dir)
+    stream = read_pages_stream(spark, in_dir)
+    assert rebalance_pages(stream) is stream
+    for job in (ocr_pages, extract_any):
+        streamed = job(stream)._jdf.queryExecution().analyzed().toString()
+        assert "RepartitionByExpression" not in streamed, streamed
+        batch = job(spark.read.parquet(in_dir))
+        plan = batch._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange") == 1, plan
