@@ -65,7 +65,9 @@ def main() -> None:
                     help="partitions of the salted page shuffle (default: "
                          "one task per core)")
     ap.add_argument("--cores", type=int, default=None,
-                    help="local mode cores (ignored under a real cluster master)")
+                    help="local mode cores (default: $SPARK_GRAFT_CPUS, else "
+                         "the host's CPU count; ignored under a real cluster "
+                         "master)")
     args = ap.parse_args()
 
     from tesseract_wasm_spark.scale import run_extract_with_resume, run_with_resume

@@ -8,6 +8,11 @@ call-for-call — same state machine, same precondition errors, same result
 shapes — and so the reference's behavioral protocol tests (progress, memoized
 re-run, clear-image invalidation — test/ocr-engine-test.js:309-363) have a
 direct analog to run against.
+
+Only the state machine lives here. A page is recognized by the same
+``process_rgba`` the Spark mappers call, and its items and hOCR come from
+the Python twins in ``outputs``, so each answer equals the Spark row of
+the same page (tests/test_api_parity.py).
 """
 
 from __future__ import annotations
@@ -18,7 +23,8 @@ import numpy as np
 
 from tesseract_wasm_spark import drf
 from tesseract_wasm_spark.config import VariableStore
-from tesseract_wasm_spark.engine.page import PageResult, WordBox, process_rgba
+from tesseract_wasm_spark.engine.page import PageResult, process_rgba
+from tesseract_wasm_spark.outputs import box_items, page_hocr, text_items
 
 ERR_NO_IMAGE = "No image loaded"  # reference: src/ocr-engine.ts:323
 ERR_NO_MODEL = "No text recognition model loaded"  # src/ocr-engine.ts:317
@@ -38,12 +44,16 @@ class OCREngine:
     data with "Text recognition model failed to load", src/lib.cpp:133-148,
     src/ocr-engine.ts:152-165). Loading a model selects the recognition
     language; in the distributed pipeline the same selection happens per row
-    via the lang column (SURVEY.md §2.1 S4).
+    via the lang column (SURVEY.md §2.1 S4). A TWSM2 blob
+    (lstm_ctc.export_lstm_model) also carries LSTM weights: while one is
+    loaded, pages are recognized by the lstm recognizer from those weights,
+    as ``ocr_pages(recognizer="lstm", model_blob=...)`` recognizes them.
     """
 
     def __init__(self) -> None:
         self._model_loaded = False
         self._lang = "eng"
+        self._lstm_model: tuple | None = None
         self._image: np.ndarray | None = None
         self._result: PageResult | None = None
         self._layout_result: PageResult | None = None
@@ -58,18 +68,19 @@ class OCREngine:
             raise ValueError(ERR_MODEL_LOAD)
         try:
             if bytes(model[:5]) == b"TWSM2":
-                # trained-weight blob: validated, and its language selected;
-                # the weights reach recognition only as an explicit
-                # lstm_model argument, never as process-global state
+                # trained-weight blob: the weights stay on this engine and
+                # reach recognition as its lstm_model argument, never as
+                # process-global state
                 from tesseract_wasm_spark.engine.lstm_ctc import (  # noqa: PLC0415
                     parse_lstm_model,
                 )
 
-                self._lang = parse_lstm_model(model)[0]
+                lang, lstm_model = parse_lstm_model(model)
             else:
-                self._lang = parse_model(model)
+                lang, lstm_model = parse_model(model), None
         except ValueError as exc:
             raise ValueError(ERR_MODEL_LOAD) from exc
+        self._lang, self._lstm_model = lang, lstm_model
         self._model_loaded = True
         self._result = None  # a new model invalidates recognition results
 
@@ -153,6 +164,8 @@ class OCREngine:
             self._result = process_rgba(
                 img, with_text=True, with_orientation=False,
                 variables=self._variables.as_dict(), lang=self._lang,
+                recognizer="template" if self._lstm_model is None else "lstm",
+                lstm_model=self._lstm_model,
             )
         if on_progress:
             on_progress(100)
@@ -170,23 +183,19 @@ class OCREngine:
         outputs.layout_df gives (reference comment src/ocr-engine.ts:236-239):
         the degraded-scan tier re-aligns and splits the segmentation's words."""
         self._check_unit(unit)
-        if self._result is not None:
-            # the empty-page quirk row is a text box, not a layout box
-            words = [w for w in self._result.words if w.text or w.right]
-        else:
-            # before OCR: the segmentation's boxes, grouped by its line ids
-            words = [WordBox(i, li, l, t, r, b, 0, 0.0, "", 0)
-                     for i, (l, t, r, b, _, li) in enumerate(self._layout().layout_boxes)]
-        items = [_word_item(w) for w in words] if unit == "word" else _line_items(words)
-        return [{"rect": it["rect"], "flags": 0} for it in items]
+        return box_items(self._result if self._result is not None else self._layout(), unit)
 
     def getTextBoxes(self, unit: str, on_progress=None) -> list[dict]:
         self._check_unit(unit)
         self._check_model()
         res = self._ocr(on_progress)
-        if unit == "word":
-            return [_word_item(w) for w in res.words]
-        return _line_items(res.words)
+        if unit == "line" and not res.layout_boxes:
+            # an empty page's one text box holds at line level too (the
+            # reference quirk, test/ocr-engine-test.js:211-229); lines_df
+            # drops it
+            return [{"rect": {"left": 0, "top": 0, "right": 0, "bottom": 0},
+                     "flags": 0, "confidence": 0.0, "text": "", "line_id": 0}]
+        return text_items(res.words, unit)
 
     def getText(self, on_progress=None) -> str:
         self._check_model()
@@ -203,119 +212,12 @@ class OCREngine:
         return {"rotation": rotation, "confidence": confidence}
 
     def getHOCR(self, on_progress=None) -> str:
-        """Single-page hOCR via the same renderer the DataFrame path uses."""
+        """Single-page hOCR from outputs.hocr_df's templates and rules."""
         self._check_model()
-        res = self._ocr(on_progress)
-        return _render_hocr_local(res)
+        return page_hocr(self._ocr(on_progress))
 
 
 def createOCREngine() -> OCREngine:
     """Factory mirroring the reference's createOCREngine
     (src/ocr-engine.ts:383-401)."""
     return OCREngine()
-
-
-def _word_item(w: WordBox) -> dict:
-    return {
-        "rect": {"left": w.left, "top": w.top, "right": w.right, "bottom": w.bottom},
-        "flags": w.flags,
-        "confidence": w.confidence,
-        "text": w.text,
-        "line_id": w.line_id,
-        "word_id": w.word_id,
-    }
-
-
-def _line_items(words: list[WordBox]) -> list[dict]:
-    lines: dict[int, list[WordBox]] = {}
-    for w in words:
-        lines.setdefault(w.line_id, []).append(w)
-    out = []
-    for li in sorted(lines):
-        ws = sorted(lines[li], key=lambda w: w.word_id)
-        text = " ".join(w.text for w in ws) + "\n" if any(w.text for w in ws) else ""
-        out.append(
-            {
-                "rect": {
-                    "left": min(w.left for w in ws),
-                    "top": min(w.top for w in ws),
-                    "right": max(w.right for w in ws),
-                    "bottom": max(w.bottom for w in ws),
-                },
-                "flags": 0,
-                "confidence": float(np.mean([w.confidence for w in ws])),
-                "text": text,
-                "line_id": li,
-            }
-        )
-    return out
-
-
-def _render_hocr_local(res: PageResult) -> str:
-    """Driver-side single-page hOCR (same structure as outputs.hocr_df)."""
-    from tesseract_wasm_spark.font import BASELINE_ROW, CELL_H, DESC_BOTTOM, XHEIGHT_TOP  # noqa: PLC0415
-    from tesseract_wasm_spark.outputs import _HOCR_FOOTER, _HOCR_HEADER  # noqa: PLC0415
-
-    lines: dict[int, list[WordBox]] = {}
-    for w in res.words:
-        if w.text:
-            lines.setdefault(w.line_id, []).append(w)
-    if not lines:
-        page = f"  <div class='ocr_page' id='page_1' title='bbox 0 0 {res.width} {res.height}'>\n  </div>"
-        return _HOCR_HEADER + page + "\n" + _HOCR_FOOTER
-    import math  # noqa: PLC0415
-
-    slope = repr(round(math.tan(math.radians(res.skew_degrees)), 4))
-
-    def render_line(li: int, ws: list[WordBox]) -> str:
-        ws = sorted(ws, key=lambda w: w.word_id)
-        l, t = min(w.left for w in ws), min(w.top for w in ws)
-        r, b = max(w.right for w in ws), max(w.bottom for w in ws)
-        baseline = ws[0].baseline
-        spans = "\n".join(
-            "      <span class='ocrx_word' id='word_1_%d' title='bbox %d %d %d %d; x_wconf %d'>%s</span>"
-            % (w.word_id + 1, w.left, w.top, w.right + 1, w.bottom + 1, round(w.confidence * 100), _esc(w.text))
-            for w in ws
-        )
-        return (
-            "     <span class='ocr_line' id='line_1_%d' title=\"bbox %d %d %d %d; baseline %s %d; "
-            "x_size %d; x_descenders %d; x_ascenders %d\">\n%s\n     </span>"
-            % (
-                li + 1, l, t, r + 1, b + 1,
-                slope,
-                baseline - b,  # offset from bbox bottom (<= 0)
-                b - t + 1,
-                b - baseline,
-                max(0, (baseline - t) - (BASELINE_ROW - XHEIGHT_TOP)),
-                spans,
-            )
-        )
-
-    # lines -> careas (one ocr_carea/ocr_par per block, reference FindBlocks
-    # structure) -> page div; same shape as outputs.hocr_df (tested equal)
-    by_block: dict[int, dict[int, list[WordBox]]] = {}
-    for li, ws in lines.items():
-        by_block.setdefault(ws[0].block_id, {})[li] = ws
-    block_divs = []
-    for bi in sorted(by_block):
-        blines = by_block[bi]
-        all_w = [w for ws in blines.values() for w in ws]
-        l, t = min(w.left for w in all_w), min(w.top for w in all_w)
-        r, b = max(w.right for w in all_w) + 1, max(w.bottom for w in all_w) + 1
-        lines_html = "\n".join(render_line(li, blines[li]) for li in sorted(blines))
-        block_divs.append(
-            f"   <div class='ocr_carea' id='block_1_{bi + 1}' title=\"bbox {l} {t} {r} {b}\">\n"
-            f"    <p class='ocr_par' id='par_1_{bi + 1}' title=\"bbox {l} {t} {r} {b}\">\n"
-            + lines_html
-            + "\n    </p>\n   </div>"
-        )
-    page = (
-        f"  <div class='ocr_page' id='page_1' title='bbox 0 0 {res.width} {res.height}'>\n"
-        + "\n".join(block_divs)
-        + "\n  </div>"
-    )
-    return _HOCR_HEADER + page + "\n" + _HOCR_FOOTER
-
-
-def _esc(s: str) -> str:
-    return s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")

@@ -9,7 +9,8 @@ in numpy:
   - a real LSTM forward pass (gates, cell state, tanh saturation) consuming
     one 11-pixel column of the line band per timestep;
   - per-timestep logits over (glyphs + CTC blank);
-  - CTC best-path and beam-search decoders (general implementations).
+  - CTC best-path decoding (argmax per frame, repeats collapsed, blanks
+    dropped).
 
 No trained model exists in this environment, so the weights are *constructed*
 instead of learned — the LSTM's input/recurrent weights implement a 5-column
@@ -135,55 +136,9 @@ def ctc_best_path(logits: np.ndarray, blank: int) -> list[int]:
     return out
 
 
-def ctc_beam_search(log_probs: np.ndarray, blank: int, beam_width: int = 8) -> list[int]:
-    """Standard CTC prefix beam search over log-probabilities [T, C].
-
-    Tracks (p_blank, p_non_blank) per prefix; returns the best prefix.
-    """
-    from collections import defaultdict  # noqa: PLC0415
-
-    neg_inf = -np.inf
-
-    def logsumexp(*vals: float) -> float:
-        mx = max(vals)
-        if mx == neg_inf:
-            return neg_inf
-        return mx + np.log(sum(np.exp(v - mx) for v in vals))
-
-    beams: dict[tuple[int, ...], tuple[float, float]] = {(): (0.0, neg_inf)}
-    for t in range(log_probs.shape[0]):
-        nxt: dict[tuple[int, ...], tuple[float, float]] = defaultdict(lambda: (neg_inf, neg_inf))
-        frame = log_probs[t]
-        for prefix, (pb, pnb) in beams.items():
-            total = logsumexp(pb, pnb)
-            # extend with blank
-            nb_pb, nb_pnb = nxt[prefix]
-            nxt[prefix] = (logsumexp(nb_pb, total + frame[blank]), nb_pnb)
-            # repeat last symbol (stays same prefix, non-blank path)
-            if prefix:
-                last = prefix[-1]
-                nb_pb, nb_pnb = nxt[prefix]
-                nxt[prefix] = (nb_pb, logsumexp(nb_pnb, pnb + frame[last]))
-            # extend with a new symbol
-            for s in np.argsort(frame)[::-1][:beam_width]:
-                s = int(s)
-                if s == blank:
-                    continue
-                new_prefix = prefix + (s,)
-                base = pb if (prefix and s == prefix[-1]) else total
-                nb_pb, nb_pnb = nxt[new_prefix]
-                nxt[new_prefix] = (nb_pb, logsumexp(nb_pnb, base + frame[s]))
-        beams = dict(
-            sorted(nxt.items(), key=lambda kv: -logsumexp(*kv[1]))[:beam_width]
-        )
-    best = max(beams.items(), key=lambda kv: logsumexp(*kv[1]))
-    return list(best[0])
-
-
 def recognize_page_lstm_scored(
-    mask: np.ndarray, lines: list[Line], *, decoder: str = "best_path",
-    beam_width: int = 8, whitelist: str | None = None, lang: str = "eng",
-    model: tuple | None = None,
+    mask: np.ndarray, lines: list[Line], *, whitelist: str | None = None,
+    lang: str = "eng", model: tuple | None = None,
 ) -> list[list[tuple[str, float]]]:
     """Per line, per word: (text, confidence) — ONE batched LSTM forward for
     the whole page (every word of every line steps the recurrence together,
@@ -213,7 +168,7 @@ def recognize_page_lstm_scored(
             b_out[banned] = -1e30
     results, exact = _decode_lines_batch(
         mask, lines, [line.baseline for line in lines],
-        lstm, w_out, b_out, chars, blank, decoder, beam_width,
+        lstm, w_out, b_out, chars, blank,
     )
     retry_idx = [li for li, ok in enumerate(exact) if not ok and lines[li].words]
     if retry_idx:
@@ -222,7 +177,7 @@ def recognize_page_lstm_scored(
         retry_res, retry_ok = _decode_lines_batch(
             mask, [lines[li] for li in retry_idx],
             [lines[li].baseline - DESC_ROWS for li in retry_idx],
-            lstm, w_out, b_out, chars, blank, decoder, beam_width,
+            lstm, w_out, b_out, chars, blank,
         )
         for k, li in enumerate(retry_idx):
             if retry_ok[k]:
@@ -233,7 +188,7 @@ def recognize_page_lstm_scored(
 
 def _decode_lines_batch(
     mask: np.ndarray, lines: list[Line], baselines: list[int],
-    lstm, w_out, b_out, chars, blank: int, decoder: str, beam_width: int,
+    lstm, w_out, b_out, chars, blank: int,
 ) -> tuple[list[list[tuple[str, float]]], list[bool]]:
     """One LSTM+CTC pass over every word of the given lines at the given
     per-line baseline anchors. Returns (per-line word results, per-line
@@ -267,18 +222,14 @@ def _decode_lines_batch(
     all_exact = [True] * len(lines)
     for bi, (li, anchor, span, r0) in enumerate(specs):
         logits = hidden_all[bi, :span, :] @ w_out + b_out
-        # softmax log-probs. The constructed logits are hamming distances
-        # (unit margins); sharpen them so the decoder's probabilities reflect
-        # the construction's certainty — otherwise the weakly-blank gap frames
-        # let a single-'p' prefix outscore 'pp' by summing over alignments.
+        seq = ctc_best_path(logits, blank)
+        # confidence: mean softmax prob of emitted frames along the greedy
+        # path. The constructed logits are hamming distances (unit margins);
+        # sharpen them so the probabilities reflect the construction's
+        # certainty.
         sharp = logits * 20.0
         z = sharp - sharp.max(axis=1, keepdims=True)
         log_probs = z - np.log(np.exp(z).sum(axis=1, keepdims=True))
-        if decoder == "beam":
-            seq = ctc_beam_search(log_probs, blank, beam_width)
-        else:
-            seq = ctc_best_path(logits, blank)
-        # confidence: mean prob of emitted frames along the greedy path
         path = np.argmax(logits, axis=1)
         emit = path != blank
         if emit.any():

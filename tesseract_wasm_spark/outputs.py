@@ -4,13 +4,23 @@ Everything here is plain DataFrame algebra over the single ``ocr_pages``
 result — Catalyst prunes/pushes down for free, and the expensive UDF runs once
 regardless of how many of these outputs are materialized (persist the result
 DataFrame when deriving several — SURVEY.md §4 O2).
+
+Each rule that turns a page result into words, lines, layout boxes or hOCR
+is defined here once, with one helper per side: the DataFrame builders and
+their Python twins over a single ``PageResult``, which ``api.OCREngine``
+answers from.
 """
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Decimal
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window, functions as F
 
-from tesseract_wasm_spark.font import CELL_H, BASELINE_ROW, XHEIGHT_TOP, DESC_BOTTOM
+from tesseract_wasm_spark.engine.page import PageResult, WordBox
+from tesseract_wasm_spark.font import BASELINE_ROW, XHEIGHT_TOP
 
 START_OF_LINE = 1
 END_OF_LINE = 2
@@ -134,6 +144,24 @@ _HOCR_HEADER = """<?xml version="1.0" encoding="UTF-8"?>
 <body>
 """
 _HOCR_FOOTER = "</body>\n</html>"
+# the element templates: hocr_df fills them with F.format_string, page_hocr
+# with %; java.util.Formatter and Python read %d/%s alike
+_HOCR_WORD = (
+    "      <span class='ocrx_word' id='word_1_%d' title='bbox %d %d %d %d; x_wconf %d'>%s</span>"
+)
+_HOCR_LINE_OPEN = (
+    "     <span class='ocr_line' id='line_1_%d' title=\"bbox %d %d %d %d; "
+    "baseline %s %d; x_size %d; x_descenders %d; x_ascenders %d\">"
+)
+_HOCR_LINE_CLOSE = "     </span>"
+_HOCR_BLOCK = (
+    "   <div class='ocr_carea' id='block_1_%d' title=\"bbox %d %d %d %d\">\n"
+    "    <p class='ocr_par' id='par_1_%d' title=\"bbox %d %d %d %d\">\n%s\n"
+    "    </p>\n   </div>"
+)
+_HOCR_PAGE = "  <div class='ocr_page' id='page_1' title='bbox 0 0 %d %d'>\n%s\n  </div>"
+_HOCR_EMPTY_PAGE = "  <div class='ocr_page' id='page_1' title='bbox 0 0 %d %d'>\n  </div>"
+_XML_ESCAPES = (("&", "&amp;"), ("<", "&lt;"), (">", "&gt;"))
 
 
 def hocr_df(results: DataFrame) -> DataFrame:
@@ -147,7 +175,7 @@ def hocr_df(results: DataFrame) -> DataFrame:
     lines = lines_df(words)
 
     word_span = F.format_string(
-        "      <span class='ocrx_word' id='word_1_%d' title='bbox %d %d %d %d; x_wconf %d'>%s</span>",
+        _HOCR_WORD,
         F.col("word_id") + 1,
         "left",
         "top",
@@ -176,10 +204,9 @@ def hocr_df(results: DataFrame) -> DataFrame:
     # The slope is the page's measured physical skew (tan of the deskew
     # angle): boxes are reported in deskewed coordinates, so the slope records
     # where the baseline ran in the original scan — 0 on upright pages.
-    slope = F.round(F.tan(F.radians(F.col("skew_degrees"))), 4).cast("string")
+    slope = _baseline_slope(F.col("skew_degrees"))
     line_open = F.format_string(
-        "     <span class='ocr_line' id='line_1_%d' title=\"bbox %d %d %d %d; "
-        "baseline %s %d; x_size %d; x_descenders %d; x_ascenders %d\">",
+        _HOCR_LINE_OPEN,
         F.col("line_id") + 1,
         "left",
         "top",
@@ -194,7 +221,7 @@ def hocr_df(results: DataFrame) -> DataFrame:
             (F.col("baseline") - F.col("top")) - F.lit(BASELINE_ROW - XHEIGHT_TOP),
         ),
     )
-    line_block = F.concat_ws("\n", line_open, F.col("word_spans"), F.lit("     </span>"))
+    line_block = F.concat_ws("\n", line_open, F.col("word_spans"), F.lit(_HOCR_LINE_CLOSE))
     # lines roll up into careas (one ocr_carea/ocr_par per detected block —
     # reference FindBlocks structure, patches/tesseract.diff:107-151), blocks
     # into the page div
@@ -218,9 +245,7 @@ def hocr_df(results: DataFrame) -> DataFrame:
         )
     )
     block_html = F.format_string(
-        "   <div class='ocr_carea' id='block_1_%d' title=\"bbox %d %d %d %d\">\n"
-        "    <p class='ocr_par' id='par_1_%d' title=\"bbox %d %d %d %d\">\n%s\n"
-        "    </p>\n   </div>",
+        _HOCR_BLOCK,
         F.col("block_id") + 1,
         "_l",
         "_t",
@@ -247,20 +272,11 @@ def hocr_df(results: DataFrame) -> DataFrame:
         )
     )
     pages = results.filter(F.col("error").isNull()).select("url", "width", "height")
-    page_html = F.format_string(
-        "  <div class='ocr_page' id='page_1' title='bbox 0 0 %d %d'>\n%s\n  </div>",
-        "width",
-        "height",
-        "blocks_html",
-    )
+    page_html = F.format_string(_HOCR_PAGE, "width", "height", "blocks_html")
     # a page with zero recognized words still yields a valid hOCR document
     # (header + bare ocr_page div) — same as OCREngine.getHOCR on an empty
     # page (reference renders the page div unconditionally, src/lib.cpp:224-239)
-    empty_page_html = F.format_string(
-        "  <div class='ocr_page' id='page_1' title='bbox 0 0 %d %d'>\n  </div>",
-        "width",
-        "height",
-    )
+    empty_page_html = F.format_string(_HOCR_EMPTY_PAGE, "width", "height")
     body = F.when(F.col("blocks_html").isNull(), empty_page_html).otherwise(page_html)
     return (
         pages.join(per_page, "url", "left")
@@ -271,10 +287,14 @@ def hocr_df(results: DataFrame) -> DataFrame:
     )
 
 
+def _baseline_slope(skew_degrees):
+    return F.round(F.tan(F.radians(skew_degrees)), 4).cast("string")
+
+
 def _xml_escape(col):
-    out = F.replace(col, F.lit("&"), F.lit("&amp;"))
-    out = F.replace(out, F.lit("<"), F.lit("&lt;"))
-    return F.replace(out, F.lit(">"), F.lit("&gt;"))
+    for ch, ref in _XML_ESCAPES:
+        col = F.replace(col, F.lit(ch), F.lit(ref))
+    return col
 
 
 def line_flags_check(words: DataFrame) -> DataFrame:
@@ -288,3 +308,121 @@ def line_flags_check(words: DataFrame) -> DataFrame:
         + F.when(rn == cnt, F.lit(END_OF_LINE)).otherwise(F.lit(0))
     )
     return words.withColumn("flags_sql", derived.cast("int"))
+
+
+# --- Python twins: one page's PageResult as OCREngine returns it -----------
+#
+# The same grouping and order, the same in-order sums, Spark's rounding and
+# the same hOCR templates as the builders above; tests/test_api_parity.py
+# holds the two sides equal, floats included, on every fixture page.
+
+
+def _spark_round(x: float, places: int) -> float:
+    """Spark's ``round`` of a double: HALF_UP on its decimal string
+    (``java.math.BigDecimal.valueOf``; repr stands in for Double.toString),
+    so 62.5 gives 63 where Python's half-to-even ``round`` gives 62."""
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-places), ROUND_HALF_UP))
+
+
+def _baseline_slope_text(skew_degrees: float) -> str:
+    """Python twin of _baseline_slope. Deskew's shears are whole per-mille,
+    so the rounded slope is never below 1e-3 in size and repr spells it as
+    Java does."""
+    return repr(_spark_round(math.tan(math.radians(skew_degrees)), 4))
+
+
+def _xml_escape_text(text: str) -> str:
+    """Python twin of _xml_escape."""
+    for ch, ref in _XML_ESCAPES:
+        text = text.replace(ch, ref)
+    return text
+
+
+def _rect(ws: list[WordBox]) -> dict:
+    return {
+        "left": min(w.left for w in ws),
+        "top": min(w.top for w in ws),
+        "right": max(w.right for w in ws),
+        "bottom": max(w.bottom for w in ws),
+    }
+
+
+def _by_line(words) -> list[list[WordBox]]:
+    """Words grouped by line_id: lines in id order, words in word_id order."""
+    lines: dict[int, list[WordBox]] = {}
+    for w in sorted(words, key=lambda w: (w.line_id, w.word_id)):
+        lines.setdefault(w.line_id, []).append(w)
+    return list(lines.values())
+
+
+def _lines(words: list[WordBox]) -> list[tuple[list[WordBox], dict]]:
+    """lines_df over one page's words: per line, its words with text and its
+    row as a getTextBoxes("line") item. The confidence folds the words in
+    order, as lines_df's F.aggregate does (a pairwise sum such as np.mean
+    differs in the last ulp on long lines)."""
+    return [
+        (ws, {"rect": _rect(ws), "flags": 0,
+              "confidence": reduce(lambda acc, w: acc + w.confidence, ws, 0.0) / len(ws),
+              "text": " ".join(w.text for w in ws) + "\n", "line_id": ws[0].line_id})
+        for ws in _by_line(w for w in words if w.text != "")
+    ]
+
+
+def text_items(words: list[WordBox], unit: str) -> list[dict]:
+    """getTextBoxes items: words_df's rows for "word", lines_df's for "line"."""
+    if unit == "line":
+        return [item for _, item in _lines(words)]
+    return [
+        {"rect": _rect([w]), "flags": w.flags, "confidence": w.confidence,
+         "text": w.text, "line_id": w.line_id, "word_id": w.word_id}
+        for w in words
+    ]
+
+
+def box_items(res: PageResult, unit: str) -> list[dict]:
+    """layout_df over one page as getBoundingBoxes items: the segmentation's
+    boxes of a layout-only result, else the recognized words less the
+    empty-page quirk row. A "line" box is the union of its words' boxes."""
+    if res.words:
+        words = [w for w in res.words if w.text != "" or w.right != 0]
+    else:
+        words = [WordBox(i, li, l, t, r, b, 0, 0.0, "", 0)
+                 for i, (l, t, r, b, _, li) in enumerate(res.layout_boxes)]
+    groups = _by_line(words) if unit == "line" else [[w] for w in words]
+    return [{"rect": _rect(ws), "flags": 0} for ws in groups]
+
+
+def page_hocr(res: PageResult) -> str:
+    """hocr_df for one page, built on the Python line rollup as hocr_df
+    builds on lines_df."""
+    by_block: dict[int, list[tuple[list[WordBox], dict]]] = {}
+    for ws, item in _lines(res.words):
+        by_block.setdefault(ws[0].block_id, []).append((ws, item))
+    page = _HOCR_EMPTY_PAGE % (res.width, res.height)
+    if by_block:
+        slope, blocks = _baseline_slope_text(res.skew_degrees), []
+        for bi in sorted(by_block):
+            r = _rect([w for ws, _ in by_block[bi] for w in ws])
+            box = (r["left"], r["top"], r["right"] + 1, r["bottom"] + 1)
+            lines_html = "\n".join(_hocr_line(ws, item, slope) for ws, item in by_block[bi])
+            blocks.append(_HOCR_BLOCK % (bi + 1, *box, bi + 1, *box, lines_html))
+        page = _HOCR_PAGE % (res.width, res.height, "\n".join(blocks))
+    return _HOCR_HEADER + page + "\n" + _HOCR_FOOTER
+
+
+def _hocr_line(ws: list[WordBox], item: dict, slope: str) -> str:
+    r, baseline = item["rect"], ws[0].baseline
+    line_open = _HOCR_LINE_OPEN % (
+        item["line_id"] + 1, r["left"], r["top"], r["right"] + 1, r["bottom"] + 1,
+        slope,
+        baseline - r["bottom"],
+        r["bottom"] - r["top"] + 1,
+        r["bottom"] - baseline,
+        max(0, (baseline - r["top"]) - (BASELINE_ROW - XHEIGHT_TOP)),
+    )
+    spans = "\n".join(
+        _HOCR_WORD % (w.word_id + 1, w.left, w.top, w.right + 1, w.bottom + 1,
+                      int(_spark_round(w.confidence * 100, 0)), _xml_escape_text(w.text))
+        for w in ws
+    )
+    return "\n".join((line_open, spans, _HOCR_LINE_CLOSE))

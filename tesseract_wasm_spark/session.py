@@ -53,7 +53,7 @@ def get_spark(
 ) -> SparkSession:
     for k, v in _BLAS_PIN.items():
         os.environ.setdefault(k, v)  # local mode: python workers inherit this
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     shuffle_partitions = shuffle_partitions or max(32, cores)
     builder = (
         SparkSession.builder.appName(app_name)

@@ -10,7 +10,6 @@ import pytest
 from tesseract_wasm_spark.engine.components import label_components
 from tesseract_wasm_spark.engine.lstm_ctc import (
     build_recognizer,
-    ctc_beam_search,
     ctc_best_path,
     recognize_page_lstm,
 )
@@ -30,14 +29,6 @@ def test_lstm_best_path_byte_identical():
     img = render_page(SMALL_PAGE_LINES)
     mask, lines = _lines_for(img)
     assert recognize_page_lstm(mask, lines) == expected_text(SMALL_PAGE_LINES)
-
-
-def test_lstm_beam_search_matches_best_path():
-    img = render_page(SMALL_PAGE_LINES[:3])
-    mask, lines = _lines_for(img)
-    assert recognize_page_lstm(mask, lines, decoder="beam") == expected_text(
-        SMALL_PAGE_LINES[:3]
-    )
 
 
 def test_lstm_agrees_with_template_matcher_on_corpus():
@@ -70,9 +61,6 @@ def test_ctc_decoders_basic():
     for t, c in enumerate([0, 2, 0, 0, 2, 1]):
         logits[t, c] = big
     assert ctc_best_path(logits, blank=2) == [0, 0, 1]  # collapse repeats, drop blanks
-    z = logits - logits.max(axis=1, keepdims=True)
-    logp = z - np.log(np.exp(z).sum(axis=1, keepdims=True))
-    assert ctc_beam_search(logp, blank=2, beam_width=4) == [0, 0, 1]
 
 
 def test_constructed_logits_are_negative_hamming():
@@ -187,6 +175,37 @@ def test_load_model_accepts_weight_blob():
 
     with pytest.raises(ValueError, match=ERR_MODEL_LOAD):
         OCREngine().loadModel(b"TWSM2 garbage after the magic")
+
+
+def test_engine_recognizes_from_loaded_weight_blob():
+    """While a TWSM2 blob is loaded, OCREngine recognizes with the lstm
+    recognizer from the blob's weights: a blob that bans 'e' reads no 'e',
+    the clean blob gives the lstm path's CTC confidences, and a glyph model
+    (TWSM1) brings the template recognizer back."""
+    from tesseract_wasm_spark.api import OCREngine
+    from tesseract_wasm_spark.engine import lstm_ctc as L
+    from tesseract_wasm_spark.engine.page import process_page
+    from tesseract_wasm_spark.font import export_model
+    from tesseract_wasm_spark.raster import render_page_drf
+
+    payload = render_page_drf(SMALL_PAGE_LINES[:3])
+    eng = OCREngine()
+    eng.loadImage(payload)
+    bad = _blob_without("e")
+    eng.loadModel(bad)
+    want = process_page(payload, recognizer="lstm", lstm_model=L.parse_lstm_model(bad)[1])
+    assert eng.getText() == want.page_text and "e" not in want.page_text
+
+    eng.loadModel(L.export_lstm_model("eng"))
+    lstm = process_page(payload, recognizer="lstm")
+    assert eng.getText() == lstm.page_text
+    assert [w["confidence"] for w in eng.getTextBoxes("word")] == [
+        w.confidence for w in lstm.words]
+    assert any(w.confidence < 1.0 for w in lstm.words)
+
+    eng.loadModel(export_model("eng"))
+    assert [w["confidence"] for w in eng.getTextBoxes("word")] == [
+        w.confidence for w in process_page(payload).words]
 
 
 def test_model_blob_flows_to_workers(spark):

@@ -2,7 +2,8 @@
 every failure other than "already shipped" raise.
 session.install_zip_cache_check: inside a Spark Python worker, zip importers
 re-read their archive on invalidate_caches only when its stat stamp moved.
-session.get_spark: a repeated query reuses its generated classes."""
+session.get_spark: local mode runs one task slot per CPU unless told
+otherwise, and a repeated query reuses its generated classes."""
 
 from __future__ import annotations
 
@@ -16,7 +17,7 @@ import pytest
 from pyspark import TaskContext
 
 from perfbench import inputs
-from tesseract_wasm_spark import queries
+from tesseract_wasm_spark import queries, session
 from tesseract_wasm_spark.session import install_zip_cache_check, ship_package
 from test_oracle_parity import SF_DIR
 
@@ -199,3 +200,34 @@ def test_repeated_queries_compile_nothing(spark):
     while repeated[-1] and len(repeated) < 5:
         repeated.append(one_pass())
     assert repeated[-1] == 0, repeated
+
+
+class _RecordingBuilder:
+    """Stands in for SparkSession.builder: records the master URL and starts
+    no JVM."""
+
+    master_url = None
+
+    def master(self, url):
+        _RecordingBuilder.master_url = url
+        return self
+
+    def __getattr__(self, name):  # appName, config, getOrCreate
+        return lambda *args, **kwargs: self
+
+
+@pytest.mark.parametrize("env, want", [(None, "local[3]"), ("5", "local[5]")])
+def test_get_spark_defaults_to_the_cpu_count(monkeypatch, env, want):
+    class FakeSparkSession:
+        builder = _RecordingBuilder()
+
+    monkeypatch.setattr(session, "SparkSession", FakeSparkSession)
+    monkeypatch.setattr(session.os, "cpu_count", lambda: 3)
+    if env is None:
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", env)
+    session.get_spark()
+    assert _RecordingBuilder.master_url == want
+    session.get_spark(cores=2)
+    assert _RecordingBuilder.master_url == "local[2]"

@@ -11,17 +11,18 @@ algorithms, then re-run tools/check_parity.py /root/testdata/sf0.01:
 
     python tools/make_goldens.py
 
-Every golden is a single parquet file written by Spark (exact schema,
-including nullable ints), moved out of the part-file directory.
+Every golden is a single parquet file written by pyarrow from the Spark
+result (``DataFrame.toArrow``: the Spark schema, nullability included),
+its rows sorted by the golden's key columns, so two runs write the same
+bytes.
 """
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 import sys
-import tempfile
+
+import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -32,18 +33,11 @@ GOLDEN_DIR = os.path.join(
 SF_DIR = "/root/testdata/sf0.01"  # the driver's correctness-gate scale factor
 
 
-def write_golden(df, name: str) -> None:
+def write_golden(df, name: str, keys: tuple[str, ...] = ("url",)) -> None:
     os.makedirs(GOLDEN_DIR, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix=f"golden_{name}_")
-    try:
-        df.coalesce(1).write.mode("overwrite").parquet(os.path.join(tmp, "out"))
-        parts = glob.glob(os.path.join(tmp, "out", "part-*.parquet"))
-        assert len(parts) == 1, parts
-        dst = os.path.join(GOLDEN_DIR, f"{name}.parquet")
-        shutil.move(parts[0], dst)
-        print(f"wrote {dst}")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    dst = os.path.join(GOLDEN_DIR, f"{name}.parquet")
+    pq.write_table(df.orderBy(*keys).toArrow(), dst)
+    print(f"wrote {dst}")
 
 
 def main() -> None:
@@ -55,9 +49,10 @@ def main() -> None:
     # --- OCR surface (sf-independent: runs on the deterministic fixtures)
     # (ocr_media_metadata needs NO golden: its oracle derives every column
     #  from fixture_pages + ocr_page_meta — queries._sql_media_metadata)
-    for name in ("ocr_text", "ocr_words", "ocr_errors"):
+    for name, keys in (("ocr_text", ("url",)), ("ocr_words", ("url", "word_id")),
+                       ("ocr_errors", ("url",))):
         fn = Q.REGISTRY[name][0]
-        write_golden(fn(spark, SF_DIR), name)
+        write_golden(fn(spark, SF_DIR), name, keys)
 
     # raw fixture INPUTS (payload blobs + ground-truth text): the
     # extract_mixed oracle re-derives extraction from these in SQL — an
@@ -108,11 +103,11 @@ def main() -> None:
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
 
     from tesseract_wasm_spark.datapipe.dedup import simhash_signatures
-    write_golden(simhash_signatures(docs), "simhash_signatures_sf001")
+    write_golden(simhash_signatures(docs), "simhash_signatures_sf001", ("doc_id",))
 
     from tesseract_wasm_spark.datapipe.similarity import srp_signatures
     # parameters MUST mirror the driver entry queries.sim_srp_pairs: n_bits=10 seed=9
-    write_golden(srp_signatures(emb, n_bits=10, seed=9), "srp_buckets_sf001")
+    write_golden(srp_signatures(emb, n_bits=10, seed=9), "srp_buckets_sf001", ("vec_id",))
 
     # (ann_ivf needs no goldens: deterministic centroids are the 16
     #  lowest-vec_id vectors, so the oracle derives cells/probes/scores
