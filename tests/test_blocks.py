@@ -67,3 +67,19 @@ def test_two_column_hocr_has_two_careas():
 def test_two_column_skewed_still_byte_identical():
     res = process_rgba(render_columns(TWO_COL_LINES, skew_per_mille=21))
     assert res.page_text == expected_text(TWO_COL_LINES[0] + TWO_COL_LINES[1])
+
+
+def test_hocr_df_matches_engine_twin_on_two_col(spark):
+    from tesseract_wasm_spark.api import createOCREngine
+    from tesseract_wasm_spark.fixtures import fixtures_df
+    from tesseract_wasm_spark.outputs import hocr_df
+    from tesseract_wasm_spark.pipeline import ocr_pages
+    from pyspark.sql import functions as F
+
+    pages = fixtures_df(spark, n_corpus_pages=2)
+    rows = hocr_df(ocr_pages(pages)).filter(F.col("url").endswith("two-col")).collect()
+    assert len(rows) == 1
+    eng = createOCREngine()
+    eng.loadModel(export_model())
+    eng.loadImage(render_columns(TWO_COL_LINES))
+    assert rows[0]["hocr"] == eng.getHOCR()

@@ -10,6 +10,7 @@ from tesseract_wasm_spark import outputs as O
 from tesseract_wasm_spark.fixtures import fixtures_df
 from tesseract_wasm_spark.pipeline import metrics_df, ocr_pages
 from tesseract_wasm_spark.scale import run_extract_with_resume, run_with_resume
+from tesseract_wasm_spark.font import export_model
 
 
 @pytest.fixture(scope="module")
@@ -126,6 +127,21 @@ def test_hocr_distributed(results):
     assert "class='ocr_page' id='page_1'" in h
     assert "x_wconf 100'>Image</span>" in h
     assert h.endswith("</html>")
+
+
+def test_hocr_empty_page_document(results):
+    """A page with zero recognized words yields the same valid empty-page hOCR
+    document OCREngine.getHOCR emits (header + bare ocr_page div) — the two
+    hOCR surfaces must agree."""
+    from tesseract_wasm_spark.api import createOCREngine
+    from tesseract_wasm_spark.raster import empty_page
+
+    rows = O.hocr_df(results).filter(F.col("url").contains("empty-100x100")).collect()
+    assert len(rows) == 1
+    eng = createOCREngine()
+    eng.loadModel(export_model())
+    eng.loadImage(empty_page(100, 100))
+    assert rows[0]["hocr"] == eng.getHOCR()
 
 
 def test_metrics_lineage(results):
