@@ -9,10 +9,17 @@ shapes — and so the reference's behavioral protocol tests (progress, memoized
 re-run, clear-image invalidation — test/ocr-engine-test.js:309-363) have a
 direct analog to run against.
 
-Only the state machine lives here. A page is recognized by the same
-``process_rgba`` the Spark mappers call, and its items and hOCR come from
-the Python twins in ``outputs``, so each answer equals the Spark row of
-the same page (tests/test_api_parity.py).
+Only the state machine lives here. A page goes through the same stages of
+``engine.page`` that ``process_rgba`` runs for the Spark mappers, and its
+items and hOCR come from the Python twins in ``outputs``, so each answer
+equals the Spark row of the same page (tests/test_api_parity.py).
+
+As in the reference, layout runs once per loaded image (its
+``layout_analysis_done_`` and ``ocr_done_`` guards, src/lib.cpp:197-201,
+325-331): the engine keeps one memo per stage. Orientation and recognition
+both build on the layout memo, and recognition never edits it.
+``loadImage`` and ``clearImage`` drop all three memos; ``loadModel`` and
+``setVariable`` drop only recognition's.
 """
 
 from __future__ import annotations
@@ -23,7 +30,9 @@ import numpy as np
 
 from tesseract_wasm_spark import drf
 from tesseract_wasm_spark.config import VariableStore
-from tesseract_wasm_spark.engine.page import PageResult, process_rgba
+from tesseract_wasm_spark.engine.page import (
+    PageLayout, PageResult, layout_stage, orientation_stage, recognition_stage,
+)
 from tesseract_wasm_spark.outputs import box_items, page_hocr, text_items
 
 ERR_NO_IMAGE = "No image loaded"  # reference: src/ocr-engine.ts:323
@@ -55,9 +64,9 @@ class OCREngine:
         self._lang = "eng"
         self._lstm_model: tuple | None = None
         self._image: np.ndarray | None = None
+        self._layout: PageLayout | None = None
+        self._orientation: PageResult | None = None
         self._result: PageResult | None = None
-        self._layout_result: PageResult | None = None
-        self._orientation: tuple[int, float] | None = None
         self._variables = VariableStore()
 
     # --- model / image lifecycle -------------------------------------
@@ -90,10 +99,7 @@ class OCREngine:
         input normalization — src/ocr-engine.ts:171-210)."""
         # clear previous state *before* staging the new image (peak-memory
         # discipline — reference src/ocr-engine.ts:186-203)
-        self._image = None
-        self._result = None
-        self._layout_result = None
-        self._orientation = None
+        self.clearImage()
         if isinstance(image, (bytes, bytearray)):
             rgba = drf.decode(bytes(image))  # raises with reference messages
         elif isinstance(image, dict):
@@ -120,10 +126,7 @@ class OCREngine:
 
     def clearImage(self) -> None:
         """Drop image + results, keep model (reference: src/lib.cpp:191-195)."""
-        self._image = None
-        self._result = None
-        self._layout_result = None
-        self._orientation = None
+        self._image = self._layout = self._orientation = self._result = None
 
     # --- variables ----------------------------------------------------
     def getVariable(self, name: str) -> str:
@@ -152,18 +155,25 @@ class OCREngine:
         if unit not in _UNITS:
             raise ValueError(ERR_INVALID_UNIT)
 
+    def _page(self) -> PageLayout:
+        """AnalyseLayout analog (reference src/lib.cpp:197-201): once per image."""
+        img = self._check_image()
+        if self._layout is None:
+            self._layout = layout_stage(img)
+        return self._layout
+
     def _ocr(self, on_progress: Callable[[int], None] | None = None) -> PageResult:
         """DoOCR analog (reference src/lib.cpp:325-336): memoized; progress is
         monotone and always ends with an explicit 100 — a memoized re-run
         emits exactly [100] (pinned by test/ocr-engine-test.js:309-338)."""
-        img = self._check_image()
+        self._check_image()
         if self._result is None:
             if on_progress:
                 for pct in (0, 50):
                     on_progress(pct)
-            self._result = process_rgba(
-                img, with_text=True, with_orientation=False,
-                variables=self._variables.as_dict(), lang=self._lang,
+            page = self._page()
+            self._result = recognition_stage(
+                page, page.result, variables=self._variables.as_dict(), lang=self._lang,
                 recognizer="template" if self._lstm_model is None else "lstm",
                 lstm_model=self._lstm_model,
             )
@@ -171,19 +181,13 @@ class OCREngine:
             on_progress(100)
         return self._result
 
-    def _layout(self) -> PageResult:
-        img = self._check_image()
-        if self._layout_result is None:
-            self._layout_result = process_rgba(img, with_text=False, with_orientation=False)
-        return self._layout_result
-
     def getBoundingBoxes(self, unit: str) -> list[dict]:
         """Layout-only boxes; works with no model (reference src/lib.cpp:197-203).
         After OCR they are the recognized word and line rects, as
         outputs.layout_df gives (reference comment src/ocr-engine.ts:236-239):
         the degraded-scan tier re-aligns and splits the segmentation's words."""
         self._check_unit(unit)
-        return box_items(self._result if self._result is not None else self._layout(), unit)
+        return box_items(self._result if self._result is not None else self._page().result, unit)
 
     def getTextBoxes(self, unit: str, on_progress=None) -> list[dict]:
         self._check_unit(unit)
@@ -204,12 +208,11 @@ class OCREngine:
     def getOrientation(self) -> dict:
         """Computed on the first call only: text and layout queries skip the
         orientation pass, which is the page's costliest stage."""
-        img = self._check_image()
         if self._orientation is None:
-            res = process_rgba(img, with_text=False, with_orientation=True)
-            self._orientation = (res.rotation, res.orient_confidence)
-        rotation, confidence = self._orientation
-        return {"rotation": rotation, "confidence": confidence}
+            page = self._page()
+            self._orientation = orientation_stage(page, page.result)
+        res = self._orientation
+        return {"rotation": res.rotation, "confidence": res.orient_confidence}
 
     def getHOCR(self, on_progress=None) -> str:
         """Single-page hOCR from outputs.hocr_df's templates and rules."""

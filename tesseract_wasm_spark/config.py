@@ -8,7 +8,7 @@ the same shape: a known-keys registry, string values, exact reference error
 messages on unknown names.
 
 Every variable except ``user_defined_dpi`` is CONSUMED by the engine
-(engine/page.py:process_rgba documents the behavioral effect of each;
+(engine/page.py:recognition_stage documents the behavioral effect of each;
 tests/test_config_behavior.py pins them): the whitelist restricts the emit
 alphabet and preserve_interword_spaces keeps measured gaps. The engine's
 own thresholds are constants, not variables (recognize.MIN_PARTIAL_OVERLAP,

@@ -28,6 +28,7 @@ the bitpacked matcher stays the production fast path.
 
 from __future__ import annotations
 
+from dataclasses import replace
 from functools import lru_cache
 
 import numpy as np
@@ -151,7 +152,8 @@ def recognize_page_lstm_scored(
 
     Lines whose decode is not all-frames-exact retry DESC_ROWS higher (the
     all-descender baseline correction, mirroring recognize.py:181-201) in a
-    second, smaller batch; a retry is accepted only on a perfect decode.
+    second, smaller batch; a retry is accepted only on a perfect decode, and
+    a copy of the line at the new baseline replaces its entry in ``lines``.
 
     ``model``: an explicit (lstm, w_out, b_out, chars) tuple — the
     trained-weight path. EXPLICIT by design: Spark reuses python worker
@@ -182,7 +184,7 @@ def recognize_page_lstm_scored(
         for k, li in enumerate(retry_idx):
             if retry_ok[k]:
                 results[li] = retry_res[k]
-                lines[li].baseline -= DESC_ROWS
+                lines[li] = replace(lines[li], baseline=lines[li].baseline - DESC_ROWS)
     return results
 
 
@@ -241,13 +243,6 @@ def _decode_lines_batch(
             all_exact[li] = False
         results[li].append(("".join(chars[s] for s in seq), conf))
     return results, all_exact
-
-
-def recognize_page_lstm(mask: np.ndarray, lines: list[Line], **kw) -> str:
-    """Full-page text via the LSTM+CTC path (getText contract: line texts end
-    with a newline). One batched recurrence for the whole page."""
-    scored = recognize_page_lstm_scored(mask, lines, **kw)
-    return "".join(" ".join(t for t, _ in words) + "\n" for words in scored)
 
 
 # --- weight blob (the trained-.traineddata shape) ---------------------------

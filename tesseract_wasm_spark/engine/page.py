@@ -1,8 +1,13 @@
 """Per-page orchestration: DRF bytes -> PageResult.
 
 This is the pure-Python core that the Spark ``mapInPandas`` UDF batches over
-(pipeline.py). It reproduces the reference engine's observable result surface
-(SURVEY.md §2.2):
+(pipeline.py) and that ``api.OCREngine`` answers from. It runs in three
+stages: ``layout_stage`` (binarize, components, deskew, blocks, segmentation
+and the layout boxes), then ``orientation_stage`` and ``recognition_stage``,
+which both read the layout and leave it as it was. ``process_rgba`` runs
+them in order; the engine API keeps one layout per image. The core
+reproduces the reference engine's observable result surface (SURVEY.md
+§2.2):
 
   - OCR words with rect / flags / confidence / text (getTextBoxes —
     reference: src/ocr-engine.ts:255-267, src/lib.cpp:291-323)
@@ -23,7 +28,7 @@ and empty text.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 import numpy as np
 
@@ -32,7 +37,7 @@ from tesseract_wasm_spark.engine.components import label_components
 from tesseract_wasm_spark.font import ADV
 from tesseract_wasm_spark.engine.otsu import binarize
 from tesseract_wasm_spark.engine.recognize import recognize_words
-from tesseract_wasm_spark.engine.segment import segment
+from tesseract_wasm_spark.engine.segment import Line, segment
 
 START_OF_LINE = 1  # reference: src/lib.cpp:19-24 LayoutFlags
 END_OF_LINE = 2
@@ -90,51 +95,38 @@ def _despeckle(comps):
     )
 
 
-def process_page(payload: bytes, *, with_text: bool = True, with_orientation: bool = True,
-                 recognizer: str = "template",
-                 variables: dict[str, str] | None = None,
-                 lang: str = "eng",
-                 lstm_model: tuple | None = None) -> PageResult:
+def process_page(payload: bytes, **kw) -> PageResult:
     try:
         rgba = drf.decode(payload)
     except ValueError as exc:
         return PageResult(error=str(exc))
-    return process_rgba(rgba, with_text=with_text, with_orientation=with_orientation,
-                        recognizer=recognizer, variables=variables, lang=lang,
-                        lstm_model=lstm_model)
+    return process_rgba(rgba, **kw)
 
 
-def process_rgba(
-    rgba: np.ndarray,
-    *,
-    with_text: bool = True,
-    with_orientation: bool = True,
-    recognizer: str = "template",
-    variables: dict[str, str] | None = None,
-    lang: str = "eng",
-    lstm_model: tuple | None = None,
-) -> PageResult:
-    """``lstm_model``: explicit trained-weight tuple for the lstm
-    recognizer (lstm_ctc.parse_lstm_model) — passed, never worker-global.
-    ``variables`` is the P11 parameter store (config.VariableStore
-    contents); the consumed keys and their behavioral effects:
+def process_rgba(rgba: np.ndarray, *, with_text: bool = True, with_orientation: bool = True,
+                 **kw) -> PageResult:
+    """The three stages in order; ``kw`` are recognition_stage's settings."""
+    layout = layout_stage(rgba)
+    res = layout.result
+    if with_orientation:
+        res = orientation_stage(layout, res)
+    return recognition_stage(layout, res, **kw) if with_text else res
 
-      - ``tessedit_char_whitelist``: restrict the emit alphabet (reference:
-        Tesseract only outputs whitelisted chars; set via setVariable,
-        src/lib.cpp:150-170)
-      - ``preserve_interword_spaces``: "1" keeps the measured inter-word gap
-        as that many spaces instead of normalizing to one (Tesseract's
-        documented effect of the same parameter)
-    ``user_defined_dpi`` is stored for round-trip parity but has no pixel
-    meaning for the synthetic raster model."""
-    from tesseract_wasm_spark.font import LANG_CHARSETS  # noqa: PLC0415
 
-    if lang not in LANG_CHARSETS:
-        lang = "eng"  # unknown model key -> the reference's hardcoded default
-    v = variables or {}
-    whitelist = v.get("tessedit_char_whitelist", "") or None
-    preserve_spaces = v.get("preserve_interword_spaces", "0") == "1"
+@dataclass
+class PageLayout:
+    """The layout stage's output, which orientation and recognition read and
+    never edit, so one layout serves any number of later stages (the
+    reference analyses layout once per image, src/lib.cpp:197-201)."""
 
+    result: PageResult  # width, height, skew_degrees and layout_boxes set
+    mask: np.ndarray  # binarized, unsheared
+    lines: list[Line]  # reading order
+    line_block: list[int]  # block index of each line
+
+
+def layout_stage(rgba: np.ndarray) -> PageLayout:
+    """Binarize, components, deskew, blocks and segmentation."""
     h, w = rgba.shape[:2]
     res = PageResult(width=w, height=h)
     mask = binarize(rgba)
@@ -194,34 +186,72 @@ def process_rgba(
         for word in line.words:
             res.layout_boxes.append((word.left, word.top, word.right, word.bottom, 0, li))
 
-    if with_orientation:
-        from tesseract_wasm_spark.engine.orientation import (  # noqa: PLC0415
-            decide_orientation, orientation_scores,
-        )
+    return PageLayout(res, mask, lines, line_block)
 
-        up, left = orientation_scores(mask, lines)
-        res.up_conf, res.left_conf = float(up), float(left)
-        res.rotation, res.orient_confidence = decide_orientation(up, left)
 
-    if not with_text:
-        return res
+def orientation_stage(layout: PageLayout, res: PageResult) -> PageResult:
+    """``res`` with the page's orientation scores and decision."""
+    from tesseract_wasm_spark.engine.orientation import (  # noqa: PLC0415
+        decide_orientation, orientation_scores,
+    )
 
-    if not lines:
+    up, left = orientation_scores(layout.mask, layout.lines)
+    rotation, confidence = decide_orientation(up, left)
+    return replace(res, up_conf=float(up), left_conf=float(left),
+                   rotation=rotation, orient_confidence=confidence)
+
+
+def recognition_stage(
+    layout: PageLayout,
+    res: PageResult,
+    *,
+    recognizer: str = "template",
+    variables: dict[str, str] | None = None,
+    lang: str = "eng",
+    lstm_model: tuple | None = None,
+) -> PageResult:
+    """``res`` with the page's words and text, recognized on ``layout``.
+
+    ``lstm_model``: explicit trained-weight tuple for the lstm
+    recognizer (lstm_ctc.parse_lstm_model) — passed, never worker-global.
+    ``variables`` is the P11 parameter store (config.VariableStore
+    contents); the consumed keys and their behavioral effects:
+
+      - ``tessedit_char_whitelist``: restrict the emit alphabet (reference:
+        Tesseract only outputs whitelisted chars; set via setVariable,
+        src/lib.cpp:150-170)
+      - ``preserve_interword_spaces``: "1" keeps the measured inter-word gap
+        as that many spaces instead of normalizing to one (Tesseract's
+        documented effect of the same parameter)
+    ``user_defined_dpi`` is stored for round-trip parity but has no pixel
+    meaning for the synthetic raster model."""
+    from tesseract_wasm_spark.font import LANG_CHARSETS  # noqa: PLC0415
+
+    if lang not in LANG_CHARSETS:
+        lang = "eng"  # unknown model key -> the reference's hardcoded default
+    v = variables or {}
+    whitelist = v.get("tessedit_char_whitelist", "") or None
+    preserve_spaces = v.get("preserve_interword_spaces", "0") == "1"
+
+    if not layout.lines:
         # reference quirk: single all-zero, empty-text box for an empty image
-        res.words.append(WordBox(0, 0, 0, 0, 0, 0, START_OF_LINE | END_OF_LINE, 0.0, "", 0, 0))
-        res.page_text = ""
-        return res
+        return replace(res, words=[WordBox(0, 0, 0, 0, 0, 0, START_OF_LINE | END_OF_LINE,
+                                           0.0, "", 0, 0)], page_text="")
 
+    # copy-on-write: a recognizer that re-anchors or re-splits a line puts
+    # a new Line in this list, never into the layout's
+    lines = list(layout.lines)
     if recognizer == "lstm":
         # P5 v2 path: LSTM+CTC, one batched recurrence for the whole page
         # (same downstream WordBox emission)
         from tesseract_wasm_spark.engine.lstm_ctc import recognize_page_lstm_scored  # noqa: PLC0415
 
         recognized = recognize_page_lstm_scored(
-            mask, lines, whitelist=whitelist, lang=lang, model=lstm_model
+            layout.mask, lines, whitelist=whitelist, lang=lang, model=lstm_model
         )
     else:
-        recognized = recognize_words(mask, lines, whitelist=whitelist, lang=lang)
+        recognized = recognize_words(layout.mask, lines, whitelist=whitelist, lang=lang)
+    words: list[WordBox] = []
     wid = 0
     text_lines: list[str] = []
     for li, line in enumerate(lines):
@@ -234,7 +264,7 @@ def process_rgba(
                 flags |= START_OF_LINE
             if wi == len(line.words) - 1:
                 flags |= END_OF_LINE
-            res.words.append(
+            words.append(
                 WordBox(
                     word_id=wid,
                     line_id=li,
@@ -246,7 +276,7 @@ def process_rgba(
                     confidence=conf,
                     text=text,
                     baseline=line.baseline,
-                    block_id=line_block[li],
+                    block_id=layout.line_block[li],
                 )
             )
             if wi > 0:
@@ -266,5 +296,4 @@ def process_rgba(
         for sep, txt in zip(seps, word_texts[1:]):
             parts.extend((sep, txt))
         text_lines.append("".join(parts) + "\n")
-    res.page_text = "".join(text_lines)
-    return res
+    return replace(res, words=words, page_text="".join(text_lines))

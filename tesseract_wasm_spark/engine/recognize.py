@@ -22,6 +22,8 @@ overlap < 0.5), so garbage input degrades gracefully instead of failing.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import numpy as np
 
 from tesseract_wasm_spark.engine.segment import Line, Word
@@ -184,7 +186,8 @@ def recognize_words(mask: np.ndarray, lines: list[Line], *,
     ``lang`` selects the glyph model (S4 — the reference hardcodes "eng",
     src/lib.cpp:138; the Spark pipeline dispatches per row). A cell that
     matches no template reads as the replacement char when its best
-    Jaccard overlap is under MIN_PARTIAL_OVERLAP."""
+    Jaccard overlap is under MIN_PARTIAL_OVERLAP. A line the retries below
+    re-anchor or re-split is replaced in ``lines`` by an edited copy."""
     cells_bool, index = _extract_cells(mask, lines)
     results: list[list[tuple[str, float]]] = [[] for _ in lines]
     if len(index) == 0:
@@ -249,11 +252,7 @@ def recognize_words(mask: np.ndarray, lines: list[Line], *,
 
     resolved: set[int] = set()
     for li in retry_lines:
-        line = lines[li]
-        fixed = Line(
-            top=line.top, bottom=line.bottom,
-            baseline=line.baseline - DESC_ROWS, words=line.words,
-        )
+        fixed = replace(lines[li], baseline=lines[li].baseline - DESC_ROWS)
         cells2, idx2 = _extract_cells(mask, [fixed])
         keys2 = _pack_keys(cells2)
         pos2 = np.minimum(np.searchsorted(tkeys, keys2), len(tkeys) - 1)
@@ -266,7 +265,7 @@ def recognize_words(mask: np.ndarray, lines: list[Line], *,
             out.append((decoded[p : p + k], 1.0))
             p += k
         results[li] = out
-        line.baseline -= DESC_ROWS
+        lines[li] = fixed
         resolved.add(li)
 
     # degraded-scan recovery (see the tier below): lines still carrying
@@ -391,9 +390,10 @@ def _degraded_retry(
     whitelist: str | None,
     lang: str,
 ) -> bool:
-    """Re-recognize ``line_ids`` against the degraded banks. Mutates
-    ``lines[li].words`` (degradation can merge words — bridged or narrowed
-    inter-word gaps; verified gap cells split them back) and ``results[li]``.
+    """Re-recognize ``line_ids`` against the degraded banks. Replaces
+    ``results[li]``, and ``lines[li]`` with a copy holding the re-split
+    words (degradation can merge words — bridged or narrowed inter-word
+    gaps; verified gap cells split them back); no Line is edited.
 
     Selection: page-level K vote (the whole page shares one blur level), then
     per-word best (dy, dx) alignment at that K. A word none of whose cells
@@ -551,6 +551,6 @@ def _degraded_retry(
                     Word(left=left, top=top, right=right, bottom=bottom, pen_left=c0)
                 )
                 new_res.append(("".join(text_chars), float(np.mean(confs))))
-        line.words = new_words
+        lines[li] = replace(line, words=new_words)
         results[li] = new_res
     return changed

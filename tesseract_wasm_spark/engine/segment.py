@@ -79,7 +79,7 @@ def find_blocks(comps: Components, *, min_gutter: int = MIN_GUTTER) -> list[np.n
     Returns a list of component index arrays, one per block, ordered left to
     right; a single-block page returns one array with every index. The caller
     is expected to reject degenerate splits (a real column has >= 2 lines) —
-    see page.process_rgba."""
+    see page.layout_stage."""
     if comps.n == 0:
         return []
     w = int(comps.right.max()) + 2

@@ -19,11 +19,8 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from tesseract_wasm_spark.engine.page import PageResult, WordBox
+from tesseract_wasm_spark.engine.page import END_OF_LINE, START_OF_LINE, PageResult, WordBox
 from tesseract_wasm_spark.font import BASELINE_ROW, XHEIGHT_TOP
-
-START_OF_LINE = 1
-END_OF_LINE = 2
 
 
 def words_df(results: DataFrame) -> DataFrame:

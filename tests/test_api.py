@@ -217,6 +217,60 @@ def test_orientation_memo_invalidation(engine, orientation_calls):
         engine.getOrientation()
 
 
+@pytest.fixture()
+def binarize_calls(monkeypatch):
+    """Counts layout passes (the layout stage looks binarize up in page.py)."""
+    from tesseract_wasm_spark.engine import page  # noqa: PLC0415
+
+    calls = []
+    real = page.binarize
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(page, "binarize", spy)
+    return calls
+
+
+def test_one_layout_pass_per_loaded_image(engine, binarize_calls, orientation_calls):
+    """Layout runs once per loaded image, whatever the queries; loadImage and
+    clearImage drop every memo, loadModel and setVariable only recognition
+    (its progress runs [0, 50, 100] again)."""
+    engine.loadImage(render_page(SMALL_PAGE_LINES))
+    engine.getBoundingBoxes("word")
+    engine.getOrientation()
+    engine.loadModel(MODEL)
+    seen: list[int] = []
+    assert engine.getText(seen.append) == expected_text(SMALL_PAGE_LINES)
+    engine.getHOCR(seen.append)
+    assert seen == [0, 50, 100, 100]
+    engine.setVariable("tessedit_char_whitelist", "abcdefghijklmnopqrstuvwxyz ")
+    seen.clear()
+    assert engine.getText(seen.append) != expected_text(SMALL_PAGE_LINES)
+    engine.loadModel(MODEL)
+    engine.getTextBoxes("word", seen.append)
+    engine.getBoundingBoxes("line")
+    assert seen == [0, 50, 100, 0, 50, 100]
+    assert engine.getOrientation() == {"rotation": 0, "confidence": 1.0}
+    assert len(binarize_calls) == 1 and len(orientation_calls) == 1
+
+    engine.loadImage(render_page(SMALL_PAGE_LINES, rot=90))
+    assert engine.getOrientation() == {"rotation": 90, "confidence": 1.0}
+    engine.getText()
+    assert len(binarize_calls) == 2 and len(orientation_calls) == 2
+    engine.clearImage()
+    with pytest.raises(ValueError, match="No image loaded"):
+        engine.getBoundingBoxes("word")
+    engine.loadImage(render_page(SMALL_PAGE_LINES))
+    engine.getBoundingBoxes("word")
+    engine.getOrientation()
+    seen.clear()
+    engine.getText(seen.append)
+    assert seen == [0, 50, 100]
+    assert len(binarize_calls) == 3 and len(orientation_calls) == 3
+
+
 def test_bounding_boxes_line_unit(loaded):
     lines = loaded.getBoundingBoxes("line")
     assert len(lines) == len(SMALL_PAGE_LINES)

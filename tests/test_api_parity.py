@@ -1,12 +1,14 @@
 """OCREngine against the Spark tables, url by url: every answer of the
 sequential API equals the Spark rows of the same page, floats included.
 
-One page result feeds both sides (engine.page.process_rgba); what is built
+One page core feeds both sides (the stages of engine.page); what is built
 from it is defined once in outputs.py, with a DataFrame builder and a
 Python twin per rule. This test holds the twins equal on every page of the
 fixture, degraded and seeded corpora, under the engine settings a caller
 can change: the whitelist and interword-space variables and the lstm
-recognizer with a loaded weight blob (clean and tampered)."""
+recognizer with a loaded weight blob (clean and tampered). The engine
+keeps one layout per image, so the same answers must come in any query
+order and after a variable is set and reset."""
 
 from __future__ import annotations
 
@@ -28,9 +30,10 @@ from tesseract_wasm_spark.pipeline import ocr_pages
 from tesseract_wasm_spark.raster import render_page_drf
 from test_lstm_ctc import _blob_without
 
+WHITELIST = {"tessedit_char_whitelist": "abcdefghijklmnopqrstuvwxyz "}
 #: engine settings beyond the defaults: (recognizer, variables, blob kind)
 SETTINGS = {
-    "whitelist": ("template", {"tessedit_char_whitelist": "abcdefghijklmnopqrstuvwxyz "}, None),
+    "whitelist": ("template", WHITELIST, None),
     "spaces": ("template", {"preserve_interword_spaces": "1"}, None),
     "lstm": ("lstm", {}, "clean"),
     "lstm-tampered": ("lstm", {}, "no-e"),
@@ -88,7 +91,9 @@ def spark_side(spark):
         return results.withColumn("url", F.concat(F.lit(setting + " "), "url"))
 
     runs = [tagged("base", ocr_pages(pages)),
-            tagged("layout", ocr_pages(pages, with_text=False, with_orientation=False))]
+            tagged("layout", ocr_pages(pages, with_text=False, with_orientation=False)),
+            tagged("whitelist-all", ocr_pages(pages, variables=WHITELIST,
+                                              with_orientation=False))]
     some = pages.filter(F.col("url").isin(*SETTING_PAGES))
     for name, (recognizer, variables, blob) in SETTINGS.items():
         runs.append(tagged(name, ocr_pages(
@@ -132,7 +137,9 @@ def spark_side(spark):
 
 
 def _engine_answers(payload: bytes, lang: str, setting: str) -> dict:
-    """The OCREngine calls that mirror one Spark row of ``setting``."""
+    """The OCREngine calls that mirror one Spark row of ``setting``;
+    "reversed" asks the base row's questions in the other order, then sets
+    the whitelist and resets it."""
     eng = createOCREngine()
     try:
         eng.loadImage(payload)
@@ -142,6 +149,8 @@ def _engine_answers(payload: bytes, lang: str, setting: str) -> dict:
     if setting == "base":
         out["boxes_before"] = eng.getBoundingBoxes("word")
         out["orientation"] = eng.getOrientation()
+        eng.loadModel(export_model(lang))
+    elif setting == "reversed":
         eng.loadModel(export_model(lang))
     else:
         _, variables, blob = SETTINGS[setting]
@@ -153,6 +162,14 @@ def _engine_answers(payload: bytes, lang: str, setting: str) -> dict:
     out["lines"] = eng.getTextBoxes("line")
     out["hocr"] = [eng.getHOCR()]
     out["boxes"] = eng.getBoundingBoxes("word")
+    if setting == "reversed":
+        out["orientation"] = eng.getOrientation()
+        (name, value), = WHITELIST.items()
+        eng.setVariable(name, value)
+        out["whitelisted"] = eng.getText()
+        eng.setVariable(name, "")
+        out["text_again"] = eng.getText()
+        out["words_again"] = eng.getTextBoxes("word")
     return out
 
 
@@ -160,11 +177,11 @@ EMPTY_PAGE_LINE = {"rect": {"left": 0, "top": 0, "right": 0, "bottom": 0},
                    "flags": 0, "confidence": 0.0, "text": "", "line_id": 0}
 
 
-@pytest.mark.parametrize("setting", ["base", *SETTINGS])
+@pytest.mark.parametrize("setting", ["base", "reversed", *SETTINGS])
 def test_engine_answers_equal_spark_rows(spark_side, setting):
     payloads, side = spark_side
-    rows = side[setting]
-    if setting == "base":
+    rows = side["base" if setting == "reversed" else setting]
+    if setting in ("base", "reversed"):
         assert len(rows) == len(payloads)
         assert sum(r["error"] is None for r in rows.values()) >= 78
     else:
@@ -181,6 +198,9 @@ def test_engine_answers_equal_spark_rows(spark_side, setting):
                 assert want["lines"] == []
                 want["lines"] = [EMPTY_PAGE_LINE]
             assert len(want["hocr"]) == 1
+            if setting == "reversed":
+                want["whitelisted"] = side["whitelist-all"][url]["text"]
+                want["text_again"], want["words_again"] = want["text"], want["words"]
         else:  # an error row adds nothing to the derived tables
             assert want["words"] == want["lines"] == want["boxes"] == want["hocr"] == []
         got = _engine_answers(*payloads[url], setting)

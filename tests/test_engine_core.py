@@ -178,3 +178,54 @@ def test_orientation_metamorphic_large_page(rot):
     res = process_rgba(render_page(lines, rot=rot), with_text=False)
     assert res.rotation == rot
     assert res.orient_confidence == 1.0
+
+
+@pytest.mark.parametrize("recognizer", ["template", "lstm"])
+def test_recognition_leaves_the_layout_as_it_was(recognizer):
+    """Recognition re-anchors all-descender lines and re-splits degraded
+    words into copies, never into the layout's own lines, so a layout
+    recognized twice reads the same both times and as process_rgba reads."""
+    import copy  # noqa: PLC0415
+
+    from tesseract_wasm_spark import drf  # noqa: PLC0415
+    from tesseract_wasm_spark.engine.page import layout_stage, recognition_stage  # noqa: PLC0415
+    from tesseract_wasm_spark.fixtures import degraded_rows  # noqa: PLC0415
+
+    pages = [render_page(["gjq pygj jjj", "normal line here"])]
+    for row in degraded_rows(20):
+        try:
+            pages.append(drf.decode(row["html"]))
+        except ValueError:  # the corpus's malformed payloads
+            pass
+    rewritten = 0
+    for rgba in pages:
+        layout = layout_stage(rgba)
+        before = copy.deepcopy(layout.lines)
+        first = recognition_stage(layout, layout.result, recognizer=recognizer)
+        assert layout.lines == before
+        assert recognition_stage(layout, layout.result, recognizer=recognizer) == first
+        assert process_rgba(rgba, with_orientation=False, recognizer=recognizer) == first
+        rewritten += any(w.baseline != layout.lines[w.line_id].baseline for w in first.words) or (
+            [(w.left, w.top, w.right, w.bottom) for w in first.words]
+            != [box[:4] for box in layout.result.layout_boxes])
+    # the descender line for both; the degraded tier (template only) on most pages
+    assert rewritten > (len(pages) // 2 if recognizer == "template" else 0)
+
+
+def test_perfbench_times_every_engine_stage():
+    """perfbench's engine trace patches the stage functions where page.py
+    looks them up: every stage shows time, and a clean page, a sheared
+    two-column page and a 60-line page make 1, 2 and 1 labeling passes."""
+    from perfbench.layers import UNITS, engine_stages  # noqa: PLC0415
+
+    from tesseract_wasm_spark.fixtures import TWO_COL_LINES  # noqa: PLC0415
+    from tesseract_wasm_spark.raster import render_columns_drf  # noqa: PLC0415
+
+    metrics = engine_stages([
+        render_page_drf(SMALL_PAGE_LINES),
+        render_columns_drf(TWO_COL_LINES, skew_per_mille=21),
+        render_page_drf((SMALL_PAGE_LINES * 6)[:60]),
+    ])
+    ms = {k: v for k, v in metrics.items() if k.startswith("engine.") and UNITS[k] == "ms"}
+    assert len(ms) == 8 and all(v > 0 for v in ms.values()), ms
+    assert metrics["engine.components.calls_per_page"] == 4 / 3

@@ -7,28 +7,15 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from tesseract_wasm_spark.engine.components import label_components
-from tesseract_wasm_spark.engine.lstm_ctc import (
-    build_recognizer,
-    ctc_best_path,
-    recognize_page_lstm,
-)
-from tesseract_wasm_spark.engine.otsu import binarize
+from tesseract_wasm_spark.engine.lstm_ctc import build_recognizer, ctc_best_path
 from tesseract_wasm_spark.engine.page import process_rgba
-from tesseract_wasm_spark.engine.segment import segment
 from tesseract_wasm_spark.fixtures import SMALL_PAGE_LINES, _seeded_lines, expected_text
 from tesseract_wasm_spark.raster import render_page
 
 
-def _lines_for(img):
-    mask = binarize(img)
-    return mask, segment(label_components(mask))
-
-
 def test_lstm_best_path_byte_identical():
     img = render_page(SMALL_PAGE_LINES)
-    mask, lines = _lines_for(img)
-    assert recognize_page_lstm(mask, lines) == expected_text(SMALL_PAGE_LINES)
+    assert process_rgba(img, recognizer="lstm").page_text == expected_text(SMALL_PAGE_LINES)
 
 
 def test_lstm_agrees_with_template_matcher_on_corpus():
@@ -36,8 +23,7 @@ def test_lstm_agrees_with_template_matcher_on_corpus():
     for _ in range(4):
         lines_txt = _seeded_lines(rng, int(rng.integers(3, 9)))
         img = render_page(lines_txt)
-        mask, lines = _lines_for(img)
-        via_lstm = recognize_page_lstm(mask, lines)
+        via_lstm = process_rgba(img, recognizer="lstm").page_text
         via_templates = process_rgba(img).page_text
         assert via_lstm == via_templates == expected_text(lines_txt)
 
@@ -48,8 +34,7 @@ def test_lstm_all_descender_baseline_retry():
     path (recognize.py:181-201) and both stay byte-identical."""
     lines_txt = ["gjq pygj jjj", "normal line here"]
     img = render_page(lines_txt)
-    mask, lines = _lines_for(img)
-    assert recognize_page_lstm(mask, lines) == expected_text(lines_txt)
+    assert process_rgba(img, recognizer="lstm").page_text == expected_text(lines_txt)
     # parity with the template path on the same page
     assert process_rgba(img).page_text == expected_text(lines_txt)
 
